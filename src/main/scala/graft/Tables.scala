@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table registry over the driver's parquet test tables (TESTDATA.md).
   *
@@ -13,6 +17,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sites work unchanged — Spark splits files into `maxPartitionBytes`
   * tasks, and partition-pruned layouts (see [[graft.sources.TickerStore]])
   * skip irrelevant directories entirely.
+  *
+  * Contract: a table's files do not change while a session reads them.
+  * Each table's parquet schema is inferred (one Spark job) once per
+  * session and then reused, so a load runs no job. A table rewritten in
+  * place still reads correctly, because the memo is keyed by the files'
+  * modification times and lengths, but tables that change during a
+  * session belong in [[graft.sources.TxTable]].
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -27,8 +38,51 @@ object Tables {
     // computation is generation-independent. nanosAsLong makes Spark 4
     // read the NANOS form as a raw long instead of refusing the file.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(schemaOf(spark, path)).parquet(path)
     if (name == "events") normalizeEventTs(df) else df
+  }
+
+  /** Files of a table: (path, modification time, length) of the path
+    * and, for a directory, of every data file under it.
+    */
+  private type Signature = Seq[(String, Long, Long)]
+
+  /** Per session: path → (signature, schema) of the last inference. */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, (Signature, StructType)]]())
+
+  /** The parquet schema of `path`, inferred once per session and file
+    * signature; every call lists the files, none runs a Spark job once
+    * the signature is known.
+    */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+    val memo = schemas.computeIfAbsent(spark,
+      _ => new ConcurrentHashMap[String, (Signature, StructType)]())
+    val sig = signature(spark, path)
+    memo.get(path) match {
+      case (s, schema) if s == sig => schema
+      case _ =>
+        val schema = spark.read.parquet(path).schema
+        memo.put(path, (sig, schema))
+        schema
+    }
+  }
+
+  /** The schema memoized for `path` in this session, if any. */
+  private[graft] def memoized(spark: SparkSession, path: String): Option[StructType] =
+    Option(schemas.get(spark)).flatMap(m => Option(m.get(path))).map(_._2)
+
+  private def signature(spark: SparkSession, path: String): Signature = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def walk(st: FileStatus): Signature =
+      (st.getPath.toString, st.getModificationTime, st.getLen) +: (
+        if (!st.isDirectory) Nil
+        else fs.listStatus(st.getPath).toSeq
+          .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+          .sortBy(_.getPath.getName).flatMap(walk))
+    walk(fs.getFileStatus(p))
   }
 
   /** Normalize `ts` to session-TZ TimestampType whatever the parquet

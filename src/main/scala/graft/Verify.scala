@@ -1,8 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/oracle_check.py`).
+  *
+  * A gate that throws does not stop the dump: the remaining gates still
+  * run, the failures are listed as `{gate: message}` in
+  * `<outDir>/errors.json` (always written, `{}` when every gate ran), and
+  * the process exits 1.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -27,12 +33,30 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val errors = dump(spark, sfDir, outDir,
+      SparkEntry.queries.toSeq.filter(kv => selected(kv._1)),
+      SparkEntry.oracleSql.filter(kv => selected(kv._1)))
+    spark.stop()
+    if (errors.nonEmpty) {
+      System.err.println(s"[verify] ${errors.size} gate(s) failed: ${errors.keys.mkString(",")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Writes each gate's output, `oracle_sql.json` and `errors.json` under
+    * `outDir`; returns the failed gates with their messages.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           gates: Seq[(String, (SparkSession, String) => DataFrame)],
+           oracleSql: Map[String, String]): Map[String, String] = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    gates.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        errors(name) = s"${e.getClass.getName}: ${e.getMessage}"
+        System.err.println(s"[verify] FAILED $name: ${errors(name)}")
       }
       // Operators cache() intermediates internally; dropping them here
       // keeps one long verify session from accumulating cached blocks.
@@ -44,21 +68,23 @@ object Verify {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       graft.operators.Ranks.releaseAll() // drain the Ranks registry too
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    def json(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json(oracleSql))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), json(errors))
+    errors.toMap
   }
+
+  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+  // — a tab or CR in an oracle SQL string would otherwise make json.load
+  // of the manifest fail and silently skip every comparison.
+  private def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

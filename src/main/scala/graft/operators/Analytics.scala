@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.Tables
+import graft.functions.FixedPoint
 
 /** The reference's entire analytical surface (SURVEY §2.3 A1–A7),
   * generalized from whole-table scalars to keyed, distributed form.
@@ -34,10 +34,12 @@ object Analytics {
 
   /** Order-invariant sum of a double column: exact decimal accumulation,
     * one deterministic rounding per input row at `scale`, final cast back
-    * to double. Matches `CAST(sum(CAST(x AS DECIMAL(p,s))) AS DOUBLE)`.
+    * to double. Bit-identical to `CAST(sum(CAST(x AS DECIMAL(p,s))) AS
+    * DOUBLE)`, computed by the fixed-point kernel
+    * [[graft.functions.FixedPointSum]].
     */
   def exactSum(c: Column, precision: Int = 30, scale: Int = 4): Column =
-    sum(c.cast(DecimalType(precision, scale))).cast(DoubleType)
+    FixedPoint.exactSum(c, precision, scale)
 
   /** Order-invariant mean: exact decimal sum, double division by count. */
   def exactAvg(c: Column, precision: Int = 30, scale: Int = 4): Column =

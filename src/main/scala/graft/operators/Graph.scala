@@ -1031,9 +1031,12 @@ object Graph {
           Seq("v"), "left_semi")
         .select(col("u"), col("v"))
         .localCheckpoint(false) // materialized by this round's counter job
-      byV.unpersist()
+      // The counter job evaluates keep's semi-join builds from the
+      // previous degree frame, so that cache is released only after it.
+      val prev = byV
       byV = degrees(next)
       val (nNodes, nEdges, nBelow) = counters(byV) // materializes byV too
+      prev.unpersist()
       below = nBelow
       stats += ((r, nNodes, nEdges))
       edges = next

@@ -582,8 +582,7 @@ object Relational {
                         bigOrder: Double = 300000.0): DataFrame = {
     val c = Tables.customer(spark, dir)
     val ab = c.filter(col("c_acctbal") > 0.0)
-      .agg((sum(col("c_acctbal").cast("decimal(30,2)")).cast("double")
-        / count(lit(1))).as("ab"))
+      .agg(exactAvg(col("c_acctbal"), 30, 2).as("ab"))
     val bigOrders = Tables.orders(spark, dir)
       .filter(col("o_totalprice") > bigOrder)
       .select(col("o_custkey"))
@@ -592,8 +591,7 @@ object Relational {
       .join(bigOrders, col("c_custkey") === col("o_custkey"), "left_anti")
       .groupBy(col("c_nationkey").cast("int").as("cntry"))
       .agg(count(lit(1)).as("numcust"),
-        sum(col("c_acctbal").cast("decimal(30,2)")).cast("double")
-          .as("totacctbal"))
+        exactSum(col("c_acctbal"), 30, 2).as("totacctbal"))
       .orderBy(col("cntry"))
   }
 

@@ -196,8 +196,15 @@ class TxTable(val root: String) {
     // merge is a driver-side metadata read (no job), value-identical
     // (parquet INT64 stats are exact, all-null/empty batches surface
     // as hasNonNullValue=false on every file → no zone, as before).
-    val stage = stageData(df)
-    val stats = footerLongZones(df.sparkSession, stage, Seq(statsCol))
+    appendStaged(df.sparkSession, stageData(df), statsCol)
+  }
+
+  /** Publishes a dir of parquet files already under this table's data
+    * dir as an append, with a zone on `statsCol` from their footers.
+    */
+  private[graft] def appendStaged(spark: SparkSession, stage: String,
+                                  statsCol: String): Long = {
+    val stats = footerLongZones(spark, stage, Seq(statsCol))
       .get(statsCol).map { case (mn, mx) => (statsCol, mn, mx) }
     var attempt = latestVersion().getOrElse(0L) + 1
     while (!tryPublish(attempt, "append", Seq(stage), stats)) {
@@ -1373,39 +1380,43 @@ class TxTable(val root: String) {
     * batch returns (INT64 statistics are exact, never truncated), at
     * zero Spark jobs. Columns absent, non-INT64, or with no non-null
     * value in any file are OMITTED from the result (→ no zone, the
-    * pre-round-15 behavior for empty/all-null batches).
+    * pre-round-15 behavior for empty/all-null batches). So is a column
+    * with a chunk, in a non-empty row group, whose statistics carry no
+    * min/max and do not show it all-null (statistics disabled, or a
+    * foreign writer): a zone without that chunk could under-cover.
     */
   private def footerLongZones(spark: SparkSession, stage: String,
                               cols: Seq[String]): Map[String, (Long, Long)] = {
     import scala.jdk.CollectionConverters._
     val want = cols.toSet
     val acc = scala.collection.mutable.Map.empty[String, (Long, Long)]
-    var nonLong = Set.empty[String]
+    var unbounded = Set.empty[String]
     stageFooters(spark, stage).foreach { md =>
       md.getBlocks.asScala.foreach { b =>
         b.getColumns.asScala.foreach { c =>
           val name = c.getPath.toDotString
           if (want.contains(name)) {
+            val st: org.apache.parquet.column.statistics.Statistics[_] = c.getStatistics
             if (c.getPrimitiveType.getPrimitiveTypeName !=
                 org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64)
-              nonLong += name
-            else {
-              val st = c.getStatistics
-              if (st != null && !st.isEmpty && st.hasNonNullValue) {
-                val mn = st.genericGetMin.asInstanceOf[java.lang.Long].longValue()
-                val mx = st.genericGetMax.asInstanceOf[java.lang.Long].longValue()
-                acc.get(name) match {
-                  case Some((a, z)) =>
-                    acc(name) = (math.min(a, mn), math.max(z, mx))
-                  case None => acc(name) = (mn, mx)
-                }
+              unbounded += name
+            else if (st == null || !st.hasNonNullValue) {
+              val allNull = st != null && st.isNumNullsSet && st.getNumNulls == c.getValueCount
+              if (b.getRowCount > 0 && !allNull) unbounded += name
+            } else {
+              val mn = st.genericGetMin.asInstanceOf[java.lang.Long].longValue()
+              val mx = st.genericGetMax.asInstanceOf[java.lang.Long].longValue()
+              acc.get(name) match {
+                case Some((a, z)) =>
+                  acc(name) = (math.min(a, mn), math.max(z, mx))
+                case None => acc(name) = (mn, mx)
               }
             }
           }
         }
       }
     }
-    (acc -- nonLong).toMap
+    acc.toMap -- unbounded
   }
 
   /** Stage the batch invisibly, then publish with create-exclusive

@@ -7,6 +7,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 private[streaming] object GateIO {
 
+  /** Files in a range-ordered corpus stage: [[stageFiles]]' default
+    * `rangeParts`, and the `maxFilesPerTrigger` of a stream that must
+    * consume one whole corpus stage in a single trigger.
+    */
+  val CorpusFiles: Int = 4
+
   /** Stage one simulated arrival (micro-batch group `n`) into
     * `upstream` at NATURAL write parallelism — every part file is
     * moved, named `nnnn_iiii.parquet` and mtime-pinned so a
@@ -26,7 +32,7 @@ private[streaming] object GateIO {
     */
   def stageFiles(df: DataFrame, scratch: String, upstream: java.io.File,
                  n: Int, orderBy: Option[Column] = None,
-                 rangeParts: Int = 4): Unit = {
+                 rangeParts: Int = CorpusFiles): Unit = {
     val part = s"$scratch/stage$n"
     orderBy.fold(df)(c => df.repartitionByRange(rangeParts, c))
       .write.parquet(part)

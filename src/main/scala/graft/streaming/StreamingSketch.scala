@@ -49,7 +49,7 @@ object StreamingSketch {
     val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     GateIO.runPinned(spark, 4)(spark.readStream
       .schema("ts TIMESTAMP, user_id BIGINT")
-      // One trigger consumes the whole 4-file corpus stage; the
+      // One trigger consumes the whole corpus stage (CorpusFiles files); the
       // sentinel (strictly newer mtime) forms the second and last
       // batch (round 15, ~0.4 s of per-batch planning + state-store
       // commit per micro-batch removed). Batch boundaries are NOT
@@ -64,7 +64,7 @@ object StreamingSketch {
       // the read-back groupBy collapses. Contrast st4/st16/st18,
       // where late-vs-watermark arrival ORDER is the scenario and
       // stays per-file.
-      .option("maxFilesPerTrigger", "4")
+      .option("maxFilesPerTrigger", GateIO.CorpusFiles.toLong)
       .parquet(upstream.toString)
       .withWatermark("ts", "1 hour")
       .select(col("ts"),
