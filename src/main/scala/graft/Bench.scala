@@ -158,24 +158,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Enabled session-wide (not per-operator): the DSv2 gates
-      // (k13/k14) need it at EXECUTION time, and a per-operator
-      // conf.set on the shared session would leak into whichever gate
-      // runs next — all gates see one deterministic config instead.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // rcte1's recursion touches each order once ACROSS rounds, so the
-      // cumulative-row safety valve scales with the table and tripped at
-      // the 10x rehearsal (default 1M rows). The LEVEL limit (default
-      // 100) stays: rounds = longest per-customer chain (~41), which is
-      // the bound that actually protects against runaway recursion.
-      .config("spark.sql.cteRecursionRowLimit", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession.build(cpus)
     // Warm the session (codegen compiler, shuffle machinery, parquet
     // footer cache) so per-query numbers measure queries, not JVM init.
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -186,18 +170,7 @@ object Bench {
     val calibPre = calibrate()
 
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Double] = {
-      spark.catalog.clearCache()
-      // clearCache() drops CATALOG-tracked cached plans only; the BSP
-      // operators (dd6/dd15/kc1/bfs1/tc1, rcte1) cut lineage with
-      // localCheckpoint(), whose blocks live in the BlockManager as
-      // persistent RDDs and are never freed by the catalog. Across 241
-      // queries × 4 runs in one 8 g JVM those blocks accumulate and GC
-      // pressure turns into the bimodal multi-second stalls seen in the
-      // round-6 driver record (st6 0.7 s min vs 9.5 s median). Unpersist
-      // them between runs — every query builds its plan from scratch, so
-      // nothing still references the old blocks.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      graft.operators.Ranks.releaseAll() // drain the Ranks registry too
+      GraftSession.reset(spark)
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -214,13 +187,8 @@ object Bench {
     // driver never sets it and always measures the full surface).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val reference = loadReference(sfDir)
-    // The round-13 xdg_/xat_/xbt_/xds_/xgb_ diagnostics are correctness
-    // probes, not perf surface — excluded so the suite total stays
-    // comparable to the committed 383-gate reference (SPARK_GRAFT_ONLY
-    // can still name one explicitly for local iteration).
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(kv => only.map(_.contains(kv._1))
-        .getOrElse(!graft.operators.Diagnostics.isDiagnostic(kv._1)))
+      .filter(kv => only.forall(_.contains(kv._1)))
       .map { case (name, fn) =>
       // A rep whose BEST time is still RefBar× the clean-box reference
       // (and above an absolute floor, so sub-second gates don't flap)

@@ -8,12 +8,10 @@ import graft.functions.{AhoCorasickCountExpr, AhoCorasickDistinctExpr, CdcBounds
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * expressions in the SQL function registry so `spark.sql` users get
-  * them too:
+  * them too, once the session builder is given
+  * `.withExtensions(new GraftExtensions)`:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)
-  *   ...
   * spark.sql("SELECT poly_fingerprint(text), dot_product(a, b) FROM t")
   * }}}
   *

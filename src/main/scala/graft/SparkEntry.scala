@@ -92,15 +92,16 @@ object SparkEntry {
     "xl1_margin_mining" -> ((s, d) => Similarity.marginMining(s, d)),
     "xl2_margin_mining_ann" -> ((s, d) => Similarity.marginMiningAnn(s, d)),
     // ---- in-engine model fitting (north star) ----
-    // Round-13 restatement (r12 verdict item #2): after two driver
-    // records hash-red on the fitted iterates (builder-local green on
-    // pinned DuckDB 1.0.0 both times), the GATED outputs are now the
-    // engine-invariant sufficient-statistics frames; the fitted models
-    // stay spec-replayed (LearnSpec/AttributionSpec) and the xbt_/xds_/
-    // xgb_/xat_ diagnostics bisect the driver-side divergence.
+    // Each model is gated twice: its engine-invariant sufficient-
+    // statistics frame, and the fitted model itself (`*_fit`; oracle
+    // outputs BIGINT-cast — SURVEY §13 names the uncast-HUGEINT output
+    // boundary that made the round-11/12 fitted gates hash-red).
     "bt1_bradley_terry"   -> ((s, d) => graft.operators.Learn.duelCounts(s, d)),
     "gb1_adaboost_stumps" -> ((s, d) => graft.operators.Learn.adaboostStumpTrace(s, d)),
     "dsk1_dawid_skene"    -> ((s, d) => graft.operators.Learn.votePatternCounts(s, d)),
+    "bt1_bradley_terry_fit" -> ((s, d) => graft.operators.Learn.bradleyTerry(s, d)),
+    "gb1_adaboost_fit"      -> ((s, d) => graft.operators.Learn.adaboostStumps(s, d)),
+    "dsk1_dawid_skene_fit"  -> ((s, d) => graft.operators.Learn.dawidSkene(s, d)),
     // ---- multimodal / approx (north star) ----
     "m1_asset_metadata"        -> ((s, d) => Multimodal.assetMetadata(s, d)),
     "x1_approx_distinct_users" -> ((s, d) => Relational.approxDistinctUsers(s, d)),
@@ -220,8 +221,10 @@ object SparkEntry {
     "boot1_subsample_ci"   -> ((s, d) => graft.operators.Stats.subsampleCi(s, d)),
     "yw1_yule_walker"      -> ((s, d) => graft.operators.Stats.yuleWalkerGate(s, d)),
     "att3_position_touch"  -> ((s, d) => graft.operators.Behavior.positionAttribution(s, d)),
-    // Round-13 restatement — see the model-fitting block note above.
+    // Cohort lattice + fitted Shapley values — see the model-fitting
+    // block note above.
     "att4_shapley"         -> ((s, d) => graft.operators.Behavior.exposureCohorts(s, d)),
+    "att4_shapley_fit"     -> ((s, d) => graft.operators.Behavior.shapleyAttribution(s, d)),
     "c9_curation_v5"       -> ((s, d) => TextAnalysis.curationV5(s, d)),
     "st19_stream_sprt"     -> ((s, d) => graft.streaming.StreamSprt.sprtStreamGate(s, d)),
     "hc1_harmonic_centrality" -> ((s, d) => graft.operators.Graph.harmonicCentrality(s, d)),
@@ -474,34 +477,6 @@ object SparkEntry {
     "ov1_max_concurrency" -> ((s, d) => Relational.maxConcurrency(s, d)),
     "att2_markov_attribution" -> ((s, d) => graft.operators.Behavior.markovAttribution(s, d)),
     "ari1_cluster_agreement" -> ((s, d) => graft.operators.Quality.adjustedRandIndex(s, d)),
-  ) ++ graft.operators.Diagnostics.probes ++ Map[String, (SparkSession, String) => DataFrame](
-    // ---- TEMPORARY round-13 stage-prefix diagnostics (r12 verdict
-    // item #1; interpretation matrix in SURVEY §13; removed once
-    // CORRECTNESS_r13 has named the driver-side diverging construct).
-    // Excluded from Bench (Diagnostics.isDiagnostic).
-    // att4 chain: cohorts via the OLD epoch_ns µs oracle → +rhu → full φ.
-    "xat_a_cohorts_us" -> ((s, d) => graft.operators.Behavior.exposureCohorts(s, d)),
-    "xat_b_vq"         -> ((s, d) => graft.operators.Behavior.exposureVq(s, d)),
-    "xat_c_full"       -> ((s, d) => graft.operators.Behavior.shapleyAttribution(s, d)),
-    // bt1 chain: q0 init → MM iteration 1 → 2 → full 5.
-    "xbt_a_q0"   -> ((s, d) => graft.operators.Learn.bradleyTerry(s, d, iterations = 0)),
-    "xbt_b_q1"   -> ((s, d) => graft.operators.Learn.bradleyTerry(s, d, iterations = 1)),
-    "xbt_c_q2"   -> ((s, d) => graft.operators.Learn.bradleyTerry(s, d, iterations = 2)),
-    "xbt_d_full" -> ((s, d) => graft.operators.Learn.bradleyTerry(s, d)),
-    // dsk1 chain: EM iteration 1 → 2 → full 3.
-    "xds_b_th1"  -> ((s, d) => graft.operators.Learn.dawidSkene(s, d, iterations = 1)),
-    "xds_c_th2"  -> ((s, d) => graft.operators.Learn.dawidSkene(s, d, iterations = 2)),
-    "xds_d_full" -> ((s, d) => graft.operators.Learn.dawidSkene(s, d)),
-    // gb1 chain: raw grid → 1-round fit → weights after round 1 →
-    // 2-round fit → full 3-round fit (the pre-r13 gb1 chain with
-    // BIGINT-cast outputs and the ε-floor reordering — the arithmetic
-    // trajectory, not the old gate byte-for-byte; xdg_hug_* carries
-    // the output-type hypothesis).
-    "xgb_a_grid" -> ((s, d) => graft.operators.Learn.adaboostGrid(s, d)),
-    "xgb_b_t1"   -> ((s, d) => graft.operators.Learn.adaboostStumps(s, d, roundsT = 1)),
-    "xgb_c_w1"   -> ((s, d) => graft.operators.Learn.adaboostWeightsAfter(s, d, rounds = 1)),
-    "xgb_d_t2"   -> ((s, d) => graft.operators.Learn.adaboostStumps(s, d, roundsT = 2)),
-    "xgb_e_full" -> ((s, d) => graft.operators.Learn.adaboostStumps(s, d)),
   )
 
   // ---- oracle SQL fragments shared across queries (kept in one place
@@ -592,29 +567,6 @@ object SparkEntry {
   private def foldCosine(a: String, b: String): String =
     s"${foldDot(a, b)} / (sqrt(${foldSum(s"list_transform($a, x -> x*x)")}) * " +
       s"sqrt(${foldSum(s"list_transform($b, x -> x*x)")}))"
-
-  /** The direct-timestamp exposure-cohort chain shared VERBATIM by
-    * the restated att4 oracle and the xat_b_vq diagnostic (r13
-    * bisection contract — the diagnostic must be exactly the gate's
-    * chain plus one rhu step, so the text exists once).
-    */
-  private val att4CohortCtesSql: String =
-    """WITH pts AS (SELECT user_id,
-      |    min(CASE WHEN event_type = 'purchase' THEN ts END) AS pts
-      |  FROM events GROUP BY 1),
-      |um AS (SELECT e.user_id,
-      |    max(CASE WHEN e.event_type = 'click'
-      |      AND (p.pts IS NULL OR e.ts < p.pts) THEN 1 ELSE 0 END)
-      |  + max(CASE WHEN e.event_type = 'error'
-      |      AND (p.pts IS NULL OR e.ts < p.pts) THEN 2 ELSE 0 END)
-      |  + max(CASE WHEN e.event_type = 'signup'
-      |      AND (p.pts IS NULL OR e.ts < p.pts) THEN 4 ELSE 0 END)
-      |  + max(CASE WHEN e.event_type = 'view'
-      |      AND (p.pts IS NULL OR e.ts < p.pts) THEN 8 ELSE 0 END) AS mask,
-      |    max(CASE WHEN e.event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-      |  FROM events e LEFT JOIN pts p USING (user_id) GROUP BY 1),
-      |cohorts AS (SELECT mask, count(*) AS u, sum(conv) AS c
-      |  FROM um GROUP BY 1)""".stripMargin
 
   /** The quantized-Lloyd IVF replay shared by ss3 and dd9: first-nl
     * seeding (c0) where nl = greatest(16, ceil(count/4096)) — the SAME
@@ -1560,16 +1512,16 @@ object SparkEntry {
     // accept decision at threshold 1.05. Integer μ arithmetic is the
     // point: a rounded mean of 6-dp values ties at .5e-6 ~25% of the
     // time, where the engines' rounding of doubles disagrees.
-    // Round-13 restatement (r12 verdict item #2): the three
-    // model-fitting gates hash their SUFFICIENT-STATISTICS frames —
-    // pure count aggregations with no iterated arithmetic, no HUGEINT,
-    // no division — after two driver records disagreed with the
-    // builder's pinned DuckDB 1.0.0 on the unrolled training-loop
-    // CTEs. The full unrolled-loop oracles remain exercised by the
-    // xbt_/xds_/xgb_ stage-prefix diagnostics below.
+    // The three model-fitting families: the SUFFICIENT-STATISTICS
+    // frames (pure count aggregations — no iterated arithmetic, no
+    // HUGEINT, no division), then the fitted models as the unrolled
+    // training loops with every output column BIGINT-cast.
     "bt1_bradley_terry" -> graft.operators.Learn.duelCountsSql,
     "gb1_adaboost_stumps" -> graft.operators.Learn.adaboostStumpTraceSql(),
     "dsk1_dawid_skene" -> graft.operators.Learn.votePatternCountsSql,
+    "bt1_bradley_terry_fit" -> graft.operators.Learn.bradleyTerrySql(),
+    "gb1_adaboost_fit"      -> graft.operators.Learn.adaboostStumpsSql(),
+    "dsk1_dawid_skene_fit"  -> graft.operators.Learn.dawidSkeneSql(),
     "xl1_margin_mining" ->
       s"""WITH e AS (SELECT vec_id,
          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -4018,30 +3970,42 @@ object SparkEntry {
         |  CAST(count(*) AS BIGINT) AS picked_docs,
         |  CAST(sum(n_words) AS BIGINT) AS sum_words
         |FROM picked GROUP BY 1 ORDER BY source""".stripMargin,
-    // att4 (round-13 restatement): the exposure-cohort lattice
-    // (mask, u, c) — a pure count aggregation with DIRECT timestamp
-    // comparison (no epoch_ns extraction, no rhu, no bit arithmetic);
-    // the fitted Shapley frame moved to diagnostic xat_c_full.
+    // att4: the exposure-cohort lattice (mask, u, c) — a pure count
+    // aggregation with DIRECT timestamp comparison (no epoch_ns
+    // extraction, no rhu, no bit arithmetic); the fitted Shapley frame
+    // is att4_shapley_fit.
     "att4_shapley" ->
-      (att4CohortCtesSql + "\n" +
-      """SELECT CAST(m.mask AS BIGINT) AS mask,
+      """WITH pts AS (SELECT user_id,
+        |    min(CASE WHEN event_type = 'purchase' THEN ts END) AS pts
+        |  FROM events GROUP BY 1),
+        |um AS (SELECT e.user_id,
+        |    max(CASE WHEN e.event_type = 'click'
+        |      AND (p.pts IS NULL OR e.ts < p.pts) THEN 1 ELSE 0 END)
+        |  + max(CASE WHEN e.event_type = 'error'
+        |      AND (p.pts IS NULL OR e.ts < p.pts) THEN 2 ELSE 0 END)
+        |  + max(CASE WHEN e.event_type = 'signup'
+        |      AND (p.pts IS NULL OR e.ts < p.pts) THEN 4 ELSE 0 END)
+        |  + max(CASE WHEN e.event_type = 'view'
+        |      AND (p.pts IS NULL OR e.ts < p.pts) THEN 8 ELSE 0 END) AS mask,
+        |    max(CASE WHEN e.event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
+        |  FROM events e LEFT JOIN pts p USING (user_id) GROUP BY 1),
+        |cohorts AS (SELECT mask, count(*) AS u, sum(conv) AS c
+        |  FROM um GROUP BY 1)
+        |SELECT CAST(m.mask AS BIGINT) AS mask,
         |  CAST(coalesce(ch.u, 0) AS BIGINT) AS u,
         |  CAST(coalesce(ch.c, 0) AS BIGINT) AS c
         |FROM (SELECT unnest(generate_series(0, 15)) AS mask) m
         |LEFT JOIN cohorts ch ON m.mask = ch.mask
-        |ORDER BY mask""".stripMargin),
-    // xat_c_full (TEMPORARY diagnostic — the pre-r13 att4 chain with
-    // BIGINT-CAST outputs; the type boundary is deliberately removed
-    // here and measured separately by the xdg_hug_* probes, so a green
-    // bit means "arithmetic chain sound", NOT "old gate as shipped was
-    // sound"): exact Shapley over the 2^4 exposure-set lattice —
+        |ORDER BY mask""".stripMargin,
+    // att4_shapley_fit: the fitted Shapley frame with BIGINT-CAST
+    // outputs — exact Shapley over the 2^4 exposure-set lattice —
     // cohort rates 1e9-quantized via PURE INTEGER round-half-up
     // (2·c·1e9 + u) // (2·u), never round()-on-double (the round-11
     // driver hash divergence); permutation weights {6,2,2,6}/24 as
     // exact integers; φ emitted as the integer numerator over 24e9.
     // Bit tests stated as //bit %2 arithmetic (portable across
     // engines); micros convention per the Behavior.scala header.
-    "xat_c_full" ->
+    "att4_shapley_fit" ->
       """WITH ev AS (SELECT user_id, event_type,
         |    epoch_ns(ts)//1000 AS us FROM events),
         |pts AS (SELECT user_id,
@@ -6674,65 +6638,5 @@ object SparkEntry {
         |      - CAST(sa.v AS DOUBLE) * CAST(sb.v AS DOUBLE)
         |      / (CAST(nn.n AS DOUBLE) * CAST(nn.n - 1 AS DOUBLE) / 2.0)), 6) AS ari
         |FROM nn, sc, sa, sb""".stripMargin,
-  ) ++ graft.operators.Diagnostics.probeSql ++ Map(
-    // ---- TEMPORARY round-13 stage-prefix diagnostic oracles (r12
-    // verdict item #1) — each adds one construct over its predecessor
-    // so CORRECTNESS_r13's pass/fail bits bisect the driver-side
-    // divergence; matrix in SURVEY §13.
-    // att4 prefixes: cohorts via the OLD epoch_ns µs extraction (the
-    // restated att4 gate uses direct ts comparison — if att4 passes
-    // and xat_a fails, epoch_ns//1000 is the construct), then + one
-    // rhu step (xat_b), then the full pre-r13 φ oracle (xat_c above).
-    "xat_a_cohorts_us" ->
-      """WITH ev AS (SELECT user_id, event_type,
-        |    epoch_ns(ts)//1000 AS us FROM events),
-        |pts AS (SELECT user_id,
-        |    min(CASE WHEN event_type = 'purchase' THEN us END) AS pus
-        |  FROM ev GROUP BY 1),
-        |um AS (SELECT e.user_id,
-        |    max(CASE WHEN e.event_type = 'click'
-        |      AND (p.pus IS NULL OR e.us < p.pus) THEN 1 ELSE 0 END)
-        |  + max(CASE WHEN e.event_type = 'error'
-        |      AND (p.pus IS NULL OR e.us < p.pus) THEN 2 ELSE 0 END)
-        |  + max(CASE WHEN e.event_type = 'signup'
-        |      AND (p.pus IS NULL OR e.us < p.pus) THEN 4 ELSE 0 END)
-        |  + max(CASE WHEN e.event_type = 'view'
-        |      AND (p.pus IS NULL OR e.us < p.pus) THEN 8 ELSE 0 END) AS mask,
-        |    max(CASE WHEN e.event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-        |  FROM ev e LEFT JOIN pts p USING (user_id) GROUP BY 1),
-        |cohorts AS (SELECT mask, count(*) AS u, sum(conv) AS c
-        |  FROM um GROUP BY 1)
-        |SELECT CAST(m.mask AS BIGINT) AS mask,
-        |  CAST(coalesce(ch.u, 0) AS BIGINT) AS u,
-        |  CAST(coalesce(ch.c, 0) AS BIGINT) AS c
-        |FROM (SELECT unnest(generate_series(0, 15)) AS mask) m
-        |LEFT JOIN cohorts ch ON m.mask = ch.mask
-        |ORDER BY mask""".stripMargin,
-    "xat_b_vq" ->
-      (att4CohortCtesSql + "\n" +
-      """SELECT CAST(m.mask AS BIGINT) AS mask,
-        |  CASE WHEN coalesce(ch.u, 0) > 0 THEN CAST(
-        |    (2 * CAST(ch.c AS HUGEINT) * 1000000000 + ch.u)
-        |      // (2 * ch.u) AS BIGINT)
-        |    ELSE 0 END AS vq
-        |FROM (SELECT unnest(generate_series(0, 15)) AS mask) m
-        |LEFT JOIN cohorts ch ON m.mask = ch.mask
-        |ORDER BY mask""".stripMargin),
-    // bt1 prefixes: the full unrolled-MM oracle at increasing depth.
-    "xbt_a_q0"   -> graft.operators.Learn.bradleyTerrySql(0),
-    "xbt_b_q1"   -> graft.operators.Learn.bradleyTerrySql(1),
-    "xbt_c_q2"   -> graft.operators.Learn.bradleyTerrySql(2),
-    "xbt_d_full" -> graft.operators.Learn.bradleyTerrySql(),
-    // dsk1 prefixes: the unrolled-EM oracle at increasing depth.
-    "xds_b_th1"  -> graft.operators.Learn.dawidSkeneSql(1),
-    "xds_c_th2"  -> graft.operators.Learn.dawidSkeneSql(2),
-    "xds_d_full" -> graft.operators.Learn.dawidSkeneSql(),
-    // gb1 prefixes: grid (no arithmetic) → 1-round fit → the weight
-    // frame after round 1 (the HUGEINT-heaviest construct) → deeper.
-    "xgb_a_grid" -> graft.operators.Learn.adaboostGridSql,
-    "xgb_b_t1"   -> graft.operators.Learn.adaboostStumpsSql(1),
-    "xgb_c_w1"   -> graft.operators.Learn.adaboostWeightsSql(1),
-    "xgb_d_t2"   -> graft.operators.Learn.adaboostStumpsSql(2),
-    "xgb_e_full" -> graft.operators.Learn.adaboostStumpsSql(),
   )
 }

@@ -13,26 +13,12 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional third arg: comma-separated query-name filter (local
-    // iteration aid; the driver always runs the full surface).
+    // iteration aid; without it every gate runs). The filtered
+    // oracle_sql.json is also how to read one gate's oracle SQL.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Session-wide for the same reason as Bench: DSv2 bucketing must
-      // be on when the k13/k14 plans EXECUTE, and per-operator sets on
-      // the shared session would make later gates order-dependent.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // Recursion's cumulative-row valve scales with the table (rcte1
-      // touches each order once across rounds) — the level limit is the
-      // real runaway guard; see Bench.scala.
-      .config("spark.sql.cteRecursionRowLimit", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val errors = dump(spark, sfDir, outDir,
       SparkEntry.queries.toSeq.filter(kv => selected(kv._1)),
       SparkEntry.oracleSql.filter(kv => selected(kv._1)))
@@ -58,15 +44,7 @@ object Verify {
         errors(name) = s"${e.getClass.getName}: ${e.getMessage}"
         System.err.println(s"[verify] FAILED $name: ${errors(name)}")
       }
-      // Operators cache() intermediates internally; dropping them here
-      // keeps one long verify session from accumulating cached blocks.
-      // localCheckpoint() blocks (BSP operators) live in the
-      // BlockManager, not the catalog — unpersist those too, or a
-      // 241-query session accumulates them until GC stalls (round-6
-      // driver bench bimodality).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      graft.operators.Ranks.releaseAll() // drain the Ranks registry too
+      GraftSession.reset(spark)
     }
     def json(m: Iterable[(String, String)]): String =
       m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

@@ -863,8 +863,8 @@ object Behavior {
     * (ts < first-purchase-ts) rather than through a µs extraction —
     * order-isomorphic to the old unix_micros form on the engine side,
     * and on the oracle side it removes the epoch_ns(ts)//1000
-    * construct entirely (one fewer engine-version surface; the xdg/
-    * xat diagnostics still probe the old form).
+    * construct entirely (one fewer engine-version surface; the
+    * att4_shapley_fit oracle keeps the old form).
     */
   private def cohortFrame(spark: SparkSession, dir: String): DataFrame = {
     val byUser = Window.partitionBy(col("user_id"))
@@ -902,8 +902,8 @@ object Behavior {
     * on the fitted φ frame while the builder's pinned DuckDB 1.0.0
     * agreed bit-for-bit, so the gate hashes what is engine-invariant;
     * the exact Shapley values stay covered by [[shapleyAttribution]]
-    * (brute 4!-permutation replay in AttributionSpec) and the xat_*
-    * stage-prefix diagnostics (SURVEY §13).
+    * (gate att4_shapley_fit, and a brute 4!-permutation replay in
+    * AttributionSpec).
     */
   def exposureCohorts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -915,32 +915,6 @@ object Behavior {
     }.toDF("mask", "u", "c")
   }
 
-  /** Diagnostic xat_b: the 1e9-quantized cohort conversion rates
-    * vq(mask) = rhu(c·1e9, u) over the 16-mask lattice — the cohort
-    * frame plus exactly ONE rhu step, isolating the integer
-    * round-half-up construct from the φ summation that follows it.
-    */
-  /** vq(mask) = rhu(c·1e9, u) over the 16-mask lattice — ONE
-    * implementation shared by the xat_b diagnostic and the full φ
-    * chain, so the diagnostic's isolation guarantee (xat_b is exactly
-    * the vq step inside xat_c) cannot drift (r13 review).
-    */
-  private def vqMap(cohorts: Array[(Int, Long, Long)]): Map[Int, Long] = {
-    val u = cohorts.map(t => t._1 -> t._2).toMap
-    val c = cohorts.map(t => t._1 -> t._3).toMap
-    (0 until 16).map { m =>
-      m -> (if (u.getOrElse(m, 0L) > 0L)
-        graft.operators.Learn.rhu(BigInt(c(m)) * 1000000000L, u(m)).toLong
-      else 0L)
-    }.toMap
-  }
-
-  def exposureVq(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val vq = vqMap(collectCohorts(spark, dir))
-    (0 until 16).map(m => (m.toLong, vq(m))).toDF("mask", "vq")
-  }
-
   def shapleyAttribution(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val channels = shapleyChannels
@@ -948,7 +922,12 @@ object Behavior {
 
     val u = cohorts.map(t => t._1 -> t._2).toMap
     val c = cohorts.map(t => t._1 -> t._3).toMap
-    val vq: Map[Int, Long] = vqMap(cohorts)
+    // vq(mask) = rhu(c·1e9, u): the 1e9-quantized cohort conversion rate.
+    val vq: Map[Int, Long] = (0 until 16).map { m =>
+      m -> (if (u.getOrElse(m, 0L) > 0L)
+        graft.operators.Learn.rhu(BigInt(c(m)) * 1000000000L, u(m)).toLong
+      else 0L)
+    }.toMap
     val wnum = Array(6L, 2L, 2L, 6L) // |S|!·(3−|S|)! for |S| = 0..3
     channels.map { case (name, bit) =>
       val phi = (0 until 16).filter(s => (s & bit) == 0).map { s =>

@@ -133,8 +133,8 @@ object Learn {
     * so the gate now hashes what is ENGINE-INVARIANT (a pure count
     * aggregation no SQL engine can evaluate two ways) and the fitted
     * MM iterates stay covered by (a) LearnSpec's brute-force replay
-    * and (b) the xbt_* stage-prefix diagnostic gates that bisect the
-    * driver-side divergence (SURVEY §13).
+    * and (b) the bt1_bradley_terry_fit gate (the unrolled-MM oracle,
+    * outputs BIGINT-cast — SURVEY §13).
     *
     * Scale shape unchanged: duel generation is linear in lineitem
     * (per-order fan-out ≤ C(7,2)); the output is the ≤ m(m−1)
@@ -148,9 +148,7 @@ object Learn {
 
   /** The duel-derivation CTE prefix shared VERBATIM by the restated
     * bt1 oracle ([[duelCountsSql]]) and the full unrolled-MM oracle
-    * ([[bradleyTerrySql]], diagnostics xbt_*): the r13 bisection
-    * contract requires the gate's aggregation to be EXACTLY the
-    * prefix of the diagnostic chain, so the text exists once.
+    * ([[bradleyTerrySql]]), so the text exists once.
     */
   private val duelCtesSql: String =
     """WITH bids AS MATERIALIZED (
@@ -276,11 +274,9 @@ object Learn {
          |    (SELECT greatest(CAST(sum(qp) AS HUGEINT), 1) AS s FROM p$k) ss)""".stripMargin
     }.mkString(",\n")
     // Output types: wins/comparisons are sums (HUGEINT in DuckDB) —
-    // cast to BIGINT like every other gate's outputs. The r13 local
-    // sweep found the four driver-red gates were EXACTLY the four
-    // whose oracle outputs carried uncast HUGEINT columns (SURVEY
-    // §13.2a) — the cast removes the type boundary from the readout
-    // so these diagnostics measure the CHAIN arithmetic alone.
+    // cast to BIGINT like every other gate's outputs. The round-11/12
+    // hash-red gates were EXACTLY the ones whose oracle outputs
+    // carried uncast HUGEINT columns (SURVEY §13.2a).
     val tail =
       s"""SELECT q.item, CAST(coalesce(w2.wins, 0) AS BIGINT) AS wins,
          |  CAST(nj.comparisons AS BIGINT) AS comparisons,
@@ -290,10 +286,7 @@ object Learn {
          |JOIN (SELECT i AS item, sum(n) AS comparisons FROM nd GROUP BY 1) nj
          |  ON q.item = nj.item
          |ORDER BY strength_q12 DESC, q.item ASC""".stripMargin
-    // iterations = 0 (diagnostic xbt_a_q0): the tail reads q0 directly,
-    // so no iteration CTEs — and no dangling comma — are emitted.
-    if (iterations == 0) head + "\n" + tail
-    else head + ",\n" + iters + "\n" + tail
+    head + ",\n" + iters + "\n" + tail
   }
 
   /** Gated gb1: ADABOOST DECISION STUMPS — the quality-classifier
@@ -331,7 +324,7 @@ object Learn {
     * fraction err_num/err_den in weight units) plus a final ensemble
     * row (round = T+1, err = misclassified-row count / corpus rows).
     */
-  /** The feature-grid collapse shared by every gb1/xgb_* surface: one
+  /** The feature-grid collapse shared by every gb1 surface: one
     * aggregation of lineitem down to ≤ 50·11·9·2 ≈ 10k
     * (qty, disc, tax, y) groups carrying multiplicities.
     */
@@ -351,23 +344,6 @@ object Learn {
       .as[(Long, Long, Long, Long, Long)].collect()
   }
 
-  /** Diagnostic xgb_a: the feature grid itself, ordered — probes the
-    * corpus/read-path prefix (round(·100) casts + one aggregation) of
-    * the gb1 chain with zero discretionary arithmetic.
-    */
-  def adaboostGrid(spark: SparkSession, dir: String): DataFrame =
-    adaboostGridFrame(spark, dir)
-      .orderBy(col("qty"), col("disc"), col("tax"), col("y"))
-
-  def adaboostGridSql: String =
-    """SELECT CAST(l_quantity AS BIGINT) AS qty,
-      |  CAST(round(l_discount * 100) AS BIGINT) AS disc,
-      |  CAST(round(l_tax * 100) AS BIGINT) AS tax,
-      |  CAST(CASE WHEN l_returnflag = 'R' THEN 1 ELSE -1 END AS BIGINT) AS y,
-      |  CAST(count(*) AS BIGINT) AS cnt
-      |FROM lineitem GROUP BY 1, 2, 3, 4
-      |ORDER BY qty, disc, tax, y""".stripMargin
-
   private def fv(g: (Long, Long, Long, Long, Long), f: Long): Long =
     if (f == 1L) g._1 else if (f == 2L) g._2 else g._3
   private def pred(g: (Long, Long, Long, Long, Long),
@@ -376,13 +352,11 @@ object Learn {
 
   /** The boosting loop on the collected grid: returns the per-round
     * models (feature, threshold, polarity, weighted error e, total
-    * mass tot) and the weight vector AFTER the last round. Pure
-    * driver-side BigInt arithmetic; see [[adaboostStumps]] for the
-    * quantization discipline.
+    * mass tot). Pure driver-side BigInt arithmetic; see
+    * [[adaboostStumps]] for the quantization discipline.
     */
   private def adaboostLoop(grid: Array[(Long, Long, Long, Long, Long)],
-                           roundsT: Int)
-      : (List[(Long, Long, Long, BigInt, BigInt)], Array[BigInt]) = {
+                           roundsT: Int): List[(Long, Long, Long, BigInt, BigInt)] = {
     var w: Array[BigInt] = grid.map(g => BigInt(g._5) * 10000000000L)
     val s0: BigInt = w.sum
     // (feature, threshold, polarity, err e, total mass tot) per round.
@@ -437,7 +411,7 @@ object Learn {
       val sr = ur.sum
       w = ur.map(x => rhu(x * s0, sr)).toArray
     }
-    (models, w)
+    models
   }
 
   /** Gated gb1 (round-13 restatement — r12 verdict item #2): per-round
@@ -448,8 +422,7 @@ object Learn {
     * floating-point ulp would still pick the same stump unless two
     * candidates tied to ~1e-16 relative — and given the identity the
     * error counts are pure aggregation. The exact weight trajectory
-    * (the construct the driver record keeps disagreeing on) moves to
-    * the xgb_* stage-prefix diagnostics and LearnSpec's replay.
+    * is gated by gb1_adaboost_fit and replayed by LearnSpec.
     */
   def adaboostStumpTrace(spark: SparkSession, dir: String,
                          roundsT: Int = 3): DataFrame = {
@@ -467,40 +440,13 @@ object Learn {
     if (grid.isEmpty) // oracle: LIMIT-1 CTEs of an empty grid → 0 rows
       return spark.createDataFrame(
         java.util.Collections.emptyList[Row](), outSchema)
-    val (models, _) = adaboostLoop(grid, roundsT)
+    val models = adaboostLoop(grid, roundsT)
     val totalRows = grid.map(_._5).sum
     val rows: Seq[Row] = models.zipWithIndex.map { case ((f, t, pol, _, _), i) =>
       val errRows = grid.iterator
         .filter(g => pred(g, f, t, pol) != g._4).map(_._5).sum
       Row((i + 1).toLong, f, t, pol, errRows, totalRows)
     }
-    spark.createDataFrame(rows.asJava, outSchema)
-  }
-
-  /** Diagnostic xgb_c: the renormalized weight frame after `rounds`
-    * boosting rounds — the exact construct (HUGEINT product →
-    * d-reduction → rhu renormalization) the driver-side oracle is
-    * suspected of evaluating differently.
-    */
-  def adaboostWeightsAfter(spark: SparkSession, dir: String,
-                           rounds: Int = 1): DataFrame = {
-    val grid = adaboostGridCollect(spark, dir)
-    val outSchema = StructType(Seq(
-      StructField("qty", LongType, nullable = false),
-      StructField("disc", LongType, nullable = false),
-      StructField("tax", LongType, nullable = false),
-      StructField("y", LongType, nullable = false),
-      StructField("cnt", LongType, nullable = false),
-      StructField("w", LongType, nullable = false)))
-    import scala.jdk.CollectionConverters._
-    if (grid.isEmpty)
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), outSchema)
-    val (_, w) = adaboostLoop(grid, rounds)
-    val rows: Seq[Row] = grid.indices.map { i =>
-      val g = grid(i)
-      Row(g._1, g._2, g._3, g._4, g._5, w(i).toLong)
-    }.sortBy(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     spark.createDataFrame(rows.asJava, outSchema)
   }
 
@@ -528,7 +474,7 @@ object Learn {
         java.util.Collections.singletonList(row), outSchema)
     }
 
-    val (models, _) = adaboostLoop(grid, roundsT)
+    val models = adaboostLoop(grid, roundsT)
 
     // Ensemble readout: per grid row, compare the exact integer odds
     // products (1e9-quantized per-round error rates, clamped to
@@ -599,7 +545,7 @@ object Learn {
     * only on the pattern, so (pattern, count) determines the whole EM
     * trajectory). Engine-invariant pure aggregation; the fitted EM
     * iterates stay covered by LearnSpec's brute per-document replay
-    * and the xds_* stage-prefix diagnostics (SURVEY §13).
+    * and the dsk1_dawid_skene_fit gate.
     */
   def votePatternCounts(spark: SparkSession, dir: String): DataFrame =
     voteFrame(spark, dir)
@@ -619,8 +565,8 @@ object Learn {
         |FROM pat ORDER BY v1, v2, v3""".stripMargin
 
   /** The vote-pattern CTE shared VERBATIM by the restated dsk1 oracle
-    * and the unrolled-EM oracle (diagnostics xds_*) — same bisection
-    * contract as [[duelCtesSql]].
+    * and the unrolled-EM oracle ([[dawidSkeneSql]]), so the text exists
+    * once.
     */
   private val patCteSql: String =
     """WITH pat AS (
@@ -770,7 +716,7 @@ object Learn {
   private def sqlFv(fcol: String, g: String): String =
     s"CASE $fcol WHEN 1 THEN $g.qty WHEN 2 THEN $g.disc ELSE $g.tax END"
 
-  /** The shared CTE chain of every gb1/xgb_* oracle: the g0 feature
+  /** The shared CTE chain of every gb1 oracle: the g0 feature
     * grid, initial weights, and `roundsT` rounds of stump selection
     * (bv/cd/best) + rational re-weight + d-reduction + rhu
     * renormalization (u/s/r/w). Explicit HUGEINT casts on every sum
@@ -833,9 +779,7 @@ object Learn {
          |    (SELECT CAST(sum(ur) AS HUGEINT) AS sr FROM r$k) sr
          |  CROSS JOIN s0)""".stripMargin
     }.mkString(",\n")
-    // roundsT = 0 (a hypothetical w0 probe): head only, no dangling
-    // comma — the same guard bradleyTerrySql(0) carries.
-    if (roundsT == 0) head else head + ",\n" + rounds
+    head + ",\n" + rounds
   }
 
   /** Oracle SQL for the restated gb1 — the stump-selection chain plus
@@ -865,16 +809,6 @@ object Learn {
          |FROM ($sel) u
          |ORDER BY round""".stripMargin
   }
-
-  /** Oracle SQL for diagnostic xgb_c: the weight frame after `rounds`
-    * boosting rounds.
-    */
-  def adaboostWeightsSql(rounds: Int = 1): String =
-    adaboostSqlCtes(rounds) + "\n" +
-      s"""SELECT qty, disc, tax, CAST(y AS BIGINT) AS y,
-         |  CAST(cnt AS BIGINT) AS cnt, w
-         |FROM w$rounds
-         |ORDER BY qty, disc, tax, y""".stripMargin
 
   def adaboostStumpsSql(roundsT: Int = 3): String = {
     require(roundsT >= 1 && roundsT <= 4,

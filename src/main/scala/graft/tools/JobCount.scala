@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main: run named gates once (warm) and print how many
   * Spark JOBS / STAGES / TASKS each submitted — the driver-side
@@ -14,14 +13,7 @@ import org.apache.spark.sql.SparkSession
 object JobCount {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.cteRecursionRowLimit", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
     @volatile var jobs = 0
     @volatile var stages = 0
     @volatile var tasks = 0
@@ -32,13 +24,9 @@ object JobCount {
     })
     args.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      graft.operators.Ranks.releaseAll()
+      graft.GraftSession.reset(spark)
       fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warm
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      graft.operators.Ranks.releaseAll()
+      graft.GraftSession.reset(spark)
       jobs = 0; stages = 0; tasks = 0
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()

@@ -1,24 +1,20 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Round-14 plan evidence tool: unlike [[graft.PlanProbe]] (which
-  * explains the RETURNED frame — a LocalTableScan for gates that
-  * materialize bounded results via collect+createDataFrame), this
-  * registers a QueryExecutionListener and dumps the formatted plan of
-  * EVERY query executed while the gate runs, so the internal
-  * exchanges/joins of collected gates are visible and checkable.
-  * Usage: runMain graft.tools.PlanDump <gate> [> plans/...] .
+/** Plan evidence tool: registers a QueryExecutionListener and dumps
+  * the formatted plan of EVERY query executed while the gate runs —
+  * the returned frame's execution and, for gates that materialize
+  * bounded results via collect+createDataFrame, the internal
+  * executions whose exchanges/joins the returned LocalTableScan hides.
+  * Runs under the shared [[graft.GraftSession]] config, at
+  * SPARK_GRAFT_SF_DIR (default sf0.01).
+  * Usage: runMain graft.tools.PlanDump <gate...> [> plans.txt] .
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build()
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val buf = new java.lang.StringBuilder
     val listener = new QueryExecutionListener {

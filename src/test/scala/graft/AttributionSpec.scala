@@ -63,4 +63,24 @@ class AttributionSpec extends SparkSpec {
     // Efficiency axiom: Σ φ_wnum = 24·(v(N) − v(∅)) in quantized units.
     assert(got.map(_.getAs[Long]("phi_wnum")).sum == 24L * (vq(15) - vq(0)))
   }
+
+  test("att4 restated: the cohort lattice is zero-filled, totals match " +
+    "the user population, and the old exposure margins are recoverable") {
+    val coh = Behavior.exposureCohorts(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(coh.map(_._1).sameElements(0L until 16L))
+    val users = Tables.events(spark, sf)
+      .select("user_id").distinct().count()
+    assert(coh.map(_._2).sum == users)
+    // The fitted frame's exposure margins re-derive from the lattice.
+    val phis = Behavior.shapleyAttribution(spark, sf).collect()
+      .map(r => (r.getString(0), r.getLong(2), r.getLong(3)))
+    val bits = Map("click" -> 1L, "error" -> 2L, "signup" -> 4L, "view" -> 8L)
+    phis.foreach { case (ch, uExp, cExp) =>
+      val b = bits(ch)
+      val sel = coh.filter(t => (t._1 & b) != 0L)
+      assert(uExp == sel.map(_._2).sum, s"users_exposed margin for $ch")
+      assert(cExp == sel.map(_._3).sum, s"conversions_exposed margin for $ch")
+    }
+  }
 }

@@ -1,0 +1,58 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.functions.col
+import graft.operators.Ranks
+
+/** The one session factory: its settings reach the test session, its
+  * reset leaves no persistent RDD behind, and no other main source
+  * builds a session of its own.
+  */
+class GraftSessionSpec extends SparkSpec {
+
+  test("the test session carries every setting GraftSession.build applies") {
+    val expected = Map(
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.cteRecursionRowLimit" -> "-1",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false")
+    assert(GraftSession.settings(8).toMap == expected)
+    expected.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
+    assert(spark.sparkContext.master == "local[8]")
+  }
+
+  test("reset releases persisted, locally checkpointed and Ranks-cached frames") {
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet
+    def persists(what: String)(step: => Unit): Unit = {
+      val before = persisted
+      step
+      assert((persisted -- before).nonEmpty, s"$what persisted nothing")
+    }
+    val df = spark.range(0, 100, 1, 4).withColumn("v", col("id") % 7)
+    persists("persist")(df.persist().count())
+    persists("localCheckpoint")(df.filter(col("v") > 2).localCheckpoint().count())
+    persists("withGlobalRowNumber") {
+      Ranks.withGlobalRowNumber(df, Seq(col("id").asc), 4, "rn")._1.count()
+    }
+    GraftSession.reset(spark)
+    // unpersist(blocking = false) is asynchronous; poll briefly.
+    val deadline = System.nanoTime() + 10e9.toLong
+    while (persisted.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(persisted.isEmpty, s"left behind: $persisted")
+  }
+
+  test("no main source other than GraftSession.scala builds a SparkSession") {
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"run from the repository root: ${root.toAbsolutePath}")
+    val builders = Files.walk(root).iterator().asScala
+      .filter(p => Files.isRegularFile(p))
+      .filter(p => Files.readString(p).contains("SparkSession.builder"))
+      .map((p: Path) => root.relativize(p).toString).toList
+    assert(builders == List("scala/graft/GraftSession.scala"), builders)
+  }
+}

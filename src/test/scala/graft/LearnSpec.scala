@@ -199,4 +199,75 @@ class LearnSpec extends SparkSpec {
     alpha.values.foreach(a => assert(a >= 0 && a <= E9))
     beta.values.foreach(b => assert(b >= 0 && b <= E9))
   }
+
+  test("bt1 restated: duel counts are the BT sufficient statistic — " +
+    "the fitted frame's wins/comparisons margins are recoverable") {
+    val duels = Learn.duelCounts(spark, sf).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val fitted = Learn.bradleyTerry(spark, sf).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val winsOf = duels.groupBy(_._1).map { case (k, v) => k -> v.map(_._3).sum }
+    val compOf = fitted.map(_._1).map { i =>
+      i -> duels.collect {
+        case (w, l, n) if w == i || l == i => n
+      }.sum
+    }.toMap
+    assert(fitted.nonEmpty)
+    fitted.foreach { case (item, wins, comparisons) =>
+      assert(wins == winsOf.getOrElse(item, 0L), s"wins margin for $item")
+      assert(comparisons == compOf(item), s"comparisons margin for $item")
+    }
+    // Sorted, strictly keyed output.
+    assert(duels.map(t => (t._1, t._2)).distinct.length == duels.length)
+  }
+
+  test("dsk1 restated: vote-pattern counts cover the corpus and the " +
+    "majority flag is the pattern majority") {
+    val pats = Learn.votePatternCounts(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4)))
+    val nDocs = Tables.documents(spark, sf).count()
+    assert(pats.map(_._4).sum == nDocs)
+    pats.foreach { case (v1, v2, v3, _, maj) =>
+      assert(maj == (if (v1 + v2 + v3 >= 2) 1L else 0L))
+    }
+    assert(pats.map(t => (t._1, t._2, t._3)).distinct.length == pats.length)
+  }
+
+  test("gb1 restated: the trace's stump identities equal the fitted " +
+    "ensemble's, and raw error counts match a brute stump evaluation") {
+    val trace = Learn.adaboostStumpTrace(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getLong(5)))
+    val fitted = Learn.adaboostStumps(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .filter(_._1 <= 3) // drop the ensemble row
+    assert(trace.map(t => (t._1, t._2, t._3, t._4)).sameElements(fitted))
+    // Brute per-stump raw error over lineitem.
+    val li = Tables.lineitem(spark, sf)
+      .select(col("l_quantity").cast("long"),
+        round(col("l_discount") * 100).cast("long"),
+        round(col("l_tax") * 100).cast("long"),
+        when(col("l_returnflag") === "R", 1L).otherwise(-1L))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    trace.foreach { case (_, f, t, pol, errRows, totalRows) =>
+      assert(totalRows == li.length)
+      val brute = li.count { g =>
+        val v = if (f == 1L) g._1 else if (f == 2L) g._2 else g._3
+        pol * (if (v <= t) 1L else -1L) != g._4
+      }
+      assert(errRows == brute, s"raw error for stump ($f,$t,$pol)")
+    }
+  }
+
+  test("rhu enforces its non-negative domain (r12 advice)") {
+    intercept[IllegalArgumentException] {
+      graft.operators.Learn.rhu(BigInt(-1), BigInt(2))
+    }
+    intercept[IllegalArgumentException] {
+      graft.operators.Learn.rhu(BigInt(1), BigInt(0))
+    }
+    assert(graft.operators.Learn.rhu(BigInt(1), BigInt(8)) == BigInt(0))
+    assert(graft.operators.Learn.rhu(BigInt(4), BigInt(8)) == BigInt(1))
+  }
 }

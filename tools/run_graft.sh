@@ -12,5 +12,4 @@ for p in java.base/java.lang java.base/java.lang.invoke \
   OPENS="$OPENS --add-opens $p=ALL-UNNAMED"
 done
 CP="/root/repo/target/scala-2.13/classes:$(echo /opt/spark/jars/*.jar | tr ' ' ':')"
-exec java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx${SPARK_DRIVER_MEM:-8g} -cp "$CP" "$@"
+exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-8g} -cp "$CP" "$@"
