@@ -231,7 +231,8 @@ object Curation {
     * only new cost is the final groupBy on cluster reps.
     */
   def entityResolution(spark: SparkSession, dir: String,
-                       minAgree: Int = 2, k: Int = 20): DataFrame = {
+                       minAgree: Int = 2, k: Int = 20): DataFrame =
+      Pins.local(spark) { _ =>
     val c = Tables.customer(spark, dir)
       .select((col("c_custkey") * 2).as("id"), col("c_nationkey").as("blk"),
         round(col("c_acctbal") * 100).cast("long").as("cents"))
@@ -255,7 +256,7 @@ object Curation {
     val labels = Dedup.duplicateClustersFrom(nodes, edges)
     val balances = c.select(col("id"), col("cents"))
       .unionAll(s.select(col("id"), col("cents")))
-    val top = labels
+    labels
       .join(balances, col("doc_id") === col("id"))
       .groupBy(col("cluster_rep"))
       .agg(count(lit(1)).as("n_members"),
@@ -263,9 +264,7 @@ object Curation {
         sum((col("doc_id") % 2 === 1).cast("long")).as("n_suppliers"),
         max(col("cents")).as("max_bal_cents"))
       .orderBy(desc("n_members"), asc("cluster_rep"))
-      .limit(k)
-    val rows = top.collect() // k rows
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), top.schema)
+      .limit(k) // k rows
   }
 
   /** Gated c7: the CORPUS CARD — the per-source release report every

@@ -33,9 +33,12 @@ import graft.operators.TextAnalysis.words
   *
   * Caller contract: several operators `cache()` intermediates that the
   * RETURNED DataFrame still depends on (they cannot self-unpersist
-  * before the caller's action). Long-lived sessions invoking these in
-  * a loop should `spark.catalog.clearCache()` between invocations —
-  * Verify and Bench both do.
+  * before the caller's action), and [[duplicateClusters]] returns
+  * labels that may sit in `localCheckpoint` blocks — persistent RDDs
+  * that `spark.catalog.clearCache()` does not free. Long-lived
+  * sessions invoking these in a loop should call
+  * `graft.GraftSession.reset` between invocations, as Verify and Bench
+  * do.
   */
 object Dedup {
 
@@ -634,53 +637,41 @@ object Dedup {
       minhashLshPairs(spark, dir, threshold).select(col("doc_a"), col("doc_b")),
       maxRounds)
 
-  /** How often the BSP loop truncates lineage: without it the plan
-    * nests one join per round, and a high-diameter graph (a 50-doc
-    * duplication chain) would hand Catalyst a 50-join tree to
-    * re-analyze every round. `localCheckpoint(eager)` materializes the
-    * label RDD and cuts the logical plan back to a scan.
-    */
-  private final val CheckpointEvery = 5
-
   /** [[duplicateClusters]] over explicit node/edge frames — the seam
-    * the high-diameter chain test drives synthetically.
+    * the high-diameter chain test drives synthetically. Returns the
+    * labels LAZILY: their last round (and the latest lineage cut under
+    * it) stays pinned until `GraftSession.reset`.
     */
   def duplicateClustersFrom(nodes: DataFrame, edges: DataFrame,
                             maxRounds: Int = 20): DataFrame =
-      Graph.withoutAqe(nodes.sparkSession) {
+      Graph.withoutAqe(nodes.sparkSession) { Pins.scope { p =>
     // Edge frame resident-partitioned on the join key; label vectors
     // shuffle-hash to it (the Graph round-12 discipline: under AQE
     // this loop submitted one query-stage job per exchange — 46 for
     // dd15 — pure driver scheduling latency on a contended box).
-    val bidir = edges.union(edges.select(col("doc_b"), col("doc_a")))
+    val bidir = p(edges.union(edges.select(col("doc_b"), col("doc_a")))
       .toDF("src", "dst")
-      .repartition(col("src"))
-      .cache()
-    var labels = nodes
-      .select(col("doc_id"), col("doc_id").as("rep"))
-      .cache()
-    var converged = false
-    var round = 0
+      .repartition(col("src")))
     var labelSum = Long.MinValue
-    while (!converged && round < maxRounds) {
-      round += 1
+    // Every 5th round is a lineage cut: without it the plan nests one
+    // join per round, and a high-diameter graph (a 50-doc duplication
+    // chain) would hand Catalyst a 50-join tree to re-analyze every
+    // round. The cut is LAZY (round 15): the convergence sum below
+    // already materializes every round, so it swaps the nested-join
+    // plan for a scan of the materialized labels without the separate
+    // materialization job an eager checkpoint submits first.
+    val labels = Pins.rounds(nodes.select(col("doc_id"), col("doc_id").as("rep")),
+        maxRounds, cutEvery = 5) { (labels, _) =>
       val neighborMin = bidir
         .join(labels.hint("shuffle_hash"), col("src") === col("doc_id"))
         .groupBy(col("dst"))
         .agg(min(col("rep")).as("nmin"))
-      val step = labels
+      labels
         .join(neighborMin.hint("shuffle_hash"),
           col("doc_id") === col("dst"), "left")
         .select(col("doc_id"),
           least(col("rep"), coalesce(col("nmin"), col("rep"))).as("rep"))
-      // Periodic lineage truncation: the convergence sum below already
-      // materializes every round, so a LAZY checkpoint (round 15) rides
-      // that job — it swaps the nested-join plan for a scan of the
-      // materialized labels without the separate materialization job an
-      // eager checkpoint submits first.
-      val next =
-        if (round % CheckpointEvery == 0) step.localCheckpoint(false)
-        else step.cache()
+    } { (next, _, _) =>
       // Labels only ever DECREASE, so Σrep is strictly monotone until
       // the fixpoint: an unchanged exact long sum ⇔ converged. One
       // scalar aggregate per round instead of a self-join diff.
@@ -689,16 +680,14 @@ object Dedup {
       // sum() over an empty frame is NULL — an empty corpus is already
       // converged (and must not NPE on unboxing).
       val sum = if (sumRow.isNullAt(0)) 0L else sumRow.getLong(0)
-      converged = labelSum == sum
+      val converged = labelSum == sum
       labelSum = sum
-      labels.unpersist()
-      labels = next
+      !converged
     }
-    bidir.unpersist()
     labels
       .select(col("doc_id"), col("rep").as("cluster_rep"))
       .orderBy(col("doc_id"))
-  } // withoutAqe
+  }} // withoutAqe
 
   /** Gated rsp1: REPEATED-SPAN MINING — the corpus-level boilerplate
     * detector: maximal word spans whose every n-gram occurs in ≥
@@ -1190,57 +1179,58 @@ object Dedup {
     corpus.append(d.filter(col("doc_id") % 10 === 0)) // v2: delta
     val delta = corpus.readChanges(spark, afterVersion = 1)
       .select(col("doc_id"), col("text"))
-    val deltaBands = bandEntries(delta).cache()
-    val cand = deltaBands.as("x")
-      .join(index.snapshot(spark).as("y"),
-        col("x.band_idx") === col("y.band_idx")
-          && col("x.band_hash") === col("y.band_hash"))
-      .select(col("x.doc_id").as("dd"), col("y.doc_id").as("bb"))
-      .distinct()
-      .cache() // read 3×: both prefilters + the confirm join
-    // Confirm-side PREFILTER (round 14, guide §3.4): shingle arrays are
-    // only needed for docs that survived the band probe, but the former
-    // shape tokenized+shingled the ENTIRE base snapshot (9/10 of the
-    // corpus) and sorted those arrays through the confirm join's
-    // exchange before the join discarded the non-candidates. Semi-join
-    // each side on the candidate ids FIRST — the candidate id frames
-    // are LSH-bounded (broadcast), so the expensive shingle projection
-    // runs on candidate rows only. Inner-join semantics make this
-    // exactly result-preserving.
-    def shingleSets(docs: DataFrame): DataFrame =
-      docs.select(col("doc_id"),
-        shinglesFromWords(TextAnalysis.words(col("text"))).as("sh"))
-    val shD = shingleSets(delta
-        .join(cand.select(col("dd").as("doc_id")), Seq("doc_id"), "left_semi"))
-      .select(col("doc_id").as("dd"), col("sh").as("sh_d"))
-    val shB = shingleSets(corpus.snapshot(spark, Some(1))
-        .join(cand.select(col("bb").as("doc_id")), Seq("doc_id"), "left_semi"))
-      .select(col("doc_id").as("bb"), col("sh").as("sh_b"))
-    val confirmed = cand.join(shD, "dd").join(shB, "bb")
-      .withColumn("common",
-        size(array_intersect(col("sh_d"), col("sh_b"))).cast("double"))
-      .withColumn("jaccard", round(col("common")
-        / (size(col("sh_d")) + size(col("sh_b")) - col("common")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("dd"), col("bb"), col("jaccard"))
-    val best = confirmed.groupBy(col("dd")).agg(max(col("jaccard")).as("jac"))
-    val bestId = confirmed.join(best, Seq("dd"))
-      .filter(col("jaccard") === col("jac"))
-      .groupBy(col("dd"), col("jac")).agg(min(col("bb")).as("matched_doc"))
-    index.append(deltaBands) // step 5: the index is maintained, not rebuilt
-    val out = delta.select(col("doc_id"))
-      .join(bestId, col("doc_id") === col("dd"), "left")
-      .select(col("doc_id"), col("matched_doc"), col("jac").as("jaccard"),
-        col("matched_doc").isNull.as("novel"))
-    // The delta scales with the corpus (1/10 of docs): stage the result
-    // to parquet inside the stable dir, reclaim the TxTable trees
-    // eagerly, and return a lazy reader - never a driver collect.
-    // Unpersist AFTER the write (round 14): the former order dropped
-    // the deltaBands cache before the only action that reads the
-    // confirm pipeline, so the band signatures were recomputed from
-    // raw text inside the result write.
-    out.write.mode("overwrite").parquet(s"$tmp/result")
-    deltaBands.unpersist(); cand.unpersist()
+    Pins.scope { p =>
+      val deltaBands = p(bandEntries(delta))
+      // read 3×: both prefilters + the confirm join
+      val cand = p(deltaBands.as("x")
+        .join(index.snapshot(spark).as("y"),
+          col("x.band_idx") === col("y.band_idx")
+            && col("x.band_hash") === col("y.band_hash"))
+        .select(col("x.doc_id").as("dd"), col("y.doc_id").as("bb"))
+        .distinct())
+      // Confirm-side PREFILTER (round 14, guide §3.4): shingle arrays are
+      // only needed for docs that survived the band probe, but the former
+      // shape tokenized+shingled the ENTIRE base snapshot (9/10 of the
+      // corpus) and sorted those arrays through the confirm join's
+      // exchange before the join discarded the non-candidates. Semi-join
+      // each side on the candidate ids FIRST — the candidate id frames
+      // are LSH-bounded (broadcast), so the expensive shingle projection
+      // runs on candidate rows only. Inner-join semantics make this
+      // exactly result-preserving.
+      def shingleSets(docs: DataFrame): DataFrame =
+        docs.select(col("doc_id"),
+          shinglesFromWords(TextAnalysis.words(col("text"))).as("sh"))
+      val shD = shingleSets(delta
+          .join(cand.select(col("dd").as("doc_id")), Seq("doc_id"), "left_semi"))
+        .select(col("doc_id").as("dd"), col("sh").as("sh_d"))
+      val shB = shingleSets(corpus.snapshot(spark, Some(1))
+          .join(cand.select(col("bb").as("doc_id")), Seq("doc_id"), "left_semi"))
+        .select(col("doc_id").as("bb"), col("sh").as("sh_b"))
+      val confirmed = cand.join(shD, "dd").join(shB, "bb")
+        .withColumn("common",
+          size(array_intersect(col("sh_d"), col("sh_b"))).cast("double"))
+        .withColumn("jaccard", round(col("common")
+          / (size(col("sh_d")) + size(col("sh_b")) - col("common")), 6))
+        .filter(col("jaccard") >= threshold)
+        .select(col("dd"), col("bb"), col("jaccard"))
+      val best = confirmed.groupBy(col("dd")).agg(max(col("jaccard")).as("jac"))
+      val bestId = confirmed.join(best, Seq("dd"))
+        .filter(col("jaccard") === col("jac"))
+        .groupBy(col("dd"), col("jac")).agg(min(col("bb")).as("matched_doc"))
+      index.append(deltaBands) // step 5: the index is maintained, not rebuilt
+      val out = delta.select(col("doc_id"))
+        .join(bestId, col("doc_id") === col("dd"), "left")
+        .select(col("doc_id"), col("matched_doc"), col("jac").as("jaccard"),
+          col("matched_doc").isNull.as("novel"))
+      // The delta scales with the corpus (1/10 of docs): stage the result
+      // to parquet inside the stable dir, reclaim the TxTable trees
+      // eagerly, and return a lazy reader - never a driver collect.
+      // Released AFTER the write (round 14): the former order dropped
+      // the deltaBands cache before the only action that reads the
+      // confirm pipeline, so the band signatures were recomputed from
+      // raw text inside the result write.
+      out.write.mode("overwrite").parquet(s"$tmp/result")
+    }
     graft.TmpIO.deleteSubdirs(tmp, "corpus", "index")
     spark.read.parquet(s"$tmp/result").orderBy(col("doc_id"))
   }
@@ -1265,7 +1255,8 @@ object Dedup {
     * weights pre-scaled to BIGINT micro-nats in the plan), so
     * ranking compares exact integers and the gate is hash-exact.
     */
-  def recordLinkage(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
+  def recordLinkage(spark: SparkSession, dir: String, k: Int = 20): DataFrame =
+      Pins.local(spark) { _ =>
     // Per-field (m, u) conditional-agreement probabilities, fixed by
     // contract; weights = round(ln(m/u)·10⁶) / round(ln((1-m)/(1-u))·10⁶)
     // inlined as exact micro-nat integer LITERALS (not computed at
@@ -1298,13 +1289,11 @@ object Dedup {
         (when(col("a1"), lit(wa1)).otherwise(lit(wd1))
           + when(col("a2"), lit(wa2)).otherwise(lit(wd2))
           + when(col("a3"), lit(wa3)).otherwise(lit(wd3))).as("su"))
-    val top = scored
+    scored
       .orderBy(desc("su"), asc("c_custkey"), asc("s_suppkey"))
       .limit(k)
       .select(col("c_custkey"), col("s_suppkey"), col("n_agree"),
-        round(col("su").cast("double") / lit(1e6), 6).as("score"))
-    val rows = top.collect() // k rows
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), top.schema)
+        round(col("su").cast("double") / lit(1e6), 6).as("score")) // k rows
   }
 
   /** Gated rl2: MULTI-PASS (OR-)BLOCKED RECORD LINKAGE — the scale
@@ -1330,7 +1319,8 @@ object Dedup {
     * Fellegi-Sunter micro-nats; see [[recordLinkage]].
     */
   def recordLinkageMultiPass(spark: SparkSession, dir: String,
-                             k: Int = 20): DataFrame = {
+                             k: Int = 20): DataFrame =
+      Pins.local(spark) { _ =>
     val (wa1, wd1) = (492476L, -1504077L)
     val (wa2, wd2) = (1763589L, -1076139L)
     val (wa3, wd3) = (3601868L, -783394L)
@@ -1367,13 +1357,11 @@ object Dedup {
     val byRank = Seq(desc("su"), asc("c_custkey"), asc("s_suppkey"))
     val topA = score(candA).orderBy(byRank: _*).limit(k)
     val topB = score(candB).orderBy(byRank: _*).limit(k)
-    val top = topA.unionByName(topB).distinct()
+    topA.unionByName(topB).distinct()
       .orderBy(byRank: _*)
       .limit(k)
       .select(col("c_custkey"), col("s_suppkey"), col("n_agree"),
-        round(col("su").cast("double") / lit(1e6), 6).as("score"))
-    val rows = top.collect() // k rows
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), top.schema)
+        round(col("su").cast("double") / lit(1e6), 6).as("score")) // k rows
   }
 
   /** Gated dd17: WINNOWING-FINGERPRINT NEAR-DUP PAIRS — candidate

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
 
@@ -20,9 +19,9 @@ import graft.Tables
   * aggregation (keyed on dst). The edge list is hash-partitioned on
   * src once and persisted, so every iteration reuses that exchange;
   * ranks are small relative to edges and flow through the join. The
-  * driver only sees the node-count scalar. Convergence loops at
-  * depth >3 should `localCheckpoint` every few rounds to truncate
-  * lineage (same policy as [[Dedup.duplicateClusters]]).
+  * driver only sees the node-count scalar. Loops that persist a frame
+  * per round run through [[Pins.rounds]], which owns the per-round
+  * cache lifetime and the lineage cut.
   *
   * Determinism (cross-engine gate): per-edge contributions are
   * rounded to 14 decimals and summed as DECIMAL(30,14) — exact and
@@ -91,6 +90,46 @@ object Graph {
     }
   }
 
+  // The trade graph's node ids: customer k is node 2k, supplier k is
+  // node 2k+1 — one integer key space for the bipartite graph (int
+  // keys halve the distinct/join/agg shuffle width against
+  // concatenated strings); display names appear only in the readout.
+  private def custNode(key: Column): Column = key * 2
+  private def suppNode(key: Column): Column = key * 2 + 1
+  private def isCust(node: Column): Column = node % 2 === 0
+  /** The customer or supplier key of a node. */
+  private def nodeKey(node: Column): Column = (node / 2).cast("long")
+  /** "c<custkey>" or "s<suppkey>". */
+  private def nodeName(node: Column): Column =
+    concat(when(isCust(node), lit("c")).otherwise(lit("s")),
+      nodeKey(node).cast("string"))
+
+  /** Every lineitem's trade, (customer, supplier) columns raw. */
+  private def trades(spark: SparkSession, dir: String): DataFrame =
+    Tables.orders(spark, dir)
+      .join(Tables.lineitem(spark, dir), col("o_orderkey") === col("l_orderkey"))
+
+  /** Distinct trade relationships as (src = customer node, dst =
+    * supplier node).
+    */
+  private def tradePairs(spark: SparkSession, dir: String): DataFrame =
+    trades(spark, dir)
+      .select(custNode(col("o_custkey")).as("src"), suppNode(col("l_suppkey")).as("dst"))
+      .distinct()
+
+  /** Both directions of a (src, dst, …) edge frame. */
+  private def mirrored(e: DataFrame): DataFrame =
+    e.unionAll(e.select(col("dst").as("src") +: col("src").as("dst") +:
+      e.columns.filterNot(Set("src", "dst")).toSeq.map(col): _*))
+
+  /** Customer nodes of `nation` that have a trade in `nodes`. */
+  private def seedNodes(spark: SparkSession, dir: String, nation: Long,
+                        nodes: DataFrame): DataFrame =
+    Tables.customer(spark, dir)
+      .filter(col("c_nationkey") === nation)
+      .select(custNode(col("c_custkey")).as("node"))
+      .join(nodes, Seq("node"), "left_semi")
+
   /** PageRank over the bipartite customer↔supplier trade graph
     * (query pr1): an edge per distinct (customer, supplier) trade
     * relationship, both directions so the chain is ergodic; 3
@@ -98,10 +137,9 @@ object Graph {
     *
     * Hot-path choices (measured at sf0.1, ~587k distinct pairs →
     * 1.17M directed edges):
-    *  - node ids are packed integers (cust→2k, supp→2k+1) end to
-    *    end; display strings are built only in the final top-k
-    *    projection. Int keys halve the distinct/join/agg shuffle
-    *    width vs concatenated strings.
+    *  - node ids are the packed trade-graph integers ([[tradePairs]])
+    *    end to end; display strings are built only in the final top-k
+    *    projection ([[nodeName]]).
     *  - contributions are scaled to exact longs (round(pr/deg·10¹⁴))
     *    instead of DECIMAL(30,14): the per-node sum stays exact and
     *    order-independent (mass ≤ 1 ⇒ sums ≪ 2⁶³) but aggregates on
@@ -112,18 +150,11 @@ object Graph {
     */
   def pageRank(spark: SparkSession, dir: String,
                iterations: Int = 3, k: Int = 25): DataFrame =
-      withoutAqe(spark) {
-    // Persist the distinct pair set BEFORE mirroring it: caching the
+      withoutAqe(spark) { Pins.local(spark) { p =>
+    // Pin the distinct pair set BEFORE mirroring it: caching the
     // union instead would re-run the join+distinct once per direction.
-    val pairs = Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = pairs
-      .unionAll(pairs.select(col("dst").as("src"), col("src").as("dst")))
+    val pairs = p(tradePairs(spark, dir))
+    val edges = mirrored(pairs)
 
     // Degree rides the edges via one broadcast (node-cardinality ≪
     // edges), and the persisted frame is PRE-PARTITIONED on src so
@@ -138,9 +169,7 @@ object Graph {
     // iteration chain now executes as ONE job. At web-graph scale the
     // same plan holds: bucket the edges on src, shuffle only ranks.
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val edgesDeg = edges.join(broadcast(deg), "src")
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edgesDeg = p(edges.join(broadcast(deg), "src").repartition(col("src")))
     val nodes = edges.select(col("src").as("node")).distinct()
     val n = nodes.count().toDouble // control-plane scalar
     val base = 0.15 / n
@@ -161,23 +190,10 @@ object Graph {
             .as("pr"))
     }
 
-    val top = pr.select(
-        when(col("node") % 2 === 0,
-          concat(lit("c"), (col("node") / 2).cast("long").cast("string")))
-          .otherwise(
-            concat(lit("s"), ((col("node") - 1) / 2).cast("long").cast("string")))
-          .as("node"),
-        round(col("pr"), 12).as("pr"))
+    pr.select(nodeName(col("node")).as("node"), round(col("pr"), 12).as("pr"))
       .orderBy(desc("pr"), asc("node"))
       .limit(k)
-    // Materialize the k-row result (bounded driver transfer) so the
-    // persisted edge frames can be released here instead of leaking
-    // into the caller's session.
-    val rows = top.collect()
-    pairs.unpersist()
-    edgesDeg.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), top.schema)
-  } // withoutAqe
+  }} // withoutAqe
 
 
   /** Gated ppr1: PERSONALIZED PAGERANK — the seed-teleport variant of
@@ -200,16 +216,9 @@ object Graph {
   def personalizedPageRank(spark: SparkSession, dir: String,
                            iterations: Int = 3, k: Int = 25,
                            seedMax: Long = 10L): DataFrame =
-      withoutAqe(spark) {
-    val pairs = Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = pairs
-      .unionAll(pairs.select(col("dst").as("src"), col("src").as("dst")))
+      withoutAqe(spark) { Pins.local(spark) { p =>
+    val pairs = p(tradePairs(spark, dir))
+    val edges = mirrored(pairs)
     // Same round-12 shuffle-hash discipline as pr1: edges partitioned
     // on src once, rank vectors shuffle to them, no per-iteration
     // broadcast-build jobs. The left-join back onto the node frame is
@@ -217,13 +226,10 @@ object Graph {
     // its key, so each iteration adds exactly two node-cardinality
     // shuffles to the single job.
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val edgesDeg = edges.join(broadcast(deg), "src")
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = edges.select(col("src").as("node")).distinct()
-      .repartition(col("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    def isSeed(c: Column): Column = c % 2 === 0 && c < seedMax * 2
+    val edgesDeg = p(edges.join(broadcast(deg), "src").repartition(col("src")))
+    val nodes = p(edges.select(col("src").as("node")).distinct()
+      .repartition(col("node")))
+    def isSeed(c: Column): Column = isCust(c) && c < custNode(lit(seedMax))
     val ns = nodes.filter(isSeed(col("node"))).count().toDouble // control plane
     val tel = 0.15 / ns
 
@@ -244,19 +250,10 @@ object Graph {
             + lit(0.85) * (coalesce(col("s"), lit(0L)).cast("double")
               / lit(1e14))).as("pr"))
     }
-    val top = pr.select(
-        when(col("node") % 2 === 0,
-          concat(lit("c"), (col("node") / 2).cast("long").cast("string")))
-          .otherwise(
-            concat(lit("s"), ((col("node") - 1) / 2).cast("long").cast("string")))
-          .as("node"),
-        round(col("pr"), 12).as("pr"))
+    pr.select(nodeName(col("node")).as("node"), round(col("pr"), 12).as("pr"))
       .orderBy(desc("pr"), asc("node"))
       .limit(k)
-    val rows = top.collect()
-    pairs.unpersist(); edgesDeg.unpersist(); nodes.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), top.schema)
-  } // withoutAqe
+  }} // withoutAqe
 
 
   /** Gated gnn1: TWO-HOP NEIGHBOR FEATURE AGGREGATION — the data-prep
@@ -275,13 +272,11 @@ object Graph {
     * engine-visible comparison is on drift-free values and the gate
     * hashes (edr1's fold discipline per hop).
     */
-  def gnnNeighborAgg(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir),
-        col("o_orderkey") === col("l_orderkey"))
+  def gnnNeighborAgg(spark: SparkSession, dir: String): DataFrame =
+      Pins.local(spark) { p =>
+    val pairs = p(trades(spark, dir)
       .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val feat = Tables.customer(spark, dir)
       .select(col("c_custkey").as("c"),
         round(col("c_acctbal") * 100).cast("long").as("cb"))
@@ -292,16 +287,13 @@ object Graph {
     val h2 = pairs.join(h1, "s")
       .groupBy(col("c"))
       .agg(round(sum(col("h1")).cast("double") / count(lit(1)), 6).as("h2"))
-    val out = h2.join(Tables.customer(spark, dir),
+    h2.join(Tables.customer(spark, dir),
         col("c") === col("c_custkey"))
       .groupBy(col("c_nationkey").cast("int").as("nation"))
       .agg(count(lit(1)).as("n_cust"),
         round(sum(col("h2").cast("decimal(38,6)")).cast("double")
           / count(lit(1)), 6).as("avg_h2"))
-      .orderBy(col("nation"))
-    val rows = out.collect() // 25 rows
-    pairs.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      .orderBy(col("nation")) // 25 rows
   }
 
   /** Gated bfs1: MULTI-SOURCE BFS distance histogram over the
@@ -319,33 +311,25 @@ object Graph {
     */
   def bfsDistances(spark: SparkSession, dir: String,
                    seedNation: Long = 0, maxHops: Int = 4): DataFrame =
-      withoutAqe(spark) {
-    val pairs = Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir), col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-    // Persist the edge list HASH-PARTITIONED on src: every hop joins
-    // on that key, so the per-round exchange moves only the frontier
+      withoutAqe(spark) { Pins.local(spark) { p =>
+    // Pin the edge list HASH-PARTITIONED on src: every hop joins on
+    // that key, so the per-round exchange moves only the frontier
     // (node-cardinality) while the edge frame — the big side — stays
     // where it was cached. Without this, each hop re-shuffles the
     // edges: maxHops × |edges| rows of avoidable network at scale.
-    val edges = pairs
-      .unionAll(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = p(mirrored(tradePairs(spark, dir)).repartition(col("src")))
     val nodes = edges.select(col("src").as("node")).distinct()
-    val seeds = Tables.customer(spark, dir)
-      .filter(col("c_nationkey") === seedNation)
-      .select((col("c_custkey") * 2).as("node"))
-      .join(nodes, Seq("node"), "left_semi")
-    var dist = seeds.select(col("node"), lit(0).as("dist"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    var dist = p(seedNodes(spark, dir, seedNation, nodes)
+      .select(col("node"), lit(0).as("dist")))
     var total = dist.count() // control-plane scalar per round
     var n = total
     var h = 0
     var frontier = dist.select(col("node"))
-    var retired = List.empty[DataFrame]
+    // Every round's frame stays pinned until the final collect, not
+    // just until the next round's count (Pins.rounds): each round reads
+    // `dist` three times, a reference that misses the cache recomputes
+    // it from the lineage, and with the older rounds released that
+    // recompute goes deeper — measured +3 stages and +10 tasks at sf0.1.
     while (n > 0 && h < maxHops) {
       h += 1
       // Shuffle-hash on the node-cardinality sides (round 12): the
@@ -358,24 +342,20 @@ object Graph {
         .join(dist.select(col("node")).hint("shuffle_hash"),
           Seq("node"), "left_anti")
         .select(col("node"), lit(h).as("dist"))
-      val grown = dist.unionAll(next).persist(StorageLevel.MEMORY_AND_DISK)
+      val grown = p(dist.unionAll(next))
       // ONE action per round: materializing `grown` pins next's rows
       // too, and the frontier size falls out of the running total.
       val grownTotal = grown.count()
       n = grownTotal - total
       total = grownTotal
-      retired = dist :: retired
       dist = grown
       frontier = grown.filter(col("dist") === h).select(col("node"))
     }
-    val out = dist
+    dist
       .groupBy(col("dist").cast("int").as("dist"))
       .agg(count(lit(1)).as("n_nodes"))
-      .orderBy(col("dist"))
-    val rows = out.collect() // ≤ maxHops+1 rows
-    (dist :: edges :: retired).foreach(_.unpersist())
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-  } // withoutAqe
+      .orderBy(col("dist")) // ≤ maxHops+1 rows
+  }} // withoutAqe
 
   /** Distinct co-purchase edges over parts: (u, v) with u < v when
     * both parts appear in the same order. Pair enumeration is
@@ -511,8 +491,9 @@ object Graph {
     * caller on a power-law graph tightens it to taste.
     */
   def edgeStrengthFrom(spark: SparkSession, edgesUV: DataFrame,
-                       k: Int, degreeCap: Int = 4096): DataFrame = {
-    val e = edgesUV.persist(StorageLevel.MEMORY_AND_DISK)
+                       k: Int, degreeCap: Int = 4096): DataFrame =
+      Pins.local(spark) { p =>
+    val e = p(edgesUV)
     // The mirrored half-edge frame is SYMMETRIC — (x,y) ∈ und ⇔
     // (y,x) ∈ und — so grouping on `a` and grouping on `b` see the
     // same multiset of keys. Hash-partition it ONCE on `a` (round 14)
@@ -523,15 +504,13 @@ object Graph {
     // repartition also feeds capNeighbors' two broadcast probes and
     // the weight join, all partitioning-preserving, so ONE 2m-row
     // exchange now serves the whole adjacency build.
-    val und = e.select(col("u").as("a"), col("v").as("b"))
+    val und = p(e.select(col("u").as("a"), col("v").as("b"))
       .unionAll(e.select(col("v").as("a"), col("u").as("b")))
-      .repartition(col("a"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("a")))
     // Node-cardinality; read three ways (weight join, hub list,
-    // implicit reuse across them) — persist, or the half-edge
+    // implicit reuse across them) — pin, or the half-edge
     // aggregation reruns per subscriber.
-    val deg = und.groupBy(col("a").as("node")).agg(count(lit(1)).as("d"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val deg = p(und.groupBy(col("a").as("node")).agg(count(lit(1)).as("d")))
     // Neighbor lists annotated with the NEIGHBOR's degree weight: join
     // on the dst endpoint (node-cardinality degree table broadcasts),
     // sort once as structs — sort_array orders by the leading field —
@@ -545,7 +524,9 @@ object Graph {
     // aggregates straight off und's resident `a`-partitioning with NO
     // further exchange — the union used to erase that partitioning and
     // re-exchange the 2m-row weighted frame just before the groupBy.
-    val adj = capNeighborsThen(und, "a", "b", degreeCap, deg)(h => h
+    // Joined twice (u side + v side): pinned, or the degree-join +
+    // groupBy+sort adjacency build runs twice.
+    val adj = p(capNeighborsThen(und, "a", "b", degreeCap, deg)(h => h
         .join(broadcast(deg), col("b") === col("node"))
         .select(col("a"), struct(col("b"),
           // d = 1 nodes can never be common neighbors; pin their weight
@@ -557,10 +538,7 @@ object Graph {
         .agg(sort_array(collect_list(col("nw"))).as("arr")))
       .select(col("a"),
         transform(col("arr"), x => x.getField("b")).as("nbrs"),
-        transform(col("arr"), x => x.getField("w")).as("wts"))
-      // joined twice (u side + v side): persist, or the degree-join +
-      // groupBy+sort adjacency build runs twice
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        transform(col("arr"), x => x.getField("w")).as("wts")))
     // SHUFFLE-HASH both adjacency joins (round 11): the streamed side
     // of the second join carries every edge row already loaded with
     // the u-side id+weight arrays — ~2 KB/row, tens of GB at sf1 —
@@ -570,7 +548,7 @@ object Graph {
     // stream unsorted: probe-only, no array byte ever spilled. Same
     // exchange count; measured 24.4 s -> 10.6 s steady on the sf1
     // rehearsal for this stage.
-    val scored = e
+    e
       .join(adj.select(col("a").as("u2"), col("nbrs").as("nbrs_u"))
         .hint("shuffle_hash"), col("u") === col("u2"))
       .join(adj.select(col("a").as("v2"), col("nbrs").as("nbrs_v"),
@@ -601,24 +579,21 @@ object Graph {
       .limit(k)
       .select(col("u"), col("v"), col("n_common"),
         round(col("aa_scaled").cast("double") / lit(1e12), 6).as("aa_score"))
-    val rows = scored.collect() // k rows
-    e.unpersist(); adj.unpersist(); deg.unpersist(); und.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), scored.schema)
   }
 
   /** [[triangleStats]] over an explicit (u, v) u<v edge frame (the
     * seam synthetic-graph tests drive).
     */
   def triangleStatsFrom(spark: SparkSession, edgesUV: DataFrame,
-                        degreeCap: Int = 4096): DataFrame = {
-    val e = edgesUV.persist(StorageLevel.MEMORY_AND_DISK)
+                        degreeCap: Int = 4096): DataFrame =
+      Pins.local(spark) { p =>
+    val e = p(edgesUV)
     // Node-cardinality; read four ways (two orientation joins, the
-    // wedge-total summary, the hub list) — persist, or the edge-list
+    // wedge-total summary, the hub list) — pin, or the edge-list
     // aggregation reruns per subscriber.
-    val deg = e.select(col("u").as("node"))
+    val deg = p(e.select(col("u").as("node"))
       .unionAll(e.select(col("v").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("d"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("node")).agg(count(lit(1)).as("d")))
     // Orient toward the higher (degree, id) endpoint. The degree
     // table is O(|nodes|) — for a product-catalog-sized node set it
     // broadcasts (two map-side joins, the edge list never shuffles
@@ -640,8 +615,7 @@ object Graph {
     // the first join. adj inherits src-partitioning through its
     // groupBy, so the s2-side of the wedge join is exchange-free too;
     // only the dst-side probe still moves the edge stream.
-    val or = oriented.repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val or = p(oriented.repartition(col("src")))
     // EDGE-ITERATOR closure: a triangle {u,v,w} oriented from its
     // lowest-priority corner has out-edges u→v, u→w and closing edge
     // v→w, so n_triangles = Σ_{(s,t)∈oriented} |N⁺(s) ∩ N⁺(t)|.
@@ -653,7 +627,7 @@ object Graph {
     // construction, the adjacency table has one row per node (O(n)
     // state, broadcast-or-shuffle joinable at any scale), and the
     // only big frame that moves is the edge list itself.
-    // Joined twice below (src side + dst side) — persist, or the
+    // Joined twice below (src side + dst side) — pinned, or the
     // groupBy+sort pass over the edge list runs twice. Degree
     // orientation already bounds out-neighborhoods at O(√m); the
     // explicit cap ([[capNeighbors]]) is the backstop for the graph
@@ -669,10 +643,9 @@ object Graph {
     // the cold side aggregates on or's resident src-partitioning with
     // no exchange (the union used to erase it and re-shuffle the full
     // oriented list into the groupBy).
-    val adj = capNeighborsThen(or, "src", "dst", degreeCap, deg)(h => h
+    val adj = p(capNeighborsThen(or, "src", "dst", degreeCap, deg)(h => h
         .groupBy(col("src"))
-        .agg(sort_array(collect_list(col("dst"))).as("nbrs")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        .agg(sort_array(collect_list(col("dst"))).as("nbrs"))))
     // Shuffle-hash for the same reason as [[edgeStrengthFrom]]'s score
     // join: the streamed edge list carries the src-side array through
     // the second join; hashing the node-cardinality adjacency avoids
@@ -685,16 +658,13 @@ object Graph {
       .select(graft.functions.SortedIntersectExpr
         .sortedIntersectCount(col("nbrs_s"), col("nbrs_t")).as("c"))
       .agg(sum(col("c")).as("n_triangles"))
-    val summary = deg.agg(count(lit(1)).as("n_nodes"),
+    deg.agg(count(lit(1)).as("n_nodes"),
         sum(col("d") * (col("d") - 1) / lit(2.0)).as("wedge_total"))
       .crossJoin(e.agg(count(lit(1)).as("n_edges")))
       .crossJoin(tri)
       .select(col("n_nodes"), col("n_edges"), col("n_triangles"),
         round(lit(3.0) * col("n_triangles") / col("wedge_total"), 6)
           .as("clustering"))
-    val rows = summary.collect()
-    e.unpersist(); or.unpersist(); adj.unpersist(); deg.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), summary.schema)
   }
 
   /** Gated lp1: SYNCHRONOUS LABEL PROPAGATION community detection
@@ -723,21 +693,12 @@ object Graph {
     */
   def labelPropagation(spark: SparkSession, dir: String,
                        rounds: Int = 3, k: Int = 25): DataFrame =
-      withoutAqe(spark) {
-    val pairs = Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      withoutAqe(spark) { Pins.local(spark) { p =>
+    val pairs = p(tradePairs(spark, dir))
     // Hash-partition the mirrored edge list on src once: every round
     // joins on that key, so the per-round exchange moves only the
     // label vector (node-cardinality), never the edges.
-    val edges = pairs
-      .unionAll(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = p(mirrored(pairs).repartition(col("src")))
 
     // Initial label = own node id (the standard seeding).
     var labels = edges.select(col("src").as("node")).distinct()
@@ -759,15 +720,12 @@ object Graph {
         .select(col("dst").as("node"), col("m.label").as("label"))
     }
 
-    val top = labels
+    labels
       .groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_nodes"))
       .orderBy(desc("n_nodes"), asc("community"))
       .limit(k)
-    val rows = top.collect() // k rows
-    pairs.unpersist(); edges.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), top.schema)
-  } // withoutAqe
+  }} // withoutAqe
 
   /** Gated sp1: BOUNDED-ROUND WEIGHTED SHORTEST PATHS (Bellman–Ford
     * BSP) over the trade graph — edge weight = the CHEAPEST trade
@@ -792,31 +750,19 @@ object Graph {
   // per-round broadcast collect is what materializes `prev`'s cache,
   // and prev is read TWICE per round (union + join) — without that
   // barrier the two consumers race and the executed plan doubles per
-  // round (the 2^rounds note below). Only the AQE scope is applied.
+  // round (the 2^rounds note below). The loop has no action of its
+  // own, so every round's pin lives until the final collect.
   def cheapestRoutes(spark: SparkSession, dir: String,
                      seedNation: Long = 0, rounds: Int = 4,
                      k: Int = 25): DataFrame =
-      withoutAqe(spark) {
-    val w = Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir),
-        col("o_orderkey") === col("l_orderkey"))
-      .groupBy((col("o_custkey") * 2).as("c"),
-        (col("l_suppkey") * 2 + 1).as("s"))
-      .agg(min(round(col("l_extendedprice") * 100).cast("long")).as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = w.select(col("c").as("src"), col("s").as("dst"), col("w"))
-      .unionAll(w.select(col("s").as("src"), col("c").as("dst"), col("w")))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      withoutAqe(spark) { Pins.local(spark) { p =>
+    val w = p(trades(spark, dir)
+      .groupBy(custNode(col("o_custkey")).as("src"), suppNode(col("l_suppkey")).as("dst"))
+      .agg(min(round(col("l_extendedprice") * 100).cast("long")).as("w")))
+    val edges = p(mirrored(w).repartition(col("src")))
     val nodes = edges.select(col("src").as("node")).distinct()
-    val seeds = Tables.customer(spark, dir)
-      .filter(col("c_nationkey") === seedNation)
-      .select((col("c_custkey") * 2).as("node"))
-      .join(nodes, Seq("node"), "left_semi")
-
-    var dist = seeds.select(col("node"), lit(0L).as("d"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var retired = List.empty[DataFrame]
+    var dist = p(seedNodes(spark, dir, seedNation, nodes)
+      .select(col("node"), lit(0L).as("d")))
     for (_ <- 1 to rounds) {
       val prev = dist
       // Relax: keep every known distance, add every one-more-edge
@@ -829,31 +775,20 @@ object Graph {
       // by round 4 (measured: 14.4 s → 5.8 s at sf0.1). The broadcast
       // collect materializes the cache; the union branch then reads
       // cached blocks instead of replaying the chain.
-      dist = prev
+      dist = p(prev
         .unionAll(edges
           .join(broadcast(prev), edges("src") === prev("node"))
           .select(col("dst").as("node"), (col("d") + col("w")).as("d")))
         .groupBy(col("node"))
-        .agg(min(col("d")).as("d"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      retired = prev :: retired
+        .agg(min(col("d")).as("d")))
     }
 
-    val top = dist
+    dist
       .filter(col("d") > 0) // non-seed nodes: seeds pin at 0
-      .select(
-        when(col("node") % 2 === 0,
-          concat(lit("c"), (col("node") / 2).cast("long").cast("string")))
-          .otherwise(
-            concat(lit("s"), ((col("node") - 1) / 2).cast("long").cast("string")))
-          .as("node"),
-        col("d").as("dist_cents"))
+      .select(nodeName(col("node")).as("node"), col("d").as("dist_cents"))
       .orderBy(asc("dist_cents"), asc("node"))
       .limit(k)
-    val rows = top.collect() // k rows
-    (dist :: w :: edges :: retired).foreach(_.unpersist())
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), top.schema)
-  } // withoutAqe
+  }} // withoutAqe
 
   /** Gated tr1: TEXTRANK KEYWORDS — weighted PageRank over the word
     * co-occurrence graph of the documents corpus (adjacent-token
@@ -877,21 +812,20 @@ object Graph {
     */
   def textRankKeywords(spark: SparkSession, dir: String,
                        iterations: Int = 3, k: Int = 20): DataFrame =
-      withoutAqe(spark) {
+      withoutAqe(spark) { Pins.local(spark) { p =>
     val toks = Tables.documents(spark, dir)
       .select(split(trim(col("text")), "\\s+").as("ws"))
       .filter(size(col("ws")) >= 2)
     // Undirected co-occurrence weight: ordered adjacency counts fold
     // into the (least, greatest) key — one corpus-scale aggregation.
-    val und = toks
+    val und = p(toks
       .select(explode(transform(
         slice(col("ws"), lit(1), size(col("ws")) - 1),
         (x, i) => struct(
           least(x, element_at(col("ws"), i + 2)).as("u"),
           greatest(x, element_at(col("ws"), i + 2)).as("v")))).as("p"))
       .groupBy(col("p.u").as("u"), col("p.v").as("v"))
-      .agg(count(lit(1)).as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("w")))
     val edges = und.select(col("u").as("src"), col("v").as("dst"), col("w"))
       .unionAll(und.select(col("v").as("src"), col("u").as("dst"), col("w")))
     // Self-loops (a word adjacent to itself) mirror into TWO equal
@@ -899,9 +833,7 @@ object Graph {
     val wdeg = edges.groupBy(col("src")).agg(sum(col("w")).as("wd"))
     // pr1's round-12 discipline: src-partitioned persisted edges +
     // shuffle-hash rank joins, one job for the whole iteration chain.
-    val edgesDeg = edges.join(broadcast(wdeg), "src")
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edgesDeg = p(edges.join(broadcast(wdeg), "src").repartition(col("src")))
     val nodes = edges.select(col("src").as("node")).distinct()
     val n = nodes.count().toDouble // control-plane scalar
     val base = 0.15 / n
@@ -921,14 +853,10 @@ object Graph {
             .as("pr"))
     }
 
-    val top = pr
-      .select(col("node").as("word"), round(col("pr"), 12).as("pr"))
+    pr.select(col("node").as("word"), round(col("pr"), 12).as("pr"))
       .orderBy(desc("pr"), asc("word"))
       .limit(k)
-    val rows = top.collect() // k rows
-    und.unpersist(); edgesDeg.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), top.schema)
-  } // withoutAqe
+  }} // withoutAqe
 
   /** Gated kc1: BOUNDED-ROUND k-CORE PEEL over the co-purchase graph
     * — iteratively drop every node with degree < `k` and the edges
@@ -963,15 +891,6 @@ object Graph {
   def kCorePeel(spark: SparkSession, dir: String,
                 k: Int = 80, rounds: Int = 8): DataFrame =
       withoutAqe(spark) {
-    // LAZY checkpoints throughout the loop (round 15): each round has
-    // exactly one action — the counter aggregate — whose map side
-    // scans every partition of the round's graph, so it materializes
-    // the checkpoint blocks as a side effect. An EAGER checkpoint ran
-    // its own materialization job first: 2 driver round-trips per
-    // round where 1 suffices (the 8-vs-32-core scaling ratio of 1.05
-    // says per-round scheduling, not data, bounds this gate at the
-    // bench SF). Lineage is still cut the moment the blocks exist.
-    var edges = copurchaseEdges(spark, dir).localCheckpoint(false)
     // THE DEGREE FRAME IS THE ROUND'S WHOLE CONTROL STATE (round 12):
     // one endpoint-union aggregation per round yields BOTH the
     // survivor set for the NEXT peel (filter d ≥ k) and the CURRENT
@@ -979,25 +898,23 @@ object Graph {
     // contributes exactly two endpoint rows). The old shape computed
     // the same aggregation inside the peel job AND re-scanned the
     // checkpointed blocks with a countDistinct for the counters —
-    // one full degree pass per round, now gone. Persisted because it
+    // one full degree pass per round, now gone. Pinned because it
     // is read twice (counter action + next round's joins); the
     // counter action doubles as its materializer.
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("node"))
         .unionAll(e.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("d"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     // One aggregate yields the counters AND the below-threshold count
     // that decides whether the NEXT peel can change anything (round
     // 14): when nBelow = 0 every remaining node has degree ≥ k, the
     // keep-set is the whole node set, both semi-joins are identities
     // and round r+1's graph equals round r's — so the rest of the
-    // trajectory provably repeats the fixpoint row. The loop
-    // short-circuits there and replicates the row instead of paying
-    // (checkpoint + degree pass) per already-converged round (the
-    // sf0.1 cascade settles by round 5 of 8; the oracle's unrolled
-    // CTEs still state all `rounds` rows — identical by the proof
-    // above, hash-checked).
+    // trajectory provably repeats the fixpoint row. The loop stops
+    // there and replicates the row instead of paying (checkpoint +
+    // degree pass) per already-converged round (the sf0.1 cascade
+    // settles by round 5 of 8; the oracle's unrolled CTEs still state
+    // all `rounds` rows — identical by the proof above, hash-checked).
     def counters(byV: DataFrame): (Long, Long, Long) = {
       val row = byV.agg(count(lit(1)).as("nn"), sum(col("d")).as("sd"),
         coalesce(sum(when(col("d") < k, 1L).otherwise(0L)), lit(0L))
@@ -1005,44 +922,49 @@ object Graph {
       (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1) / 2,
         row.getLong(2))
     }
-    var byV = degrees(edges)
-    var below = -1L // unknown before the first aggregate
     val stats = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
-    (1 to rounds).foreach { r =>
-      if (below == 0L && stats.nonEmpty) {
-        val (_, nn, ne) = stats.last
-        stats += ((r, nn, ne))
-      } else {
-      val keep = byV.filter(col("d") >= k).select(col("node"))
-      // SHUFFLE-HASH semi-joins (round 12): with broadcast semi-joins
-      // every round paid TWO broadcast-build driver round-trips (the
-      // u-side and v-side keep builds are alias-distinct subtrees, so
-      // ReuseExchange cannot dedup them) — ~4 jobs per round, the
-      // stage-scheduling exposure that made kc1 the most noisy-box-
-      // fragile gate in the r11 driver record (8.7 s noisy vs 6.3 s
-      // clean). Hinted shuffle-hash keeps the peel ONE job: keep
-      // reads the persisted degree frame (already partitioned on the
-      // join key by its own groupBy exchange), and the edge frame
-      // shuffles as executor-side work instead of driver latency.
-      val next = edges
-        .join(keep.withColumnRenamed("node", "u").hint("shuffle_hash"),
-          Seq("u"), "left_semi")
-        .join(keep.withColumnRenamed("node", "v").hint("shuffle_hash"),
-          Seq("v"), "left_semi")
-        .select(col("u"), col("v"))
-        .localCheckpoint(false) // materialized by this round's counter job
-      // The counter job evaluates keep's semi-join builds from the
-      // previous degree frame, so that cache is released only after it.
-      val prev = byV
-      byV = degrees(next)
-      val (nNodes, nEdges, nBelow) = counters(byV) // materializes byV too
-      prev.unpersist()
-      below = nBelow
-      stats += ((r, nNodes, nEdges))
-      edges = next
-      }
+    Pins.scope { p =>
+      // LAZY checkpoints throughout the loop (round 15): each round has
+      // exactly one action — the counter aggregate — whose map side
+      // scans every partition of the round's graph, so it materializes
+      // the checkpoint blocks as a side effect. An EAGER checkpoint ran
+      // its own materialization job first: 2 driver round-trips per
+      // round where 1 suffices (the 8-vs-32-core scaling ratio of 1.05
+      // says per-round scheduling, not data, bounds this gate at the
+      // bench SF). Lineage is still cut the moment the blocks exist.
+      val edges0 = copurchaseEdges(spark, dir).localCheckpoint(false)
+      var byV = p(degrees(edges0))
+      p(Pins.rounds(edges0, rounds, cutEvery = 1) { (edges, _) =>
+        val keep = byV.filter(col("d") >= k).select(col("node"))
+        // SHUFFLE-HASH semi-joins (round 12): with broadcast semi-joins
+        // every round paid TWO broadcast-build driver round-trips (the
+        // u-side and v-side keep builds are alias-distinct subtrees, so
+        // ReuseExchange cannot dedup them) — ~4 jobs per round, the
+        // stage-scheduling exposure that made kc1 the most noisy-box-
+        // fragile gate in the round-11 bench record (8.7 s noisy vs 6.3 s
+        // clean). Hinted shuffle-hash keeps the peel ONE job: keep
+        // reads the pinned degree frame (already partitioned on the
+        // join key by its own groupBy exchange), and the edge frame
+        // shuffles as executor-side work instead of driver latency.
+        edges
+          .join(keep.withColumnRenamed("node", "u").hint("shuffle_hash"),
+            Seq("u"), "left_semi")
+          .join(keep.withColumnRenamed("node", "v").hint("shuffle_hash"),
+            Seq("v"), "left_semi")
+          .select(col("u"), col("v"))
+      } { (next, r, pins) =>
+        // The counter job evaluates keep's semi-join builds from the
+        // previous degree frame, which the loop releases after it.
+        byV = pins(degrees(next))
+        val (nNodes, nEdges, nBelow) = counters(byV) // materializes next too
+        stats += ((r, nNodes, nEdges))
+        nBelow != 0
+      })
     }
-    byV.unpersist()
+    while (stats.nonEmpty && stats.length < rounds) {
+      val (_, nn, ne) = stats.last
+      stats += ((stats.length + 1, nn, ne))
+    }
     spark.createDataFrame(stats.toSeq)
       .toDF("round", "n_nodes", "n_edges")
       .select(col("round").cast("int").as("round"),
@@ -1071,9 +993,7 @@ object Graph {
   def hitsScores(spark: SparkSession, dir: String,
                  iterations: Int = 2, k: Int = 12): DataFrame =
     hitsScoresFrom(spark,
-      Tables.orders(spark, dir)
-        .join(Tables.lineitem(spark, dir),
-          col("o_orderkey") === col("l_orderkey"))
+      trades(spark, dir)
         .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
         .distinct(),
       iterations, k)
@@ -1086,8 +1006,8 @@ object Graph {
   // materialization barrier, sp1's situation); only the AQE scope.
   def hitsScoresFrom(spark: SparkSession, pairsCS: DataFrame,
                      iterations: Int, k: Int): DataFrame =
-      withoutAqe(spark) {
-    val pairs = pairsCS.persist(StorageLevel.MEMORY_AND_DISK)
+      withoutAqe(spark) { Pins.local(spark) { p =>
+    val pairs = p(pairsCS)
 
     // Quantized-BIGINT terms, DECIMAL(38,0) sums: the per-key
     // contribution sum is bounded by max-degree·1e14 and the norm
@@ -1105,27 +1025,22 @@ object Graph {
         .cast("double")).head().getDouble(0)
       math.sqrt(q / 1e9)
     }
-    // Each half-vector is persisted before its norm action: the l2
-    // fold and the next join both read it, and without the pin every
+    // Each half-vector is pinned before its norm action: the l2 fold
+    // and the next join both read it, and without the pin every
     // action would re-run the whole iteration lineage from `pairs`.
-    val pinned = collection.mutable.ArrayBuffer[DataFrame]()
     var hub = pairs.select(col("c")).distinct().withColumn("h", lit(1.0))
     var auth: DataFrame = null
     for (_ <- 1 to iterations) {
-      val araw = pairs.join(broadcast(hub), "c")
+      val araw = p(pairs.join(broadcast(hub), "c")
         .select(col("s"), round(col("h") * 1e14).cast("long").as("q"))
         .groupBy(col("s")).agg(dsum(col("q")).as("sq"))
-        .select(col("s"), (col("sq").cast("double") / 1e14).as("a"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      pinned += araw
+        .select(col("s"), (col("sq").cast("double") / 1e14).as("a")))
       val an = l2(araw, "a")
       auth = araw.select(col("s"), (col("a") / an).as("a"))
-      val hraw = pairs.join(broadcast(auth), "s")
+      val hraw = p(pairs.join(broadcast(auth), "s")
         .select(col("c"), round(col("a") * 1e14).cast("long").as("q"))
         .groupBy(col("c")).agg(dsum(col("q")).as("sq"))
-        .select(col("c"), (col("sq").cast("double") / 1e14).as("h"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      pinned += hraw
+        .select(col("c"), (col("sq").cast("double") / 1e14).as("h")))
       val hn = l2(hraw, "h")
       hub = hraw.select(col("c"), (col("h") / hn).as("h"))
     }
@@ -1137,14 +1052,8 @@ object Graph {
       .select(concat(lit("c"), col("c").cast("string")).as("node"),
         round(col("h"), 9).as("score"))
       .orderBy(desc("score"), asc("node")).limit(k)
-    val out = topA.unionAll(topH).orderBy(desc("score"), asc("node"))
-    // Materialize the 2k-row result so the persisted edge list and
-    // iteration vectors release here instead of leaking.
-    val rows = out.collect()
-    pairs.unpersist()
-    pinned.foreach(_.unpersist())
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-  } // withoutAqe
+    topA.unionAll(topH).orderBy(desc("score"), asc("node")) // 2k rows
+  }} // withoutAqe
 
   /** Gated hc1: HARMONIC CENTRALITY of a seed set via ONE multi-source
     * BFS with a BITMASK frontier — per node, one long whose bit i says
@@ -1164,63 +1073,54 @@ object Graph {
   def harmonicCentrality(spark: SparkSession, dir: String,
                          nSeeds: Int = 8, maxHops: Int = 4): DataFrame =
       withoutAqe(spark) {
-    val pairs = Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir), col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-    val edges = pairs
-      .unionAll(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // 8 smallest customer nodes: a bounded, deterministic seed panel.
-    val seedKeys = edges.select(col("src").as("node")).distinct()
-      .filter(col("node") % 2 === 0)
-      .orderBy(col("node")).limit(nSeeds)
-      .collect().map(_.getLong(0))
     import spark.implicits._
-    var mask = seedKeys.zipWithIndex
-      .map { case (nd, i) => (nd, 1L << i) }.toSeq
-      .toDF("node", "mask")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val harmonic = Array.fill(seedKeys.length)(BigDecimal(0))
-    val reached = Array.fill(seedKeys.length)(0L)
-    var h = 0
-    var live = true
-    var retired = List.empty[DataFrame]
-    while (live && h < maxHops) {
-      h += 1
-      val prop = mask.hint("shuffle_hash")
-        .join(edges, col("node") === col("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(expr("bit_or(mask)").as("nm"))
-      val merged = mask.select(col("node"), col("mask").as("om"))
-        .join(prop, Seq("node"), "full_outer")
-        .select(col("node"),
-          expr("coalesce(om, 0) | coalesce(nm, 0)").as("mask"),
-          expr("coalesce(nm, 0) & ~coalesce(om, 0)").as("newly"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val counts = merged.agg(
-        seedKeys.indices.map(i =>
-          sum(expr(s"(newly >> $i) & 1")).as(s"c$i")).head,
-        seedKeys.indices.map(i =>
-          sum(expr(s"(newly >> $i) & 1")).as(s"c$i")).tail: _*).head()
-      val w = BigDecimal(1.0 / h).setScale(12, BigDecimal.RoundingMode.HALF_UP)
-      live = false
-      seedKeys.indices.foreach { i =>
-        val c = if (counts.isNullAt(i)) 0L else counts.getLong(i)
-        if (c > 0) live = true
-        harmonic(i) += w * c
-        reached(i) += c
-      }
-      retired = merged :: mask :: retired
-      mask = merged.select(col("node"), col("mask"))
+    val (seedKeys, reached, harmonic) = Pins.scope { p =>
+      val edges = p(mirrored(tradePairs(spark, dir)).repartition(col("src")))
+      // 8 smallest customer nodes: a bounded, deterministic seed panel.
+      val seedKeys = edges.select(col("src").as("node")).distinct()
+        .filter(isCust(col("node")))
+        .orderBy(col("node")).limit(nSeeds)
+        .collect().map(_.getLong(0))
+      val harmonic = Array.fill(seedKeys.length)(BigDecimal(0))
+      val reached = Array.fill(seedKeys.length)(0L)
+      val seedMasks = seedKeys.zipWithIndex
+        .map { case (nd, i) => (nd, 1L << i) }.toSeq
+        .toDF("node", "mask")
+      // Round h's frame holds each node's mask after h hops and the
+      // bits it gained at hop h; the loop stops once no bit moves.
+      p(Pins.rounds(seedMasks, maxHops, cutEvery = 0) { (merged, _) =>
+        val mask = merged.select(col("node"), col("mask"))
+        val prop = mask.hint("shuffle_hash")
+          .join(edges, col("node") === col("src"))
+          .groupBy(col("dst").as("node"))
+          .agg(expr("bit_or(mask)").as("nm"))
+        mask.select(col("node"), col("mask").as("om"))
+          .join(prop, Seq("node"), "full_outer")
+          .select(col("node"),
+            expr("coalesce(om, 0) | coalesce(nm, 0)").as("mask"),
+            expr("coalesce(nm, 0) & ~coalesce(om, 0)").as("newly"))
+      } { (merged, h, _) =>
+        val counts = merged.agg(
+          seedKeys.indices.map(i =>
+            sum(expr(s"(newly >> $i) & 1")).as(s"c$i")).head,
+          seedKeys.indices.map(i =>
+            sum(expr(s"(newly >> $i) & 1")).as(s"c$i")).tail: _*).head()
+        val w = BigDecimal(1.0 / h).setScale(12, BigDecimal.RoundingMode.HALF_UP)
+        var live = false
+        seedKeys.indices.foreach { i =>
+          val c = if (counts.isNullAt(i)) 0L else counts.getLong(i)
+          if (c > 0) live = true
+          harmonic(i) += w * c
+          reached(i) += c
+        }
+        live
+      })
+      (seedKeys, reached, harmonic)
     }
-    (edges :: retired).foreach(_.unpersist())
-    val out = seedKeys.zipWithIndex.map { case (nd, i) =>
-      (nd / 2, reached(i), harmonic(i).bigDecimal)
-    }.toSeq.toDF("seed_custkey", "n_reached", "h_exact")
-    out.select(col("seed_custkey"), col("n_reached"),
+    seedKeys.indices.map { i =>
+      (seedKeys(i), reached(i), harmonic(i).bigDecimal)
+    }.toDF("seed_node", "n_reached", "h_exact")
+      .select(nodeKey(col("seed_node")).as("seed_custkey"), col("n_reached"),
         round(col("h_exact").cast("decimal(28,12)").cast("double"), 6)
           .as("harmonic"))
       .orderBy(col("seed_custkey"))
@@ -1246,19 +1146,17 @@ object Graph {
     * the edge-count scalar. Contributions are exact-integer ratios
     * evaluated in pinned double order, so the gate hashes.
     */
-  def modularityGate(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir),
-        col("o_orderkey") === col("l_orderkey"))
+  def modularityGate(spark: SparkSession, dir: String): DataFrame =
+      Pins.local(spark) { p =>
+    val pairs = trades(spark, dir)
       .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
       .distinct()
-    val e = pairs
+    val e = p(pairs
       .join(Tables.customer(spark, dir)
         .select(col("c_custkey").as("c"), col("c_nationkey").as("cn")), "c")
       .join(Tables.supplier(spark, dir)
         .select(col("s_suppkey").as("s"), col("s_nationkey").as("sn")), "s")
-      .select(col("cn"), col("sn"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("cn"), col("sn")))
     val m = e.count()
     val within = e.filter(col("cn") === col("sn"))
       .groupBy(col("cn").as("nation"))
@@ -1270,15 +1168,12 @@ object Graph {
         (coalesce(col("d1"), lit(0L)) + coalesce(col("d2"), lit(0L)))
           .as("degree_sum"))
     val ratio = col("degree_sum").cast("double") / (lit(2.0) * m)
-    val out = deg.join(within, Seq("nation"), "left")
+    deg.join(within, Seq("nation"), "left")
       .select(col("nation").cast("bigint").as("nation"),
         col("degree_sum").cast("bigint").as("degree_sum"),
         coalesce(col("within"), lit(0L)).cast("bigint").as("within_edges"),
         round(coalesce(col("within"), lit(0L)).cast("double") / m
           - ratio * ratio, 12).as("contrib"))
       .orderBy(col("nation"))
-    val rows = out.collect()
-    e.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 }

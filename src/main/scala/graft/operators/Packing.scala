@@ -150,7 +150,7 @@ object Packing {
     */
   def orderBatchPacking(spark: SparkSession, dir: String,
                         capCents: Long = 30000000L): DataFrame =
-      Graph.withoutAqe(spark) {
+      Graph.withoutAqe(spark) { Pins.local(spark) { p =>
     // The ordered/numbered per-customer frame is MATERIALIZED once
     // (cached, hash-partitioned on the customer key) instead of living
     // inside the recursive CTE text: the recursion unrolls to ~41
@@ -161,20 +161,19 @@ object Packing {
     // customer frontier, never this frame. The oracle keeps the pure
     // single-statement ANSI form — same semantics, DuckDB materializes
     // CTEs on its own.
-    val o = Tables.orders(spark, dir)
+    val o = p(Tables.orders(spark, dir)
       .selectExpr("o_custkey AS cust",
         "CAST(round(o_totalprice*100) AS BIGINT) AS cents",
         """CAST(row_number() OVER (PARTITION BY o_custkey
           |  ORDER BY o_orderdate, o_orderkey) AS BIGINT) AS rn""".stripMargin)
-      .repartition(col("cust"))
-      .cache()
+      .repartition(col("cust")))
     o.createOrReplaceTempView("graft_rcte_o")
     // Materialized INSIDE the AQE-off scope (a lazy return would
     // execute after the conf restore): each recursion step is an
     // exchange, and under AQE every one was a query-stage job — 95
     // jobs for this gate, the worst scheduler exposure in the suite.
     // The result is a ≤ chain-length histogram, a bounded transfer.
-    val out = spark.sql(
+    spark.sql(
       s"""WITH RECURSIVE o AS (SELECT * FROM graft_rcte_o),
          |walk AS (
          |  SELECT cust, rn, cents AS acc, CAST(1 AS BIGINT) AS batch
@@ -192,8 +191,5 @@ object Packing {
          |  CAST(count(*) AS BIGINT) AS n_customers,
          |  CAST(sum(n_orders) AS BIGINT) AS total_orders
          |FROM f GROUP BY 1 ORDER BY 1""".stripMargin)
-    val rows = out.collect()
-    o.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-  } // withoutAqe
+  }} // withoutAqe
 }

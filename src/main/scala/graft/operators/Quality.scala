@@ -344,36 +344,32 @@ object Quality {
     * [[TextAnalysis.groupSplitMap]], so this audits exactly the wall
     * s2/c4 build.
     */
-  def splitKlDivergence(spark: SparkSession, dir: String): DataFrame = {
+  def splitKlDivergence(spark: SparkSession, dir: String): DataFrame =
+      Pins.local(spark) { p =>
     val docs = Tables.documents(spark, dir)
     val d = docs
       .join(broadcast(TextAnalysis.groupSplitMap(docs)), "source")
       .select(col("lang"), (col("split") === "train").as("is_train"))
-    val counts = d.groupBy(col("lang"), col("is_train"))
-      .agg(count(lit(1)).as("n"))
-    counts.persist()
-    try {
-      val tr = counts.filter(col("is_train")).select(col("lang"), col("n").as("ntr"))
-      val te = counts.filter(!col("is_train")).select(col("lang"), col("n").as("nte"))
-      val totals = counts.agg(
-        sum(when(col("is_train"), col("n")).otherwise(0L)),
-        sum(when(!col("is_train"), col("n")).otherwise(0L))).head
-      val (nTrain, nEval) = (totals.getLong(0), totals.getLong(1))
-      val langs = counts.select(col("lang")).distinct()
-      val nLangs = langs.count()
-      val sm = langs
-        .join(tr, Seq("lang"), "left").join(te, Seq("lang"), "left")
-        .select(
-          ((coalesce(col("ntr"), lit(0L)).cast("double") + 1) / lit(nTrain + nLangs)).as("p"),
-          ((coalesce(col("nte"), lit(0L)).cast("double") + 1) / lit(nEval + nLangs)).as("q"))
-      def dec(c: Column): Column = sum(c.cast("decimal(38,18)")).cast("double")
-      val out = sm.agg(
-        round(dec(col("p") * log(col("p") / col("q"))), 6).as("kl_train_eval"),
-        round(dec(col("q") * log(col("q") / col("p"))), 6).as("kl_eval_train"))
-        .select(lit(nLangs).as("n_langs"), col("kl_train_eval"), col("kl_eval_train"))
-      val rows = out.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-    } finally { counts.unpersist(); () }
+    val counts = p(d.groupBy(col("lang"), col("is_train"))
+      .agg(count(lit(1)).as("n")))
+    val tr = counts.filter(col("is_train")).select(col("lang"), col("n").as("ntr"))
+    val te = counts.filter(!col("is_train")).select(col("lang"), col("n").as("nte"))
+    val totals = counts.agg(
+      sum(when(col("is_train"), col("n")).otherwise(0L)),
+      sum(when(!col("is_train"), col("n")).otherwise(0L))).head
+    val (nTrain, nEval) = (totals.getLong(0), totals.getLong(1))
+    val langs = counts.select(col("lang")).distinct()
+    val nLangs = langs.count()
+    val sm = langs
+      .join(tr, Seq("lang"), "left").join(te, Seq("lang"), "left")
+      .select(
+        ((coalesce(col("ntr"), lit(0L)).cast("double") + 1) / lit(nTrain + nLangs)).as("p"),
+        ((coalesce(col("nte"), lit(0L)).cast("double") + 1) / lit(nEval + nLangs)).as("q"))
+    def dec(c: Column): Column = sum(c.cast("decimal(38,18)")).cast("double")
+    sm.agg(
+      round(dec(col("p") * log(col("p") / col("q"))), 6).as("kl_train_eval"),
+      round(dec(col("q") * log(col("q") / col("p"))), 6).as("kl_eval_train"))
+      .select(lit(nLangs).as("n_langs"), col("kl_train_eval"), col("kl_eval_train"))
   }
 
   /** Gated ts4: ROLLING one-step-ahead FORECAST — per hour, an OLS
@@ -776,12 +772,12 @@ object Quality {
     * counter discipline); everything else is one aggregation over the
     * (hour × type) counts. All ratios divide exact integers.
     */
-  def anomalyContribution(spark: SparkSession, dir: String): DataFrame = {
-    val h = Tables.events(spark, dir)
+  def anomalyContribution(spark: SparkSession, dir: String): DataFrame =
+      Pins.local(spark) { p =>
+    val h = p(Tables.events(spark, dir)
       .groupBy(date_format(date_trunc("hour", col("ts")),
         "yyyy-MM-dd HH:mm:ss").as("hr"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .persist()
+      .agg(count(lit(1)).as("n")))
     val peakHr = h.groupBy(col("hr")).agg(sum(col("n")).as("tn"))
       .orderBy(desc("tn"), asc("hr")).limit(1)
       .head().getString(0) // 1 row: the anomalous hour
@@ -789,20 +785,14 @@ object Quality {
     val base = h.groupBy(col("event_type")).agg(sum(col("n")).as("bn"))
     val peak = h.filter(col("hr") === peakHr)
       .select(col("event_type"), col("n").as("pn"))
-    val out = base.join(peak, Seq("event_type"), "left")
+    base.join(peak, Seq("event_type"), "left")
       .select(col("event_type"),
         coalesce(col("pn"), lit(0L)).as("peak_n"),
         round(col("bn").cast("double") / nHours, 6).as("mean_hourly_n"),
         round(coalesce(col("pn"), lit(0L)) -
           col("bn").cast("double") / nHours, 6).as("excess"),
         lit(peakHr).as("peak_hour"))
-      .orderBy(desc("excess"), asc("event_type"))
-    // |event_type| rows — materialize, then release the cached counts
-    // deterministically (library callers shouldn't rely on the
-    // bench/verify between-gate unpersist).
-    val rows = out.collect()
-    h.unpersist(blocking = false)
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      .orderBy(desc("excess"), asc("event_type")) // |event_type| rows
   }
 
   /** Gated imp1: group-median imputation — the standard null-repair
@@ -903,21 +893,23 @@ object Quality {
     val (ranked, n) = Ranks.withGlobalRowNumber(cust,
       Seq(col("c_acctbal").asc, col("c_custkey").asc), np, "_rn")
     val labeled = ranked.withColumn("q", Ranks.ntileOfRank(col("_rn"), n, 4))
-    val cells = labeled.groupBy(col("c_nationkey"), col("q"))
-      .agg(count(lit(1)).as("nij")).persist()
-    // C(c,2) accumulated as DECIMAL(38,0): n_ij·(n_ij−1) overflows
-    // BIGINT once a cell passes ~3e9 members; the halving happens
-    // driver-side in exact BigDecimal.
-    def pairs2(c: Column): Column =
-      sum(c.cast("decimal(38,0)") * (c - 1)).cast("decimal(38,0)")
-    def half(r: Row): BigDecimal =
-      BigDecimal(r.getDecimal(0)) / 2
-    val sc = half(cells.agg(pairs2(col("nij"))).head())
-    val sa = half(cells.groupBy(col("c_nationkey")).agg(sum(col("nij")).as("a"))
-      .agg(pairs2(col("a"))).head())
-    val sb = half(cells.groupBy(col("q")).agg(sum(col("nij")).as("b"))
-      .agg(pairs2(col("b"))).head())
-    cells.unpersist(blocking = false)
+    val (sc, sa, sb) = Pins.scope { p =>
+      val cells = p(labeled.groupBy(col("c_nationkey"), col("q"))
+        .agg(count(lit(1)).as("nij")))
+      // C(c,2) accumulated as DECIMAL(38,0): n_ij·(n_ij−1) overflows
+      // BIGINT once a cell passes ~3e9 members; the halving happens
+      // driver-side in exact BigDecimal.
+      def pairs2(c: Column): Column =
+        sum(c.cast("decimal(38,0)") * (c - 1)).cast("decimal(38,0)")
+      def half(r: Row): BigDecimal =
+        BigDecimal(r.getDecimal(0)) / 2
+      val sc = half(cells.agg(pairs2(col("nij"))).head())
+      val sa = half(cells.groupBy(col("c_nationkey")).agg(sum(col("nij")).as("a"))
+        .agg(pairs2(col("a"))).head())
+      val sb = half(cells.groupBy(col("q")).agg(sum(col("nij")).as("b"))
+        .agg(pairs2(col("b"))).head())
+      (sc, sa, sb)
+    }
     // Fixed-order double algebra, mirrored verbatim in the oracle SQL.
     val cn2 = n.toDouble * (n - 1).toDouble / 2.0
     val exp = sc.toDouble - sa.toDouble * sb.toDouble / cn2
@@ -996,13 +988,13 @@ object Quality {
     * Per-depth terms are rounded to 12 dp and summed as DECIMAL —
     * order-invariant, hashable.
     */
-  def rboGate(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
+  def rboGate(spark: SparkSession, dir: String, k: Int = 20): DataFrame =
+      Pins.local(spark) { p =>
     import org.apache.spark.sql.expressions.Window
-    val g = Tables.orders(spark, dir)
+    val g = p(Tables.orders(spark, dir)
       .groupBy(col("o_custkey").as("key"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("spend"),
-        count(lit(1)).as("n"))
-      .persist()
+        count(lit(1)).as("n")))
     def topRank(metric: String, rname: String): DataFrame = {
       val w = Window.partitionBy(Ranks.boundedOnePartition(col("key")))
         .orderBy(col(metric).desc, col("key").asc)
@@ -1018,15 +1010,12 @@ object Quality {
     val ov = weights.join(m, col("mx") <= col("d"), "left")
       .groupBy(col("d"), col("wt"))
       .agg(count(col("mx")).as("overlap"))
-    val out = ov.agg(
+    ov.agg(
       sum(round(col("wt").cast("double") * col("overlap") / col("d"), 12)
         .cast("decimal(20,12)")).as("s"),
       max(when(col("d") === k, col("overlap"))).as("ov_k"))
       .select(lit("spend").as("metric_a"), lit("order_count").as("metric_b"),
         col("ov_k").cast("bigint").as("overlap_at_20"),
         round(lit(0.1) * col("s").cast("double"), 9).as("rbo"))
-    val rows = out.collect()
-    g.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 }

@@ -811,11 +811,11 @@ object Relational {
     * from cells, per-cell χ² terms quantized to 9 dp and summed as
     * DECIMAL (order-invariant), the final √ in pinned double order.
     */
-  def cramersV(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.events(spark, dir)
+  def cramersV(spark: SparkSession, dir: String): DataFrame =
+      Pins.local(spark) { p =>
+    val o = p(Tables.events(spark, dir)
       .groupBy(col("event_type"), (col("user_id") % 5).as("cohort"))
-      .agg(count(lit(1)).as("obs"))
-      .persist()
+      .agg(count(lit(1)).as("obs")))
     val rt = o.groupBy(col("event_type")).agg(sum(col("obs")).as("rtot"))
     val ct = o.groupBy(col("cohort")).agg(sum(col("obs")).as("ctot"))
     val tot = o.agg(sum(col("obs")).cast("bigint"),
@@ -826,15 +826,12 @@ object Relational {
         .as("exp"), col("obs"))
       .select(round((col("obs") - col("exp")) * (col("obs") - col("exp"))
         / col("exp"), 9).cast("decimal(28,9)").as("term"))
-    val out = terms.agg(sum(col("term")).as("chi2d"))
+    terms.agg(sum(col("term")).as("chi2d"))
       .select(lit(n).as("n_rows"), lit(r).as("r_levels"),
         lit(c).as("c_levels"),
         round(col("chi2d").cast("double"), 6).as("chi2"),
         round(sqrt(col("chi2d").cast("double")
           / (lit(n.toDouble) * math.min(r - 1, c - 1))), 9).as("cramers_v"))
-    val rows = out.collect()
-    o.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
   /** Gated mi1: mutual information + marginal entropies between two
@@ -849,34 +846,28 @@ object Relational {
     * task scheduling); only the single total-count scalar crosses the
     * control plane.
     */
-  def mutualInformation(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Tables.events(spark, dir)
+  def mutualInformation(spark: SparkSession, dir: String): DataFrame =
+      Pins.local(spark) { p =>
+    val cells = p(Tables.events(spark, dir)
       .groupBy(col("event_type").as("x"), (col("user_id") % 4).as("y"))
-      .agg(count(lit(1)).as("nxy"))
-    cells.persist()
-    try {
-      val mx = cells.groupBy(col("x")).agg(sum(col("nxy")).as("nx"))
-      val my = cells.groupBy(col("y")).agg(sum(col("nxy")).as("ny"))
-      val n = cells.agg(sum(col("nxy"))).head.getLong(0) // control-plane scalar
-      def decSum(c: Column): Column = sum(c.cast("decimal(38,18)")).cast("double")
-      val mi = cells.join(broadcast(mx), "x").join(broadcast(my), "y")
-        .select(((col("nxy").cast("double") / n)
-          * log(col("nxy").cast("double") * n
-            / (col("nx").cast("double") * col("ny")))).as("mi_t"))
-        .agg(round(decSum(col("mi_t")), 6).as("mi_nats"))
-      val hx = mx.select((negate(col("nx").cast("double") / n)
-          * log(col("nx").cast("double") / n)).as("t"))
-        .agg(round(decSum(col("t")), 6).as("h_x"))
-      val hy = my.select((negate(col("ny").cast("double") / n)
-          * log(col("ny").cast("double") / n)).as("t"))
-        .agg(round(decSum(col("t")), 6).as("h_y"))
-      val out = mi.crossJoin(hx).crossJoin(hy) // three 1-row frames
-        .select(lit(n).as("n"), col("mi_nats"), col("h_x"), col("h_y"))
-      // Materialize the 1-row result so the cells cache can be
-      // released here (pageRank's pattern) instead of leaking.
-      val rows = out.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-    } finally { cells.unpersist(); () }
+      .agg(count(lit(1)).as("nxy")))
+    val mx = cells.groupBy(col("x")).agg(sum(col("nxy")).as("nx"))
+    val my = cells.groupBy(col("y")).agg(sum(col("nxy")).as("ny"))
+    val n = cells.agg(sum(col("nxy"))).head.getLong(0) // control-plane scalar
+    def decSum(c: Column): Column = sum(c.cast("decimal(38,18)")).cast("double")
+    val mi = cells.join(broadcast(mx), "x").join(broadcast(my), "y")
+      .select(((col("nxy").cast("double") / n)
+        * log(col("nxy").cast("double") * n
+          / (col("nx").cast("double") * col("ny")))).as("mi_t"))
+      .agg(round(decSum(col("mi_t")), 6).as("mi_nats"))
+    val hx = mx.select((negate(col("nx").cast("double") / n)
+        * log(col("nx").cast("double") / n)).as("t"))
+      .agg(round(decSum(col("t")), 6).as("h_x"))
+    val hy = my.select((negate(col("ny").cast("double") / n)
+        * log(col("ny").cast("double") / n)).as("t"))
+      .agg(round(decSum(col("t")), 6).as("h_y"))
+    mi.crossJoin(hx).crossJoin(hy) // three 1-row frames
+      .select(lit(n).as("n"), col("mi_nats"), col("h_x"), col("h_y"))
   }
 
   /** Gated ols1: closed-form simple linear regression
@@ -1029,12 +1020,12 @@ object Relational {
     * exactness contract).
     */
   def frequentItemTriplesFrom(spark: SparkSession, items: DataFrame,
-                              minSupport: Long, basketCap: Int): DataFrame = {
+                              minSupport: Long, basketCap: Int): DataFrame =
+      Pins.local(spark) { pin =>
     // Basket pairs via ONE groupBy + in-row expansion ([[basketPairs]],
     // round 14; was a per-basket self-join). p stays hash-partitioned
     // on the basket key end to end, which the assembly below reuses.
-    val p = basketPairs(items, basketCap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = pin(basketPairs(items, basketCap))
     // L2: corpus-frequent pairs — node-scale, reused twice. BROADCAST
     // to both prunes (the classic distributed-apriori shape: the
     // candidate set rides to the data): the semi-joins then preserve
@@ -1070,13 +1061,11 @@ object Relational {
         col("t.part_c").as("part_c"))
       .join(l2.select(col("pa").as("part_a"), col("pb").as("part_c")),
         Seq("part_a", "part_c"), "left_semi")
-    val out = cand.groupBy(col("part_a"), col("part_b"), col("part_c"))
+    // frequent triples: corpus-sparse by construction
+    cand.groupBy(col("part_a"), col("part_b"), col("part_c"))
       .agg(count(lit(1)).as("support"))
       .filter(col("support") >= minSupport)
       .orderBy(desc("support"), col("part_a"), col("part_b"), col("part_c"))
-    val rows = out.collect() // frequent triples: corpus-sparse by construction
-    p.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
   /** Gated q7: TPC-H Q7-shaped BI-NATION TRADE VOLUME — revenue
@@ -1694,21 +1683,21 @@ object Relational {
     * expose the sketch error. Same deterministic md5-based HLL as
     * [[hllDistinctUsers]], so DuckDB replays it bit-for-bit.
     */
-  def hllSetOps(spark: SparkSession, dir: String): DataFrame = {
+  def hllSetOps(spark: SparkSession, dir: String): DataFrame =
+      Pins.local(spark) { p =>
     val e = Tables.events(spark, dir)
       .filter(col("value") > 100 &&
         col("event_type").isin("click", "purchase"))
       .select(col("event_type").as("t"), col("user_id"))
     val h = conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
       .cast("long")
-    val regs = e
+    val regs = p(e
       .select(col("t"), shiftright(h, 54).as("bucket"),
         h.bitwiseAND(lit((1L << 54) - 1)).as("rem"))
       .select(col("t"), col("bucket"),
         when(col("rem") === 0, lit(55))
           .otherwise(lit(55) - length(bin(col("rem")))).as("rank"))
-      .groupBy(col("t"), col("bucket")).agg(max(col("rank")).as("M"))
-      .persist()
+      .groupBy(col("t"), col("bucket")).agg(max(col("rank")).as("M")))
     // sketch merge: union registers = per-bucket max over cohorts
     val regsU = regs.groupBy(col("bucket")).agg(max(col("M")).as("M"))
 
@@ -1734,17 +1723,12 @@ object Relational {
       count(lit(1)).as("exact_union"),
       sum(col("a") * col("b")).as("exact_intersect"))
 
-    val out = est(regs.filter(col("t") === "purchase"), "est_a")
+    est(regs.filter(col("t") === "purchase"), "est_a")
       .crossJoin(est(regs.filter(col("t") === "click"), "est_b"))
       .crossJoin(est(regsU, "est_union"))
       .withColumn("est_intersect",
         round(col("est_a") + col("est_b") - col("est_union"), 6))
-      .crossJoin(exact)
-    // One-row result: materialize it so the persisted register frame
-    // can be released here instead of leaking into the session.
-    val rows = out.collect()
-    regs.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      .crossJoin(exact) // one row
   }
 
   /** Wide→long reshape (gate p2): `Dataset.unpivot` — the MELT

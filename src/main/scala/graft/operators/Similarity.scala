@@ -491,31 +491,31 @@ object Similarity {
       .collect().map(_.getSeq[Double](1).toArray)
     var cbs: Array[Array[Array[Double]]] = Array.tabulate(PqM)(m =>
       seed.map(v => v.slice(m * PqSubDim, (m + 1) * PqSubDim)))
-    val subs = corpus
-      .select(col("vec_id"), posexplode(transform(sequence(lit(0), lit(PqM - 1)),
-        m => slice(col("v"), m * PqSubDim + lit(1), lit(PqSubDim)))))
-      .toDF("vec_id", "m", "sv")
-      .cache()
-    for (_ <- 1 to iters) {
-      // DECIMAL(25,10) means (km1's order-invariant trick) — what
-      // lets ss4 carry a full DuckDB oracle instead of rows-only.
-      val updated = subs.withColumn("code", pqAssign(cbs))
-        .select(col("m"), col("code"), posexplode(col("sv")))
-        .toDF("m", "code", "dim", "x")
-        .groupBy(col("m"), col("code"), col("dim"))
-        .agg((sum(round(col("x"), 10).cast("decimal(25,10)")).cast("double")
-          / count(lit(1))).as("c"))
-        .groupBy(col("m"), col("code"))
-        .agg(sort_array(collect_list(struct(col("dim"), col("c")))).as("cs"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1)) ->
-          r.getSeq[org.apache.spark.sql.Row](2).map(_.getDouble(1)).toArray)
-        .toMap
-      // Keyed carry-forward: an empty cell keeps its previous centroid.
-      cbs = Array.tabulate(PqM)(m => Array.tabulate(PqK)(ki =>
-        updated.getOrElse((m, ki), cbs(m)(ki))))
+    Pins.scope { p =>
+      val subs = p(corpus
+        .select(col("vec_id"), posexplode(transform(sequence(lit(0), lit(PqM - 1)),
+          m => slice(col("v"), m * PqSubDim + lit(1), lit(PqSubDim)))))
+        .toDF("vec_id", "m", "sv"))
+      for (_ <- 1 to iters) {
+        // DECIMAL(25,10) means (km1's order-invariant trick) — what
+        // lets ss4 carry a full DuckDB oracle instead of rows-only.
+        val updated = subs.withColumn("code", pqAssign(cbs))
+          .select(col("m"), col("code"), posexplode(col("sv")))
+          .toDF("m", "code", "dim", "x")
+          .groupBy(col("m"), col("code"), col("dim"))
+          .agg((sum(round(col("x"), 10).cast("decimal(25,10)")).cast("double")
+            / count(lit(1))).as("c"))
+          .groupBy(col("m"), col("code"))
+          .agg(sort_array(collect_list(struct(col("dim"), col("c")))).as("cs"))
+          .collect()
+          .map(r => (r.getInt(0), r.getInt(1)) ->
+            r.getSeq[org.apache.spark.sql.Row](2).map(_.getDouble(1)).toArray)
+          .toMap
+        // Keyed carry-forward: an empty cell keeps its previous centroid.
+        cbs = Array.tabulate(PqM)(m => Array.tabulate(PqK)(ki =>
+          updated.getOrElse((m, ki), cbs(m)(ki))))
+      }
     }
-    subs.unpersist()
     cbs
   }
 
@@ -905,34 +905,28 @@ object Similarity {
   def kcenterCoreset(spark: SparkSession, dir: String,
                      k: Int = 8, seedId: Long = 0L): DataFrame = {
     import spark.implicits._
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"),
-        VectorOps.toDoubleArray(col("embedding")).as("v"))
-      .persist()
     def centerLit(cv: Array[Double]): Column = array(cv.map(lit): _*)
     def distTo(cv: Array[Double]): Column =
       round(lit(1.0) - VectorOps.cosine(col("v"), centerLit(cv)), 6)
-    val seed = e.filter(col("vec_id") === seedId).select(col("v"))
-      .head().getSeq[Double](0).toArray
-    var cur = e.select(col("vec_id"), col("v"), distTo(seed).as("md")).persist()
     val out = collection.mutable.ListBuffer[(Int, Long, Double)]()
-    for (t <- 1 until k) {
-      val top = cur.orderBy(col("md").desc, col("vec_id").asc)
-        .select(col("vec_id"), col("md"), col("v")).head() // 1-row control plane
-      val cid = top.getLong(0)
-      out += ((t, cid, top.getDouble(1)))
-      val cv = top.getSeq[Double](2).toArray
-      val next = cur
-        .select(col("vec_id"), col("v"),
-          least(col("md"), distTo(cv)).as("md"))
-        .persist()
-      next.count()
-      cur.unpersist()
-      cur = next
+    Pins.scope { p =>
+      val e = p(Tables.embeddings(spark, dir)
+        .select(col("vec_id"),
+          VectorOps.toDoubleArray(col("embedding")).as("v")))
+      val seed = e.filter(col("vec_id") === seedId).select(col("v"))
+        .head().getSeq[Double](0).toArray
+      val init = e.select(col("vec_id"), col("v"), distTo(seed).as("md"))
+      val last = p(Pins.rounds(init, k - 1, cutEvery = 0) { (cur, t) =>
+        val top = cur.orderBy(col("md").desc, col("vec_id").asc)
+          .select(col("vec_id"), col("md"), col("v")).head() // 1-row control plane
+        val cid = top.getLong(0)
+        out += ((t, cid, top.getDouble(1)))
+        val cv = top.getSeq[Double](2).toArray
+        cur.select(col("vec_id"), col("v"), least(col("md"), distTo(cv)).as("md"))
+      } { (next, _, _) => next.count(); true })
+      val coverage = last.agg(max(col("md"))).head().getDouble(0)
+      out += ((k, -1L, coverage))
     }
-    val coverage = cur.agg(max(col("md"))).head().getDouble(0)
-    out += ((k, -1L, coverage))
-    cur.unpersist(); e.unpersist()
     out.toSeq.toDF("sel_round", "center_id", "radius")
       .orderBy(col("sel_round"))
   }
@@ -969,49 +963,49 @@ object Similarity {
         round(VectorOps.cosine(col("qv"), col("v")), 6).as("rel"))
     val byRel = Window.partitionBy(col("query_id"))
       .orderBy(col("rel").desc, col("vec_id").asc)
-    val cand = scored
-      .withColumn("rk", row_number().over(byRel))
-      .filter(col("rk") <= pool)
-      .drop("rk")
-      .persist()
-    // Each step's pick set is localCheckpoint'ed (one tiny nq-row
-    // action per step) so step t's LOGICAL plan starts from a flat
-    // LogicalRDD — each step references the selected set twice
-    // (anti-join + sim-join), so without truncation the plan TREE
-    // doubles per step and analysis alone goes exponential (measured:
-    // step5 11.4 s with persist-only, ~0.3 s flat). Same discipline
-    // as the BSP graph loops.
-    var all = cand.withColumn("rk", row_number().over(byRel))
-      .filter(col("rk") === 1)
-      .select(col("query_id"), col("vec_id"), col("v"), col("rel"),
-        lit(1).as("step"), col("rel").as("mmr"))
-      .localCheckpoint()
-    for (t <- 2 to k) {
-      val selected = all.select(col("query_id").as("sq"),
-        col("vec_id").as("sid"), col("v").as("sv"))
-      val rest = cand.join(selected,
-        col("query_id") === col("sq") && col("vec_id") === col("sid"),
-        "left_anti")
-      val maxSim = rest.join(selected, col("query_id") === col("sq"))
-        .groupBy(col("query_id"), col("vec_id"))
-        .agg(max(round(VectorOps.cosine(col("v"), col("sv")), 6)).as("maxsim"))
-      val stepScores = rest.join(maxSim, Seq("query_id", "vec_id"))
-        .select(col("query_id"), col("vec_id"), col("v"), col("rel"),
-          round(lit(lambda) * col("rel") -
-            lit(1.0 - lambda) * col("maxsim"), 6).as("mmr"))
-      val byMmr = Window.partitionBy(col("query_id"))
-        .orderBy(col("mmr").desc, col("vec_id").asc)
-      val pick = stepScores.withColumn("rk", row_number().over(byMmr))
+    Pins.scope { p =>
+      val cand = p(scored
+        .withColumn("rk", row_number().over(byRel))
+        .filter(col("rk") <= pool)
+        .drop("rk"))
+      // Each step's pick set is localCheckpoint'ed (one tiny nq-row
+      // action per step) so step t's LOGICAL plan starts from a flat
+      // LogicalRDD — each step references the selected set twice
+      // (anti-join + sim-join), so without truncation the plan TREE
+      // doubles per step and analysis alone goes exponential (measured:
+      // step5 11.4 s with persist-only, ~0.3 s flat). Same discipline
+      // as the BSP graph loops.
+      var all = cand.withColumn("rk", row_number().over(byRel))
         .filter(col("rk") === 1)
         .select(col("query_id"), col("vec_id"), col("v"), col("rel"),
-          lit(t).as("step"), col("mmr"))
-      all = all.unionByName(pick).localCheckpoint()
+          lit(1).as("step"), col("rel").as("mmr"))
+        .localCheckpoint()
+      for (t <- 2 to k) {
+        val selected = all.select(col("query_id").as("sq"),
+          col("vec_id").as("sid"), col("v").as("sv"))
+        val rest = cand.join(selected,
+          col("query_id") === col("sq") && col("vec_id") === col("sid"),
+          "left_anti")
+        val maxSim = rest.join(selected, col("query_id") === col("sq"))
+          .groupBy(col("query_id"), col("vec_id"))
+          .agg(max(round(VectorOps.cosine(col("v"), col("sv")), 6)).as("maxsim"))
+        val stepScores = rest.join(maxSim, Seq("query_id", "vec_id"))
+          .select(col("query_id"), col("vec_id"), col("v"), col("rel"),
+            round(lit(lambda) * col("rel") -
+              lit(1.0 - lambda) * col("maxsim"), 6).as("mmr"))
+        val byMmr = Window.partitionBy(col("query_id"))
+          .orderBy(col("mmr").desc, col("vec_id").asc)
+        val pick = stepScores.withColumn("rk", row_number().over(byMmr))
+          .filter(col("rk") === 1)
+          .select(col("query_id"), col("vec_id"), col("v"), col("rel"),
+            lit(t).as("step"), col("mmr"))
+        all = all.unionByName(pick).localCheckpoint()
+      }
+      // `all` is an eager checkpoint: the result no longer reads cand.
+      all.select(col("query_id"), col("step"),
+          col("vec_id").as("selected_id"), col("rel"), col("mmr"))
+        .orderBy(col("query_id"), col("step"))
     }
-    val res = all.select(col("query_id"), col("step"),
-        col("vec_id").as("selected_id"), col("rel"), col("mmr"))
-      .orderBy(col("query_id"), col("step"))
-    cand.unpersist()
-    res
   }
 
   /** Gated lof1: LOCAL OUTLIER FACTOR (Breunig et al. 2000) — the
@@ -1032,22 +1026,20 @@ object Similarity {
     * buckets) instead of the all-pairs frame.
     */
   def lofGate(spark: SparkSession, dir: String, k: Int = 5,
-              topN: Int = 20): DataFrame = {
-    val pts = Tables.embeddings(spark, dir)
+              topN: Int = 20): DataFrame = Pins.local(spark) { p =>
+    val pts = p(Tables.embeddings(spark, dir)
       .filter(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("id"),
         VectorOps.toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", sqrt(VectorOps.norm2(col("v"))))
-      .persist()
+      .withColumn("nrm", sqrt(VectorOps.norm2(col("v")))))
     val a = pts.select(col("id").as("pa"), col("v").as("va"),
       col("nrm").as("na"))
     val b = pts.select(col("id").as("pb"), col("v").as("vb"),
       col("nrm").as("nb"))
-    val pairs = a.join(b, col("pa") =!= col("pb"))
+    val pairs = p(a.join(b, col("pa") =!= col("pb"))
       .select(col("pa"), col("pb"),
         round(lit(1.0) - VectorOps.dot(col("va"), col("vb"))
-          / (col("na") * col("nb")), 6).cast("decimal(10,6)").as("dist"))
-      .persist()
+          / (col("na") * col("nb")), 6).cast("decimal(10,6)").as("dist")))
     val w = Window.partitionBy(col("pa"))
       .orderBy(col("dist").asc, col("pb").asc)
     val kd = pairs.withColumn("rn", row_number().over(w))
@@ -1072,7 +1064,7 @@ object Similarity {
     val lrd = reach.groupBy(col("pa").as("id"))
       .agg(round(count(lit(1)).cast("double") / sum(col("rd")).cast("double"),
         9).cast("decimal(28,9)").as("lrd"))
-    val out = nk
+    nk
       .join(lrd.select(col("id").as("pb"), col("lrd").as("lrdo")), "pb")
       .join(lrd.select(col("id").as("pa"), col("lrd").as("lrdp")), "pa")
       .groupBy(col("pa"))
@@ -1083,9 +1075,6 @@ object Similarity {
           / col("lrdp").cast("double"), 6).as("lof"))
       .orderBy(desc("lof"), asc("vec_id"))
       .limit(topN)
-    val rows = out.collect()
-    pts.unpersist(); pairs.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
   /** Gated xl1: MARGIN-BASED PAIR MINING — the bitext-mining readout
@@ -1147,7 +1136,7 @@ object Similarity {
     */
   def marginMining(spark: SparkSession, dir: String, k: Int = 4,
                    threshold: Double = 1.05, queryShards: Int = 16,
-                   shard: Int = 0): DataFrame = {
+                   shard: Int = 0): DataFrame = Pins.local(spark) { p =>
     require(queryShards >= 1 && shard >= 0 && shard < queryShards)
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), VectorOps.toDoubleArray(col("embedding")).as("v"))
@@ -1158,16 +1147,12 @@ object Similarity {
       .select(col("vec_id").as("src_id"), col("v").as("sv"), col("nrm").as("snrm"))
     val tgt = e.filter(col("vec_id") % 2 === 1)
       .select(col("vec_id").as("tgt_id"), col("v").as("tv"), col("nrm").as("tnrm"))
-    val pairs = src.crossJoin(broadcast(tgt))
+    val pairs = p(src.crossJoin(broadcast(tgt))
       .select(col("src_id"), col("tgt_id"),
         round(VectorOps.dot(col("sv"), col("tv")) / (col("snrm") * col("tnrm")), 6)
           .as("score"))
-      .withColumn("si", round(col("score") * 1e6, 0).cast("long"))
-      .persist()
-    val out = marginReadout(pairs, k, threshold)
-    val rows = out.collect()
-    pairs.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      .withColumn("si", round(col("score") * 1e6, 0).cast("long")))
+    marginReadout(pairs, k, threshold)
   }
 
   /** The margin arithmetic over a persisted (src_id, tgt_id, score, si)
@@ -1225,11 +1210,11 @@ object Similarity {
     * gate hash-checks like ss2, instead of settling for a recall spec.
     */
   def marginMiningAnn(spark: SparkSession, dir: String, k: Int = 4,
-                      threshold: Double = 1.05): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
+                      threshold: Double = 1.05): DataFrame =
+      Pins.local(spark) { p =>
+    val e = p(Tables.embeddings(spark, dir)
       .select(col("vec_id"), VectorOps.toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", sqrt(VectorOps.norm2(col("v"))))
-      .cache()
+      .withColumn("nrm", sqrt(VectorOps.norm2(col("v")))))
     val src = e.filter(col("vec_id") % 2 === 0)
       .select(col("vec_id").as("src_id"), col("v").as("sv"), col("nrm").as("snrm"))
     val tgt = e.filter(col("vec_id") % 2 === 1)
@@ -1244,18 +1229,13 @@ object Similarity {
       .join(buckets(tgt, "tgt_id", "tv"), Seq("table_idx", "bucket"))
       .select(col("src_id"), col("tgt_id"))
       .distinct()
-    val pairs = cand
+    val pairs = p(cand
       .join(src, "src_id")
       .join(tgt, "tgt_id")
       .select(col("src_id"), col("tgt_id"),
         round(VectorOps.dot(col("sv"), col("tv")) / (col("snrm") * col("tnrm")), 6)
           .as("score"))
-      .withColumn("si", round(col("score") * 1e6, 0).cast("long"))
-      .persist()
-    val out = marginReadout(pairs, k, threshold)
-    val rows = out.collect()
-    pairs.unpersist()
-    e.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      .withColumn("si", round(col("score") * 1e6, 0).cast("long")))
+    marginReadout(pairs, k, threshold)
   }
 }

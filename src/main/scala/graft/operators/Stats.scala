@@ -239,18 +239,20 @@ object Stats {
     * statistics (degree products overflow BIGINT at corpus scale).
     */
   def degreeAssortativity(spark: SparkSession, dir: String): DataFrame =
-      Graph.withoutAqe(spark) {
+      Graph.withoutAqe(spark) { Pins.local(spark) { p =>
     val e = Graph.copurchaseEdges(spark, dir)
     // Both orientations: assortativity is defined over the directed
     // double cover of an undirected graph.
-    val directed = e.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(e.select(col("v").as("src"), col("u").as("dst")))
-      .persist()
+    val directed = p(e.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(e.select(col("v").as("src"), col("u").as("dst"))))
     val deg = directed.groupBy(col("src")).agg(count(lit(1)).as("d"))
     val paired = directed
       .join(broadcast(deg.select(col("src"), col("d").as("du"))), "src")
       .join(broadcast(deg.select(col("src").as("dst"), col("d").as("dv"))), "dst")
-    val out = paired.agg(count(lit(1)).as("np"),
+    // The 1-row result is collected INSIDE the scope: returning the
+    // lazy frame would re-execute the whole chain unpinned, outside the
+    // AQE scope.
+    paired.agg(count(lit(1)).as("np"),
         sum(col("du")).as("sx"), sum(col("dv")).as("sy"),
         sum(col("du").cast("decimal(38,0)") * col("dv")).as("sxy"),
         sum(col("du").cast("decimal(38,0)") * col("du")).as("sxx"),
@@ -262,13 +264,7 @@ object Stats {
             * sqrt(d("np") * d("syy") - d("sy") * d("sy"))),
           6).as("assortativity")
       })
-    // Materialize the 1-row result INSIDE the scope (and before
-    // releasing the directed cover): returning the lazy frame would
-    // re-execute the whole chain unpersisted, outside the AQE scope.
-    val rows = out.collect()
-    directed.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-  } // withoutAqe (round 12: single-shot, but AQE's per-exchange query
+  }} // withoutAqe (round 12: single-shot, but AQE's per-exchange query
     // stages made this 19 jobs; statically planned it is ~4)
 
   /** Gated ar1: ASSOCIATION RULES over frequent basket pairs —
@@ -363,53 +359,46 @@ object Stats {
     * the value-tie groups; Theil-Sen is the exact interpolated median
     * of pairwise slopes (both engines sort the same ~3M doubles).
     */
-  def mannKendallTrend(spark: SparkSession, dir: String): DataFrame = {
-    val series = Tables.orders(spark, dir)
+  def mannKendallTrend(spark: SparkSession, dir: String): DataFrame =
+      Pins.local(spark) { p =>
+    // spine: ≤ calendar-days rows, read by three consumers
+    val series = p(Tables.orders(spark, dir)
       .groupBy(datediff(to_date(col("o_orderdate")), lit("1970-01-01"))
         .cast("bigint").as("di"))
       .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        .cast("decimal(38,0)")).cast("bigint").as("rev"))
-      .persist() // spine: ≤ calendar-days rows, read by three consumers
-    try {
-      val a = series.select(col("di").as("i"), col("rev").as("ri"))
-      val b = series.select(col("di").as("j"), col("rev").as("rj"))
-      // Slope spelled once, identically to the oracle's expression.
-      val pairs = broadcast(a).join(b, col("i") < col("j"))
-        .select(col("ri"), col("rj"),
-          expr("(CAST(rj - ri AS DOUBLE) / 100.0D) / CAST(j - i AS DOUBLE)")
-            .as("slope"))
-        .persist() // the histogram-refinement median scans this 2-3×
-      try {
-        val sAgg = pairs.agg(
-          sum(when(col("rj") > col("ri"), 1L)
-            .when(col("rj") < col("ri"), -1L).otherwise(0L)).as("s_stat"))
-        // Exact interpolated median via scan-bounded histogram
-        // refinement (x3 discipline) — `percentile` would buffer every
-        // distinct slope in ONE aggregation buffer, which is exactly
-        // the single-funnel shape this module exists to avoid.
-        val Seq((_, Seq(med))) =
-          Quantiles.exactQuantiles(pairs, "slope", Seq("m" -> 0.5))
-        val nDays = series.agg(count(lit(1)).as("n_days"))
-        val ties = series.groupBy(col("rev")).agg(count(lit(1)).as("t"))
-          .filter(col("t") > 1)
-          .agg(coalesce(sum(col("t") * (col("t") - 1) * (col("t") * 2 + 5)),
-            lit(0L)).as("tie_sum"))
-        def d(c: String) = col(c).cast("double")
-        val varS = (d("n_days") * (d("n_days") - 1) * (d("n_days") * 2 + 5)
-          - d("tie_sum")) / 18.0
-        val out = sAgg.crossJoin(nDays).crossJoin(ties) // three 1-row frames
-          .select(col("n_days"), col("s_stat"),
-            round(varS, 6).as("var_s"),
-            round(when(col("s_stat") > 0, (d("s_stat") - 1) / sqrt(varS))
-              .when(col("s_stat") < 0, (d("s_stat") + 1) / sqrt(varS))
-              .otherwise(lit(0.0)), 6).as("z_score"),
-            round(lit(med), 6).as("theil_sen_slope"))
-        // Materialize the 1-row result so both caches release here
-        // (mutualInformation's pattern) instead of leaking.
-        val rows = out.collect()
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally { pairs.unpersist(); () }
-    } finally { series.unpersist(); () }
+        .cast("decimal(38,0)")).cast("bigint").as("rev")))
+    val a = series.select(col("di").as("i"), col("rev").as("ri"))
+    val b = series.select(col("di").as("j"), col("rev").as("rj"))
+    // Slope spelled once, identically to the oracle's expression; the
+    // histogram-refinement median scans the pairs 2-3×.
+    val pairs = p(broadcast(a).join(b, col("i") < col("j"))
+      .select(col("ri"), col("rj"),
+        expr("(CAST(rj - ri AS DOUBLE) / 100.0D) / CAST(j - i AS DOUBLE)")
+          .as("slope")))
+    val sAgg = pairs.agg(
+      sum(when(col("rj") > col("ri"), 1L)
+        .when(col("rj") < col("ri"), -1L).otherwise(0L)).as("s_stat"))
+    // Exact interpolated median via scan-bounded histogram
+    // refinement (x3 discipline) — `percentile` would buffer every
+    // distinct slope in ONE aggregation buffer, which is exactly
+    // the single-funnel shape this module exists to avoid.
+    val Seq((_, Seq(med))) =
+      Quantiles.exactQuantiles(pairs, "slope", Seq("m" -> 0.5))
+    val nDays = series.agg(count(lit(1)).as("n_days"))
+    val ties = series.groupBy(col("rev")).agg(count(lit(1)).as("t"))
+      .filter(col("t") > 1)
+      .agg(coalesce(sum(col("t") * (col("t") - 1) * (col("t") * 2 + 5)),
+        lit(0L)).as("tie_sum"))
+    def d(c: String) = col(c).cast("double")
+    val varS = (d("n_days") * (d("n_days") - 1) * (d("n_days") * 2 + 5)
+      - d("tie_sum")) / 18.0
+    sAgg.crossJoin(nDays).crossJoin(ties) // three 1-row frames
+      .select(col("n_days"), col("s_stat"),
+        round(varS, 6).as("var_s"),
+        round(when(col("s_stat") > 0, (d("s_stat") - 1) / sqrt(varS))
+          .when(col("s_stat") < 0, (d("s_stat") + 1) / sqrt(varS))
+          .otherwise(lit(0.0)), 6).as("z_score"),
+        round(lit(med), 6).as("theil_sen_slope"))
   }
 
   /** Gated spear1: SPEARMAN rank correlation between extended price
@@ -485,50 +474,49 @@ object Stats {
     */
   def conformalCalibration(spark: SparkSession, dir: String,
                            alpha: Double = 0.1): DataFrame = {
-    val s = Tables.events(spark, dir)
-      .select(col("event_type"),
-        round(col("value") * 100).cast("long").as("vc"),
-        (col("event_id") % 2).as("half"))
-      .persist()
-    val cal = s.filter(col("half") === 0)
-    val meds = Quantiles.exactQuantiles(cal, "vc", Seq("p50" -> 0.5),
-        groupCols = Seq("event_type"))
-      .map { case (key, vals) =>
-        key.head.asInstanceOf[String] -> Quantiles.round6(vals.head) }
-    def medCol: Column = meds.foldLeft(lit(Double.NaN)) {
-      case (acc, (t, v)) => when(col("event_type") === t, lit(v)).otherwise(acc)
+    val out = Pins.local(spark) { p =>
+      val s = p(Tables.events(spark, dir)
+        .select(col("event_type"),
+          round(col("value") * 100).cast("long").as("vc"),
+          (col("event_id") % 2).as("half")))
+      val cal = s.filter(col("half") === 0)
+      val meds = Quantiles.exactQuantiles(cal, "vc", Seq("p50" -> 0.5),
+          groupCols = Seq("event_type"))
+        .map { case (key, vals) =>
+          key.head.asInstanceOf[String] -> Quantiles.round6(vals.head) }
+      def medCol: Column = meds.foldLeft(lit(Double.NaN)) {
+        case (acc, (t, v)) => when(col("event_type") === t, lit(v)).otherwise(acc)
+      }
+      val scores = cal.select(col("event_type"),
+        round(abs(col("vc") - medCol)).cast("long").as("sc"))
+      val counts = scores.groupBy(col("event_type"), col("sc"))
+        .agg(count(lit(1)).as("cnt"))
+      val pre = Ranks.withExclusivePrefixSum(counts,
+        Seq(col("event_type"), col("sc")), col("cnt"), np = 8, outCol = "pref")
+      val starts = pre.groupBy(col("event_type"))
+        .agg(min(col("pref")).as("start"), sum(col("cnt")).as("ncal"))
+      val withK = starts.withColumn("kk",
+        ceil((col("ncal") + 1).cast("double") * lit(1.0 - alpha)).cast("long"))
+      val qhat = pre.join(broadcast(withK), Seq("event_type"))
+        .filter(col("pref") - col("start") + col("cnt") >= col("kk"))
+        .groupBy(col("event_type"))
+        .agg(min(col("sc")).as("qhat"))
+      val cov = s.filter(col("half") === 1)
+        .join(broadcast(qhat), Seq("event_type"))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_test"),
+          sum(when(round(abs(col("vc") - medCol)).cast("long") <= col("qhat"), 1)
+            .otherwise(0)).as("n_cov"))
+      withK.select(col("event_type"), col("ncal"))
+        .join(qhat, Seq("event_type"))
+        .join(cov, Seq("event_type"))
+        .select(col("event_type"), col("ncal"),
+          col("qhat").as("qhat_cents"), col("n_test"),
+          round(col("n_cov").cast("double") / col("n_test"), 6).as("coverage"))
+        .orderBy(col("event_type")) // one row per event type
     }
-    val scores = cal.select(col("event_type"),
-      round(abs(col("vc") - medCol)).cast("long").as("sc"))
-    val counts = scores.groupBy(col("event_type"), col("sc"))
-      .agg(count(lit(1)).as("cnt"))
-    val pre = Ranks.withExclusivePrefixSum(counts,
-      Seq(col("event_type"), col("sc")), col("cnt"), np = 8, outCol = "pref")
-    val starts = pre.groupBy(col("event_type"))
-      .agg(min(col("pref")).as("start"), sum(col("cnt")).as("ncal"))
-    val withK = starts.withColumn("kk",
-      ceil((col("ncal") + 1).cast("double") * lit(1.0 - alpha)).cast("long"))
-    val qhat = pre.join(broadcast(withK), Seq("event_type"))
-      .filter(col("pref") - col("start") + col("cnt") >= col("kk"))
-      .groupBy(col("event_type"))
-      .agg(min(col("sc")).as("qhat"))
-    val cov = s.filter(col("half") === 1)
-      .join(broadcast(qhat), Seq("event_type"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_test"),
-        sum(when(round(abs(col("vc") - medCol)).cast("long") <= col("qhat"), 1)
-          .otherwise(0)).as("n_cov"))
-    val out = withK.select(col("event_type"), col("ncal"))
-      .join(qhat, Seq("event_type"))
-      .join(cov, Seq("event_type"))
-      .select(col("event_type"), col("ncal"),
-        col("qhat").as("qhat_cents"), col("n_test"),
-        round(col("n_cov").cast("double") / col("n_test"), 6).as("coverage"))
-      .orderBy(col("event_type"))
-    val rows = out.collect() // one row per event type
-    Ranks.releaseAll()
-    s.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Ranks.releaseAll() // the prefix-sum frames
+    out
   }
 
   /** Gated iso1: ISOTONIC CALIBRATION (pool-adjacent-violators) of the
@@ -617,11 +605,11 @@ object Stats {
     * sums with 9-dp-quantized between/within terms so the 5-term
     * sums are order-invariant.
     */
-  def brownForsythe(spark: SparkSession, dir: String): DataFrame = {
-    val f = Tables.orders(spark, dir)
+  def brownForsythe(spark: SparkSession, dir: String): DataFrame =
+      Pins.local(spark) { p =>
+    val f = p(Tables.orders(spark, dir)
       .select(col("o_orderpriority").as("prio"),
-        round(col("o_totalprice") * 100).cast("long").as("v"))
-      .persist()
+        round(col("o_totalprice") * 100).cast("long").as("v")))
     // Medians over the per-(prio, value) COUNT frame: the corpus
     // compresses to at most |value domain| rows per group before any
     // window runs, so the per-prio cumulative window is bounded by the
@@ -667,7 +655,7 @@ object Stats {
       .select(round((col("ssbt").cast("double") / (col("kgrp") - 1))
         / (col("sswt").cast("double") / (col("tn") - col("kgrp"))), 6)
         .as("bf_f"))
-    val out = terms.join(broadcast(med), Seq("prio"))
+    terms.join(broadcast(med), Seq("prio"))
       .select(col("prio"), col("n").cast("bigint").as("n_rows"),
         col("median_cents"),
         // meang is the mean of the DOUBLED deviations; halve for the
@@ -675,9 +663,6 @@ object Stats {
         round(col("meang") / 2, 6).as("mean_absdev"))
       .crossJoin(broadcast(fstat))
       .orderBy(col("prio"))
-    val rows = out.collect()
-    f.unpersist(); Ranks.releaseAll()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
   /** Gated maha1: MAHALANOBIS OUTLIERS on the per-customer
@@ -692,12 +677,11 @@ object Stats {
     * broadcast of five scalars, whatever the customer count.
     */
   def mahalanobisOutliers(spark: SparkSession, dir: String,
-                          k: Int = 10): DataFrame = {
-    val f = Tables.orders(spark, dir)
+                          k: Int = 10): DataFrame = Pins.local(spark) { p =>
+    val f = p(Tables.orders(spark, dir)
       .groupBy(col("o_custkey").as("k"))
       .agg(count(lit(1)).as("x"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("y"))
-      .persist()
+        sum(round(col("o_totalprice") * 100).cast("long")).as("y")))
     val m = f.agg(
         count(lit(1)).cast("double").as("n"),
         sum(col("x")).cast("double").as("sx"),
@@ -712,7 +696,7 @@ object Stats {
         ((col("sxy") - col("sx") * col("sy") / col("n")) / (col("n") - 1)).as("vxy"))
     val dx = col("x") - col("mx")
     val dy = col("y") - col("my")
-    val out = f.crossJoin(broadcast(m))
+    f.crossJoin(broadcast(m))
       .select(col("k").as("custkey"),
         round((dx * dx * col("vyy") - lit(2.0) * dx * dy * col("vxy")
           + dy * dy * col("vxx"))
@@ -720,9 +704,6 @@ object Stats {
           .as("mahalanobis_sq"))
       .orderBy(desc("mahalanobis_sq"), asc("custkey"))
       .limit(k)
-    val rows = out.collect()
-    f.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
   /** Gated cor2: PARTIAL CORRELATION r_xy·z — the confounder-adjusted

@@ -973,12 +973,13 @@ object TextAnalysis {
     */
   def bpeTrain(spark: SparkSession, dir: String, steps: Int = 3): DataFrame = {
     val SEP = "\u001E"
-    var cur = Tables.documents(spark, dir)
+    val docs = Tables.documents(spark, dir)
       .select(col("doc_id"),
         concat(lit(SEP), array_join(words(col("text")), SEP)).as("s"))
-      .persist()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    for (step <- 1 to steps) {
+    // Each step's merged corpus is materialized (its count) before
+    // the previous one is released.
+    Pins.scope { p => p(Pins.rounds(docs, steps, cutEvery = 0) { (cur, step) =>
       val top = cur
         .select(filter(split(col("s"), SEP), x => x =!= "").as("ws"))
         .select(explode(when(size(col("ws")) >= 2,
@@ -992,15 +993,10 @@ object TextAnalysis {
         .limit(1).head() // argmax only — the control-plane transfer
       val (w1, w2, n) = (top.getString(0), top.getString(1), top.getLong(2))
       merges += ((step, w1, w2, n))
-      val next = cur.select(col("doc_id"),
+      cur.select(col("doc_id"),
         call_function("replace", col("s"),
           lit(SEP + w1 + SEP + w2), lit(SEP + w1 + w2)).as("s"))
-        .persist()
-      next.count() // materialize before dropping the parent
-      cur.unpersist()
-      cur = next
-    }
-    cur.unpersist()
+    } { (next, _, _) => next.count(); true }) }
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(
       merges.map { case (st, w1, w2, n) =>
@@ -1172,31 +1168,28 @@ object TextAnalysis {
     * vocabulary-cardinality frames, and sizes broadcast onto the
     * ≤ sources² pair rows. Ratios divide exact BIGINT counts.
     */
-  def vocabOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val vocab = Tables.documents(spark, dir)
+  def vocabOverlap(spark: SparkSession, dir: String): DataFrame =
+      Pins.local(spark) { p =>
+    // vocabulary-sized; released after the ≤ sources² row collect
+    val vocab = p(Tables.documents(spark, dir)
       .select(col("source"), explode(words(col("text"))).as("word"))
-      .distinct()
-      .persist() // vocabulary-sized; released after the 8-row collect
-    try {
-      val sizes = vocab.groupBy(col("source")).agg(count(lit(1)).as("n"))
-      val a = vocab.select(col("source").as("sa"), col("word"))
-      val b = vocab.select(col("source").as("sb"), col("word"))
-      val pairs = a.join(b, Seq("word")).filter(col("sa") < col("sb"))
-        .groupBy(col("sa"), col("sb")).agg(count(lit(1)).as("n_common"))
-      val out = pairs
-        .join(broadcast(sizes.select(col("source").as("sa"), col("n").as("n_a"))), "sa")
-        .join(broadcast(sizes.select(col("source").as("sb"), col("n").as("n_b"))), "sb")
-        .select(col("sa"), col("sb"), col("n_a"), col("n_b"), col("n_common"),
-          round(col("n_common").cast("double")
-            / (col("n_a") + col("n_b") - col("n_common")).cast("double"), 6)
-            .as("jaccard"),
-          round(col("n_common").cast("double")
-            / least(col("n_a"), col("n_b")).cast("double"), 6)
-            .as("containment"))
-        .orderBy(col("sa"), col("sb"))
-      val rows = out.collect() // ≤ sources² rows; release the vocab cache
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-    } finally { vocab.unpersist(); () }
+      .distinct())
+    val sizes = vocab.groupBy(col("source")).agg(count(lit(1)).as("n"))
+    val a = vocab.select(col("source").as("sa"), col("word"))
+    val b = vocab.select(col("source").as("sb"), col("word"))
+    val pairs = a.join(b, Seq("word")).filter(col("sa") < col("sb"))
+      .groupBy(col("sa"), col("sb")).agg(count(lit(1)).as("n_common"))
+    pairs
+      .join(broadcast(sizes.select(col("source").as("sa"), col("n").as("n_a"))), "sa")
+      .join(broadcast(sizes.select(col("source").as("sb"), col("n").as("n_b"))), "sb")
+      .select(col("sa"), col("sb"), col("n_a"), col("n_b"), col("n_common"),
+        round(col("n_common").cast("double")
+          / (col("n_a") + col("n_b") - col("n_common")).cast("double"), 6)
+          .as("jaccard"),
+        round(col("n_common").cast("double")
+          / least(col("n_a"), col("n_b")).cast("double"), 6)
+          .as("containment"))
+      .orderBy(col("sa"), col("sb"))
   }
 
   /** Gated dsir1: DSIR-STYLE IMPORTANCE WEIGHTS (Xie et al. 2023,
@@ -1387,19 +1380,19 @@ object TextAnalysis {
     * deterministic md5 order (sa1's convention). Everything is
     * integer arithmetic end to end; the card hashes.
     */
-  def curationV5(spark: SparkSession, dir: String, budget: Int = 200): DataFrame = {
+  def curationV5(spark: SparkSession, dir: String, budget: Int = 200): DataFrame =
+      Pins.local(spark) { p =>
     import org.apache.spark.sql.expressions.Window
     val kept = gopherFlags(Tables.documents(spark, dir))
       .filter(col("keep"))
       .select(col("doc_id"), col("source"), col("text"))
-    val deduped = kept
+    val deduped = p(kept
       .withColumn("h", md5(col("text")))
       .withColumn("dr", row_number().over(
         Window.partitionBy(col("h")).orderBy(col("doc_id"))))
       .filter(col("dr") === 1)
       .select(col("doc_id"), col("source"),
-        size(words(col("text"))).cast("long").as("n_words"))
-      .persist()
+        size(words(col("text"))).cast("long").as("n_words")))
     val avail = deduped.groupBy(col("source"))
       .agg(count(lit(1)).as("available"))
     val wSrc = Window.partitionBy(Ranks.boundedOnePartition(col("source")))
@@ -1420,14 +1413,11 @@ object TextAnalysis {
           .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))))
       .join(broadcast(quotas), "source")
       .filter(col("pr") <= col("allocated"))
-    val out = picked.groupBy(col("source"))
+    picked.groupBy(col("source"))
       .agg(max(col("available")).as("available"),
         max(col("allocated")).as("allocated"),
         count(lit(1)).as("picked_docs"),
         sum(col("n_words")).cast("bigint").as("sum_words"))
       .orderBy(col("source"))
-    val rows = out.collect()
-    deduped.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, Pins}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -213,7 +215,7 @@ class DedupSpec extends SparkSpec {
     assert(reps.length == 50 && reps.forall(_._2 == 0L),
       s"whole chain must collapse to rep 0, got ${reps.filter(_._2 != 0L).take(5).toSeq}")
     // The returned plan must not carry one join per round: the last
-    // checkpoint bounds it to < CheckpointEvery joins.
+    // cut (every 5th round) bounds it to < 5 joins.
     val joins = "(?i)join".r.findAllIn(out.queryExecution.optimizedPlan.toString).size
     assert(joins <= 5, s"lineage must be truncated, plan still has $joins joins")
   }
@@ -359,5 +361,66 @@ class DedupSpec extends SparkSpec {
     // all three splits are populated.
     assert(rows.groupBy(_.getAs[Long]("cluster_rep")).exists(_._2.length > 1))
     assert(rows.map(_.getAs[String]("split")).toSet == Set("train", "val", "test"))
+  }
+
+  /** One min-label round over a mirrored (src, dst) edge frame — the
+    * step [[Dedup.duplicateClustersFrom]] runs, spelled out so the
+    * loop's own pins can be counted.
+    */
+  private def minLabelStep(edges: DataFrame)(labels: DataFrame, r: Int): DataFrame = {
+    val nmin = edges.join(labels, col("src") === col("doc_id"))
+      .groupBy(col("dst")).agg(min(col("rep")).as("nmin"))
+    labels.join(nmin, col("doc_id") === col("dst"), "left")
+      .select(col("doc_id"), least(col("rep"), coalesce(col("nmin"), col("rep"))).as("rep"))
+  }
+
+  test("Pins.rounds on a chain: at most two rounds pinned after any act, cuts on exactly every cutEvery-th round") {
+    val sc = spark.sparkContext
+    // 20 docs in one chain: min-label needs 19 rounds, the 20th sees
+    // the fixpoint.
+    val edges = (0L until 19L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
+      .toDF("src", "dst").cache()
+    edges.count()
+    val before = sc.getPersistentRDDs.keySet
+    def live: Int = (sc.getPersistentRDDs.keySet -- before).size
+    val init = (0L until 20L).toDF("doc_id").select(col("doc_id"), col("doc_id").as("rep"))
+    val acted = collection.mutable.ArrayBuffer.empty[(Int, Boolean)]
+    // pins held once the previous round's act and releases are done
+    val held = collection.mutable.ArrayBuffer.empty[Int]
+    var lastSum = Long.MinValue
+    val out = Pins.rounds(init, maxRounds = 60, cutEvery = 3) { (labels, r) =>
+      held += live
+      minLabelStep(edges)(labels, r)
+    } { (frame, r, _) =>
+      val sum = frame.agg(org.apache.spark.sql.functions.sum(col("rep"))).head().getLong(0)
+      val cut = frame.queryExecution.analyzed.isInstanceOf[LogicalRDD]
+      assert(cut || frame.storageLevel.useMemory, s"round $r's frame is not pinned")
+      acted += ((r, cut))
+      val go = sum != lastSum
+      lastSum = sum
+      go
+    }
+    held += live
+    assert(acted.map(_._1) == (1 to 20), "stops at the first false")
+    acted.foreach { case (r, cut) => assert(cut == (r % 3 == 0), s"round $r: cut = $cut") }
+    assert(held.forall(_ <= 2), s"pinned round frames after each act: $held")
+    // Round 20 is cached and read from round 18's cut, which stays.
+    assert(held.last == 2)
+    assert(out.collect().forall(_.getLong(1) == 0L))
+    GraftSession.reset(spark)
+  }
+
+  test("Pins.rounds stops on the first false and runs at most maxRounds") {
+    def run(maxRounds: Int)(go: Int => Boolean): Seq[Int] = {
+      val seen = collection.mutable.ArrayBuffer.empty[Int]
+      Pins.rounds(spark.range(0, 10).toDF("v"), maxRounds, cutEvery = 0) {
+        (prev, _) => prev.select((col("v") + 1).as("v"))
+      } { (frame, r, _) => frame.count(); seen += r; go(r) }
+      seen.toSeq
+    }
+    assert(run(8)(_ < 3) == Seq(1, 2, 3))
+    assert(run(5)(_ => true) == Seq(1, 2, 3, 4, 5))
+    assert(run(0)(_ => true) == Seq())
+    GraftSession.reset(spark)
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions.col
-import graft.operators.Ranks
+import graft.operators.{Pins, Ranks}
 
 /** The one session factory: its settings reach the test session, its
   * reset leaves no persistent RDD behind, and no other main source
@@ -46,13 +46,39 @@ class GraftSessionSpec extends SparkSpec {
     assert(persisted.isEmpty, s"left behind: $persisted")
   }
 
-  test("no main source other than GraftSession.scala builds a SparkSession") {
+  test("a Pins.local body that throws leaves no pinned frame behind") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    intercept[IllegalStateException] {
+      Pins.local(spark) { p =>
+        p(spark.range(0, 100, 1, 4).withColumn("v", col("id") % 7)).count()
+        throw new IllegalStateException("gate failed after pinning")
+      }
+    }
+    assert(sc.getPersistentRDDs.keySet == before,
+      s"leaked: ${sc.getPersistentRDDs.keySet -- before}")
+  }
+
+  /** Main sources (relative to src/main) whose text contains `s`. */
+  private def mainSourcesContaining(s: String): List[String] = {
     val root = Paths.get("src/main")
     assert(Files.isDirectory(root), s"run from the repository root: ${root.toAbsolutePath}")
-    val builders = Files.walk(root).iterator().asScala
+    Files.walk(root).iterator().asScala
       .filter(p => Files.isRegularFile(p))
-      .filter(p => Files.readString(p).contains("SparkSession.builder"))
+      .filter(p => Files.readString(p).contains(s))
       .map((p: Path) => root.relativize(p).toString).toList
+  }
+
+  test("no main source other than GraftSession.scala builds a SparkSession") {
+    val builders = mainSourcesContaining("SparkSession.builder")
     assert(builders == List("scala/graft/GraftSession.scala"), builders)
+  }
+
+  test("no main source other than Pins.scala rebuilds a collected result by hand") {
+    // Pins.local collects a bounded result and releases its pins in
+    // one place; a hand-rolled collect-unpersist-rebuild leaks them on
+    // any exception in between.
+    val sites = mainSourcesContaining("createDataFrame(java.util.Arrays.asList(")
+    assert(sites == List("scala/graft/operators/Pins.scala"), sites)
   }
 }

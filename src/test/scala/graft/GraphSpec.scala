@@ -277,4 +277,15 @@ class GraphSpec extends SparkSpec {
     val c = r.getAs[Double]("clustering")
     assert(c > 0.0 && c < 1.0, s"clustering out of range: $c")
   }
+
+  test("triangle stats release their pins when the edge frame throws") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val edges = spark.range(0, 40).select(
+      when(col("id") === 17, raise_error(lit("bad edge"))).otherwise(col("id")).as("u"),
+      (col("id") + 1).as("v"))
+    intercept[Exception](Graph.triangleStatsFrom(spark, edges).collect())
+    assert(sc.getPersistentRDDs.keySet == before,
+      s"leaked: ${sc.getPersistentRDDs.keySet -- before}")
+  }
 }
