@@ -638,20 +638,27 @@ object Dedup {
       maxRounds)
 
   /** [[duplicateClusters]] over explicit node/edge frames — the seam
-    * the high-diameter chain test drives synthetically. Returns the
-    * labels LAZILY: their last round (and the latest lineage cut under
-    * it) stays pinned until `GraftSession.reset`.
+    * the high-diameter chain test drives synthetically. An edge with
+    * an endpoint outside `nodes` labels nothing outside `nodes`.
+    * Returns the labels LAZILY: their last round stays pinned until
+    * `GraftSession.reset`.
     */
   def duplicateClustersFrom(nodes: DataFrame, edges: DataFrame,
                             maxRounds: Int = 20): DataFrame =
       Graph.withoutAqe(nodes.sparkSession) { Pins.scope { p =>
-    // Edge frame resident-partitioned on the join key; label vectors
-    // shuffle-hash to it (the Graph round-12 discipline: under AQE
-    // this loop submitted one query-stage job per exchange — 46 for
-    // dd15 — pure driver scheduling latency on a contended box).
-    val bidir = p(edges.union(edges.select(col("doc_b"), col("doc_a")))
-      .toDF("src", "dst")
-      .repartition(col("src")))
+    // Such edges are dropped once, before the loop. Both directions of
+    // the rest, plus a self-loop per node, let one join and one min per
+    // round fold N(v) ∪ {v}: each round reads the previous labels once.
+    // Resident-partitioned on the join key; the labels shuffle-hash to
+    // it (the Graph round-12 discipline: under AQE this loop submitted
+    // one query-stage job per exchange — 46 for dd15 — pure driver
+    // scheduling latency on a contended box).
+    val inNodes = edges
+      .join(nodes.select(col("doc_id").as("a")), col("doc_a") === col("a"), "left_semi")
+      .join(nodes.select(col("doc_id").as("b")), col("doc_b") === col("b"), "left_semi")
+    val adj = p(Graph.selfLooped(
+      inNodes.union(inNodes.select(col("doc_b"), col("doc_a"))).toDF("src", "dst"),
+      nodes.select(col("doc_id"))).repartition(col("src")))
     var labelSum = Long.MinValue
     // Every 5th round is a lineage cut: without it the plan nests one
     // join per round, and a high-diameter graph (a 50-doc duplication
@@ -662,15 +669,9 @@ object Dedup {
     // materialization job an eager checkpoint submits first.
     val labels = Pins.rounds(nodes.select(col("doc_id"), col("doc_id").as("rep")),
         maxRounds, cutEvery = 5) { (labels, _) =>
-      val neighborMin = bidir
-        .join(labels.hint("shuffle_hash"), col("src") === col("doc_id"))
-        .groupBy(col("dst"))
-        .agg(min(col("rep")).as("nmin"))
-      labels
-        .join(neighborMin.hint("shuffle_hash"),
-          col("doc_id") === col("dst"), "left")
-        .select(col("doc_id"),
-          least(col("rep"), coalesce(col("nmin"), col("rep"))).as("rep"))
+      adj.join(labels.hint("shuffle_hash"), col("src") === col("doc_id"))
+        .groupBy(col("dst").as("doc_id"))
+        .agg(min(col("rep")).as("rep"))
     } { (next, _, _) =>
       // Labels only ever DECREASE, so Σrep is strictly monotone until
       // the fixpoint: an unchanged exact long sum ⇔ converged. One

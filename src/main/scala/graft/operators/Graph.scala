@@ -21,7 +21,9 @@ import graft.Tables
   * ranks are small relative to edges and flow through the join. The
   * driver only sees the node-count scalar. Loops that persist a frame
   * per round run through [[Pins.rounds]], which owns the per-round
-  * cache lifetime and the lineage cut.
+  * cache lifetime and the lineage cut; such a round reads its previous
+  * frame once, joined to the edges plus one self-loop per node
+  * ([[selfLooped]]).
   *
   * Determinism (cross-engine gate): per-edge contributions are
   * rounded to 14 decimals and summed as DECIMAL(30,14) — exact and
@@ -121,6 +123,43 @@ object Graph {
   private def mirrored(e: DataFrame): DataFrame =
     e.unionAll(e.select(col("dst").as("src") +: col("src").as("dst") +:
       e.columns.filterNot(Set("src", "dst")).toSeq.map(col): _*))
+
+  /** `edges` (src, dst[, w]) plus one self-loop (v, v[, w = 0]) per row
+    * of the one-column frame `nodes`. A round that joins its previous
+    * frame to this on `src` and folds by `dst` sees each node's own
+    * value beside its neighbours' — the fold over N(v) ∪ {v} — and so
+    * reads that frame once.
+    */
+  private[operators] def selfLooped(edges: DataFrame, nodes: DataFrame): DataFrame = {
+    val v = col(nodes.columns.head)
+    val loops = nodes.select(v.as("src"), v.as("dst"))
+    edges.unionByName(
+      if (edges.columns.contains("w")) loops.withColumn("w", lit(0).cast(edges.schema("w").dataType))
+      else loops)
+  }
+
+  /** [[selfLooped]] over the nodes of a mirrored edge frame,
+    * hash-partitioned on src: the resident side of a round's join.
+    */
+  private def looped(edges: DataFrame): DataFrame =
+    selfLooped(edges, edges.select(col("src").as("node")).distinct())
+      .repartition(col("src"))
+
+  /** The nodes of a [[looped]] trade graph: its self-loops, since the
+    * bipartite graph has no other src = dst row.
+    */
+  private def loopNodes(edges: DataFrame): DataFrame =
+    edges.filter(col("src") === col("dst")).select(col("src").as("node"))
+
+  /** One min-plus round over a [[looped]] weighted edge frame: each
+    * reached node's smallest `v + w` over its in-edges and its weight-0
+    * self-loop, so known values stay and one more edge is crossed.
+    */
+  private def relaxed(prev: DataFrame, edges: DataFrame, v: String): DataFrame =
+    prev.hint("shuffle_hash")
+      .join(edges, col("node") === col("src"))
+      .groupBy(col("dst").as("node"))
+      .agg(min(col(v) + col("w")).as(v))
 
   /** Customer nodes of `nation` that have a trade in `nodes`. */
   private def seedNodes(spark: SparkSession, dir: String, nation: Long,
@@ -302,56 +341,36 @@ object Graph {
     * everything from the trusted core" reachability pass curation
     * uses to propagate trust/spam labels outward from a seed set.
     *
-    * Scale shape: classic frontier BSP — each hop is ONE join of the
-    * current frontier against the src-keyed edge list plus ONE
-    * anti-join against the visited set; the driver sees one frontier
-    * count per round (and stops early on an empty frontier, so a
-    * saturated graph never pays maxHops rounds). Visited/frontier
-    * frames are node-cardinality, edges are touched once per hop.
+    * Scale shape: each hop is ONE join of the distance frame against
+    * the src-keyed edge list plus self-loops and ONE min aggregation
+    * ([[relaxed]], sp1's round with unit weights); the driver sees one
+    * reached-node count per round (and stops once it no longer grows,
+    * so a saturated graph never pays maxHops rounds). The distance
+    * frame is node-cardinality, edges are touched once per hop.
+    * Measured at sf0.1 against a frontier-only hop (`w = 0 OR dist =
+    * h - 1` in the join predicate): same jobs, stages and tasks, and
+    * no speed difference beyond run-to-run noise, so the simpler
+    * full-frame hop stays.
     */
   def bfsDistances(spark: SparkSession, dir: String,
                    seedNation: Long = 0, maxHops: Int = 4): DataFrame =
       withoutAqe(spark) { Pins.local(spark) { p =>
-    // Pin the edge list HASH-PARTITIONED on src: every hop joins on
-    // that key, so the per-round exchange moves only the frontier
+    // Pin the edge list (plus a weight-0 self-loop per node)
+    // HASH-PARTITIONED on src: every hop joins on that key, so the
+    // per-round exchange moves only the distance frame
     // (node-cardinality) while the edge frame — the big side — stays
     // where it was cached. Without this, each hop re-shuffles the
     // edges: maxHops × |edges| rows of avoidable network at scale.
-    val edges = p(mirrored(tradePairs(spark, dir)).repartition(col("src")))
-    val nodes = edges.select(col("src").as("node")).distinct()
-    var dist = p(seedNodes(spark, dir, seedNation, nodes)
-      .select(col("node"), lit(0).as("dist")))
-    var total = dist.count() // control-plane scalar per round
-    var n = total
-    var h = 0
-    var frontier = dist.select(col("node"))
-    // Every round's frame stays pinned until the final collect, not
-    // just until the next round's count (Pins.rounds): each round reads
-    // `dist` three times, a reference that misses the cache recomputes
-    // it from the lineage, and with the older rounds released that
-    // recompute goes deeper — measured +3 stages and +10 tasks at sf0.1.
-    while (n > 0 && h < maxHops) {
-      h += 1
-      // Shuffle-hash on the node-cardinality sides (round 12): the
-      // frontier hashes to the edge frame's resident src partitioning
-      // and the visited set builds a hash table for the anti-join —
-      // no per-hop broadcast-build jobs, no sort-merge sorts.
-      val next = frontier.hint("shuffle_hash")
-        .join(edges, col("node") === col("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(dist.select(col("node")).hint("shuffle_hash"),
-          Seq("node"), "left_anti")
-        .select(col("node"), lit(h).as("dist"))
-      val grown = p(dist.unionAll(next))
-      // ONE action per round: materializing `grown` pins next's rows
-      // too, and the frontier size falls out of the running total.
-      val grownTotal = grown.count()
-      n = grownTotal - total
-      total = grownTotal
-      dist = grown
-      frontier = grown.filter(col("dist") === h).select(col("node"))
-    }
-    dist
+    val edges = p(looped(mirrored(tradePairs(spark, dir)).withColumn("w", lit(1))))
+    var reached = -1L
+    p(Pins.rounds(seedNodes(spark, dir, seedNation, loopNodes(edges)).select(col("node"), lit(0).as("dist")),
+        maxHops, cutEvery = 0) { (dist, _) => relaxed(dist, edges, "dist")
+    } { (dist, _, _) =>
+      val n = dist.count() // control-plane scalar per round
+      val grew = n != reached
+      reached = n
+      grew
+    })
       .groupBy(col("dist").cast("int").as("dist"))
       .agg(count(lit(1)).as("n_nodes"))
       .orderBy(col("dist")) // ≤ maxHops+1 rows
@@ -736,53 +755,38 @@ object Graph {
     * trust-propagation with edge costs).
     *
     * ROUND COUNT IS PART OF THE CONTRACT (as in [[kCorePeel]]): both
-    * engines run exactly `rounds` relaxations, so results agree even
-    * before the distance map converges.
+    * engines run `rounds` relaxations, so results agree even before
+    * the distance map converges. The loop stops earlier only at the
+    * fixpoint, after which every further round repeats the frame.
     *
     * Scale shape: each relaxation is ONE join of the current distance
     * vector (node-cardinality) against the src-hash-partitioned edge
-    * list plus one map-side-combinable MIN aggregation — the textbook
-    * BSP SSSP round. Distances are exact BIGINT cents end to end, so
-    * the min-fold is order-invariant and the gate hash-exact. The
-    * driver never sees rows until the final k-row top list.
+    * list plus weight-0 self-loops, which keep every known distance,
+    * and one map-side-combinable MIN aggregation — the textbook BSP
+    * SSSP round. Distances are exact BIGINT cents end to end, so the
+    * min-fold is order-invariant and the gate hash-exact. The driver
+    * sees one (count, Σd) pair per round and no rows until the final
+    * k-row top list.
     */
-  // Broadcast is KEPT in the relaxation loop (unlike pr1/lp1): the
-  // per-round broadcast collect is what materializes `prev`'s cache,
-  // and prev is read TWICE per round (union + join) — without that
-  // barrier the two consumers race and the executed plan doubles per
-  // round (the 2^rounds note below). The loop has no action of its
-  // own, so every round's pin lives until the final collect.
   def cheapestRoutes(spark: SparkSession, dir: String,
                      seedNation: Long = 0, rounds: Int = 4,
                      k: Int = 25): DataFrame =
       withoutAqe(spark) { Pins.local(spark) { p =>
-    val w = p(trades(spark, dir)
+    val edges = p(looped(mirrored(trades(spark, dir)
       .groupBy(custNode(col("o_custkey")).as("src"), suppNode(col("l_suppkey")).as("dst"))
-      .agg(min(round(col("l_extendedprice") * 100).cast("long")).as("w")))
-    val edges = p(mirrored(w).repartition(col("src")))
-    val nodes = edges.select(col("src").as("node")).distinct()
-    var dist = p(seedNodes(spark, dir, seedNation, nodes)
-      .select(col("node"), lit(0L).as("d")))
-    for (_ <- 1 to rounds) {
-      val prev = dist
-      // Relax: keep every known distance, add every one-more-edge
-      // candidate, min-fold per node. The distance vector is
-      // node-cardinality — broadcast to the partitioned edges (drop
-      // the hint at web scale, as in [[labelPropagation]]).
-      // PREV MUST BE PERSISTED: it is referenced TWICE per round
-      // (union keep-side + join probe-side), so an unpersisted loop
-      // doubles the executed plan every round — 2^rounds edge joins
-      // by round 4 (measured: 14.4 s → 5.8 s at sf0.1). The broadcast
-      // collect materializes the cache; the union branch then reads
-      // cached blocks instead of replaying the chain.
-      dist = p(prev
-        .unionAll(edges
-          .join(broadcast(prev), edges("src") === prev("node"))
-          .select(col("dst").as("node"), (col("d") + col("w")).as("d")))
-        .groupBy(col("node"))
-        .agg(min(col("d")).as("d")))
-    }
-
+      .agg(min(round(col("l_extendedprice") * 100).cast("long")).as("w")))))
+    // Distances only fall and the reached set only grows, so an
+    // unchanged (count, Σd) is the fixpoint.
+    var last = (-1L, 0L)
+    val dist = p(Pins.rounds(seedNodes(spark, dir, seedNation, loopNodes(edges)).select(col("node"), lit(0L).as("d")),
+        rounds, cutEvery = 0) { (prev, _) => relaxed(prev, edges, "d")
+    } { (dist, _, _) =>
+      val row = dist.agg(count(lit(1)), coalesce(sum(col("d")), lit(0L))).head()
+      val now = (row.getLong(0), row.getLong(1))
+      val moved = now != last
+      last = now
+      moved
+    })
     dist
       .filter(col("d") > 0) // non-seed nodes: seeds pin at 0
       .select(nodeName(col("node")).as("node"), col("d").as("dist_cents"))
@@ -1003,7 +1007,7 @@ object Graph {
     */
   // Broadcasts KEPT (each half-vector is persisted and read by both
   // the norm action and the next join — the broadcast collect is the
-  // materialization barrier, sp1's situation); only the AQE scope.
+  // materialization barrier); only the AQE scope.
   def hitsScoresFrom(spark: SparkSession, pairsCS: DataFrame,
                      iterations: Int, k: Int): DataFrame =
       withoutAqe(spark) { Pins.local(spark) { p =>
@@ -1075,10 +1079,9 @@ object Graph {
       withoutAqe(spark) {
     import spark.implicits._
     val (seedKeys, reached, harmonic) = Pins.scope { p =>
-      val edges = p(mirrored(tradePairs(spark, dir)).repartition(col("src")))
+      val edges = p(looped(mirrored(tradePairs(spark, dir))))
       // 8 smallest customer nodes: a bounded, deterministic seed panel.
-      val seedKeys = edges.select(col("src").as("node")).distinct()
-        .filter(isCust(col("node")))
+      val seedKeys = loopNodes(edges).filter(isCust(col("node")))
         .orderBy(col("node")).limit(nSeeds)
         .collect().map(_.getLong(0))
       val harmonic = Array.fill(seedKeys.length)(BigDecimal(0))
@@ -1087,18 +1090,16 @@ object Graph {
         .map { case (nd, i) => (nd, 1L << i) }.toSeq
         .toDF("node", "mask")
       // Round h's frame holds each node's mask after h hops and the
-      // bits it gained at hop h; the loop stops once no bit moves.
+      // bits it gained at hop h; the loop stops once no bit moves. The
+      // self-loop carries a node's own mask: OR-ed with its
+      // neighbours' it is the new mask, alone it is the old one.
       p(Pins.rounds(seedMasks, maxHops, cutEvery = 0) { (merged, _) =>
-        val mask = merged.select(col("node"), col("mask"))
-        val prop = mask.hint("shuffle_hash")
+        merged.hint("shuffle_hash")
           .join(edges, col("node") === col("src"))
           .groupBy(col("dst").as("node"))
-          .agg(expr("bit_or(mask)").as("nm"))
-        mask.select(col("node"), col("mask").as("om"))
-          .join(prop, Seq("node"), "full_outer")
-          .select(col("node"),
-            expr("coalesce(om, 0) | coalesce(nm, 0)").as("mask"),
-            expr("coalesce(nm, 0) & ~coalesce(om, 0)").as("newly"))
+          .agg(expr("bit_or(mask)").as("mask"),
+            expr("bit_or(if(src = dst, mask, 0))").as("om"))
+          .select(col("node"), col("mask"), expr("mask & ~om").as("newly"))
       } { (merged, h, _) =>
         val counts = merged.agg(
           seedKeys.indices.map(i =>

@@ -1160,10 +1160,10 @@ object Ingest {
     * over- or under-delete hash-fails), v1 proves the pre-delete
     * snapshot is still bit-exactly readable — which is precisely what
     * time travel means for compliance: the DELETE is logical until
-    * [[graft.sources.TxTable.checkpointCompact]] + vacuum retire the
-    * old dirs (physical erasure = compact to the post-delete snapshot
-    * and vacuum, the documented two-step every log-structured table
-    * format shares).
+    * [[graft.sources.TxTable.checkpoint]], `vacuumLog` and vacuum
+    * retire the old dirs (physical erasure = checkpoint the post-delete
+    * snapshot, drop the log below it and vacuum, the documented
+    * sequence every log-structured table format shares).
     */
   def txDeleteGate(spark: SparkSession, dir: String,
                    nation: Long = 7): DataFrame = {

@@ -73,53 +73,41 @@ object Pins {
     * round's one action (it materializes the frame) and returns whether
     * to go on; frames it pins with `pins` share the round's lifetime.
     *
-    * A round's pins are released only after the NEXT round's `act`, so
-    * no action recomputes a released frame. The latest cut is the
-    * exception: it lives until a newer cut has materialized. A frame
-    * that a round reads twice can be served from the cache only once
-    * (dd6's step: the analyzer re-instances the second reference, and
-    * that copy misses the cache lookup), so the other reference
-    * recomputes from the lineage — down to the latest cut, whose
-    * blocks, once released, cannot be recomputed. After any `act` at
-    * most two rounds stay pinned: the current one and the latest cut.
+    * One release rule: a round's pins are released after the NEXT
+    * round's `act`, so no action recomputes a released frame. `step`
+    * must read the previous frame once — a second reference can miss
+    * the cache lookup and recompute from the lineage, which a released
+    * cut can no longer serve.
     *
     * The loop stops after the first `false` or after `maxRounds`
-    * rounds. It returns the last frame still pinned, together with the
-    * latest cut under it (the last round's other pins are released):
-    * the caller collects it inside its own scope, or returns it lazily
-    * for `GraftSession.reset` to free. On an exception every pin of
-    * the loop is released.
+    * rounds. It returns its last frame still pinned (the last round's
+    * other pins are released): the caller collects it inside its own
+    * scope, or returns it lazily for `GraftSession.reset` to free. On
+    * an exception every pin of the loop is released.
     */
   def rounds(init: DataFrame, maxRounds: Int, cutEvery: Int)(
       step: (DataFrame, Int) => DataFrame)(
       act: (DataFrame, Int, Pins) => Boolean): DataFrame = {
     var prev = new Pins // the last finished round's
     var frame = prev(init)
-    var cut = if (checkpointRdd(init).isDefined) prev else null // latest cut's
-    def releaseAll(): Unit = { prev.release(); if (cut != null) cut.release() }
     try {
       var r = 0
       var go = true
       while (go && r < maxRounds) {
         r += 1
         val next = new Pins
-        val cuts = cutEvery > 0 && r % cutEvery == 0
         try {
           val built = step(frame, r)
-          frame = next(if (cuts) built.localCheckpoint(false) else built)
+          frame = next(if (cutEvery > 0 && r % cutEvery == 0) built.localCheckpoint(false) else built)
           go = act(frame, r, next)
         } catch { case e: Throwable => next.release(); throw e }
-        if (prev ne cut) prev.release()
-        if (cuts) {
-          if (cut != null) cut.release()
-          cut = next
-        }
+        prev.release()
         prev = next
       }
       prev.held -= frame
       prev.release()
       frame
-    } catch { case e: Throwable => releaseAll(); throw e }
+    } catch { case e: Throwable => prev.release(); throw e }
   }
 
   /** Cached (catalog) or locally checkpointed. */

@@ -47,10 +47,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    manifest whose `dvs` dirs hold (file_path, row_index)
   *    tombstones — no data rewrite; readers apply them as one
   *    broadcast anti-join and OPTIMIZE materializes them away.
-  *  - COMPACTION: [[checkpointCompact]] publishes one `overwrite`
-  *    manifest holding the CURRENT resolved dir list — no data moves;
-  *    readers at or after it fold from one manifest instead of the
-  *    whole log. Keeps log replay O(recent) as versions accumulate.
+  *  - LOG COMPACTION: [[checkpoint]] publishes one `checkpoint`
+  *    manifest holding the CURRENT state (dirs, DVs, zones, Bloom refs)
+  *    — no data moves; readers at or after it fold from one manifest
+  *    instead of the whole log, and the changes feed skips it. Keeps
+  *    log replay O(recent) as versions accumulate.
   *  - VACUUM: [[vacuum]] deletes data dirs (and Bloom sidecars)
   *    referenced by NO manifest — the leakage mode of this protocol
   *    is an orphan from a crash (or lost race) between staging and
@@ -708,12 +709,10 @@ class TxTable(val root: String) {
     * the cost is one manifest write however large the table.
     *
     * This is what keeps replay O(recent commits) on a table that has
-    * accumulated a million commits: [[checkpointCompact]] collapses the
-    * DIR list but leaves zone/Bloom annotations in the historical
-    * manifests (replay must still read them all); a checkpoint carries
-    * the annotations too, so everything before it is dead weight for
-    * readers at or past it. Time travel BELOW the checkpoint still
-    * full-replays — history is never rewritten.
+    * accumulated a million commits: a checkpoint carries the zone and
+    * Bloom annotations along with the dir list, so everything before
+    * it is dead weight for readers at or past it. Time travel BELOW
+    * the checkpoint still full-replays — history is never rewritten.
     *
     * Concurrency: the manifest publishes through the same
     * create-exclusive loop as every commit; it changes no logical
@@ -1071,23 +1070,6 @@ class TxTable(val root: String) {
       graft.TmpIO.deleteRecursively(new java.io.File(stage.toString))
     }
     -1L // unreachable
-  }
-
-  /** Log compaction: one `overwrite` manifest holding the CURRENT
-    * resolved dir list — no data is rewritten; replay from here on
-    * starts at this manifest. Returns the checkpoint version.
-    */
-  def checkpointCompact(): Long = {
-    var v = latestVersion().getOrElse(0L) + 1
-    // Carry the ACTIVE DV set forward: a log checkpoint rewrites no
-    // data, so merge-on-read deletes must stay applied. One replay
-    // per attempt (re-resolved on losing the race — the head moved).
-    var (dirs, dvs) = resolveDirsAndDvs()
-    while (!tryPublish(v, "overwrite", dirs, dvs = dvs)) {
-      v = latestVersion().getOrElse(0L) + 1
-      val st = resolveDirsAndDvs(); dirs = st._1; dvs = st._2
-    }
-    v
   }
 
   /** LOG RETENTION: delete every manifest BELOW the last checkpoint —

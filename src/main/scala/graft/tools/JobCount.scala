@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.graftshim.PlanShim
 
 /** Diagnostic main: run named gates once (warm) and print how many
   * Spark JOBS / STAGES / TASKS each submitted — the driver-side
@@ -27,12 +28,14 @@ object JobCount {
       graft.GraftSession.reset(spark)
       fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warm
       graft.GraftSession.reset(spark)
+      // Listener events arrive asynchronously: drain the warm run's
+      // before the counters reset, the counted run's before the print.
+      PlanShim.drainListenerBus(spark)
       jobs = 0; stages = 0; tasks = 0
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      // Listener events are async; give the bus a beat to drain.
-      Thread.sleep(300)
+      PlanShim.drainListenerBus(spark)
       println(f"JOBCOUNT $name jobs=$jobs stages=$stages tasks=$tasks wall=$dt%.2f")
     }
     spark.stop()

@@ -33,8 +33,7 @@ object PlanDump {
       println(s"===== $q (all executions) =====")
       val df = graft.SparkEntry.queries(q)(spark, sf)
       df.write.format("noop").mode("overwrite").save()
-      // listener events are posted asynchronously; give the bus a beat
-      Thread.sleep(1500)
+      org.apache.spark.sql.graftshim.PlanShim.drainListenerBus(spark)
       println(buf.toString)
     }
     spark.stop()

@@ -14,6 +14,12 @@ object PlanShim {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Blocks until every event posted so far has reached every
+    * listener: listener counts are exact only after it.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Analyzed logical plan of a DataFrame (resolved attributes). */
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Pins}
 
@@ -208,11 +210,13 @@ class DedupSpec extends SparkSpec {
     // 50 docs in one duplication chain 0-1-2-...-49: min-label
     // propagation needs ~49 BSP rounds, which without lineage
     // truncation would nest 49 joins into the final plan.
+    // One more edge leads to a doc outside `nodes`: it labels nothing.
     val nodes = (0L until 50L).toDF("doc_id")
-    val edges = (0L until 49L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val edges = ((0L until 49L).map(i => (i, i + 1)) :+ ((-1L, 7L)))
+      .toDF("doc_a", "doc_b")
     val out = Dedup.duplicateClustersFrom(nodes, edges, maxRounds = 60)
     val reps = out.collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(reps.length == 50 && reps.forall(_._2 == 0L),
+    assert(reps.map(_._1).toSeq == (0L until 50L) && reps.forall(_._2 == 0L),
       s"whole chain must collapse to rep 0, got ${reps.filter(_._2 != 0L).take(5).toSeq}")
     // The returned plan must not carry one join per round: the last
     // cut (every 5th round) bounds it to < 5 joins.
@@ -363,22 +367,46 @@ class DedupSpec extends SparkSpec {
     assert(rows.map(_.getAs[String]("split")).toSet == Set("train", "val", "test"))
   }
 
-  /** One min-label round over a mirrored (src, dst) edge frame — the
-    * step [[Dedup.duplicateClustersFrom]] runs, spelled out so the
-    * loop's own pins can be counted.
-    */
-  private def minLabelStep(edges: DataFrame)(labels: DataFrame, r: Int): DataFrame = {
-    val nmin = edges.join(labels, col("src") === col("doc_id"))
-      .groupBy(col("dst")).agg(min(col("rep")).as("nmin"))
-    labels.join(nmin, col("doc_id") === col("dst"), "left")
-      .select(col("doc_id"), least(col("rep"), coalesce(col("nmin"), col("rep"))).as("rep"))
+  test("each dd6 round reads the previous round once, from the cache") {
+    // 20 docs in one chain: no round before the 19th is the fixpoint,
+    // so the seam returns round r itself when run for r rounds. Round
+    // r's plan is the cached plan of its frame; a reference to round
+    // r - 1 that missed the cache would replay that round's join there.
+    val nodes = (0L until 20L).toDF("doc_id")
+    val edges = (0L until 19L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    // Rounds 6 and 12 read a cut (every 5th round); 2 and 7 a persist.
+    for (r <- Seq(2, 6, 7, 12)) {
+      val out = Dedup.duplicateClustersFrom(nodes, edges, maxRounds = r)
+      val round = out.queryExecution.optimizedPlan.collectFirst {
+        case m: InMemoryRelation => m.cachedPlan
+      }.getOrElse(fail(s"round $r's frame is not cached"))
+      val joins = round.collect { case j: BaseJoinExec => j }
+      assert(joins.size == 1, s"round $r runs ${joins.size} joins:\n$round")
+      val leaves = round.collectLeaves()
+      assert(leaves.size == 2 && leaves.forall {
+        case _: InMemoryTableScanExec | _: RDDScanExec => true
+        case _ => false
+      }, s"round $r must read the edges and round ${r - 1} from the cache:\n$round")
+      assert(out.collect().map(_.getLong(1)).toSeq ==
+        (0L until 20L).map(i => math.max(0L, i - r)))
+      GraftSession.reset(spark)
+    }
   }
+
+  /** One min-label round over a mirrored (src, dst) edge frame with a
+    * self-loop per node — the step [[Dedup.duplicateClustersFrom]]
+    * runs, spelled out so the loop's own pins can be counted.
+    */
+  private def minLabelStep(edges: DataFrame)(labels: DataFrame, r: Int): DataFrame =
+    edges.join(labels, col("src") === col("doc_id"))
+      .groupBy(col("dst").as("doc_id")).agg(min(col("rep")).as("rep"))
 
   test("Pins.rounds on a chain: at most two rounds pinned after any act, cuts on exactly every cutEvery-th round") {
     val sc = spark.sparkContext
     // 20 docs in one chain: min-label needs 19 rounds, the 20th sees
     // the fixpoint.
-    val edges = (0L until 19L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
+    val edges = ((0L until 19L).flatMap(i => Seq((i, i + 1), (i + 1, i))) ++
+      (0L until 20L).map(i => (i, i)))
       .toDF("src", "dst").cache()
     edges.count()
     val before = sc.getPersistentRDDs.keySet
@@ -403,9 +431,10 @@ class DedupSpec extends SparkSpec {
     held += live
     assert(acted.map(_._1) == (1 to 20), "stops at the first false")
     acted.foreach { case (r, cut) => assert(cut == (r % 3 == 0), s"round $r: cut = $cut") }
-    assert(held.forall(_ <= 2), s"pinned round frames after each act: $held")
-    // Round 20 is cached and read from round 18's cut, which stays.
-    assert(held.last == 2)
+    // Only the previous round is pinned when a round starts, and only
+    // the returned last round after the loop.
+    assert(held.forall(_ <= 1), s"pinned round frames after each release: $held")
+    assert(held.last == 1)
     assert(out.collect().forall(_.getLong(1) == 0L))
     GraftSession.reset(spark)
   }

@@ -97,14 +97,14 @@ class TxTableSpec extends SparkSpec {
     } finally TmpIO.deleteRecursively(new java.io.File(dir))
   }
 
-  test("checkpointCompact preserves every snapshot; vacuum only eats orphans") {
+  test("checkpoint preserves every snapshot; vacuum only eats orphans") {
     val (dir, t) = freshTable()
     try {
       t.append(Seq(1).toDF("x"))
       t.append(Seq(2).toDF("x"))
       t.overwrite(Seq(9).toDF("x"))
       t.append(Seq(10).toDF("x"))
-      val cp = t.checkpointCompact() // v5 = overwrite([v3dir, v4dir])
+      val cp = t.checkpoint() // v5 = checkpoint([v3dir, v4dir])
       assert(cp == 5L)
       t.append(Seq(11).toDF("x"))
       def xs(asOf: Option[Long]) = t.snapshot(spark, asOf)
@@ -189,8 +189,8 @@ class TxTableSpec extends SparkSpec {
       assert(t.snapshotRange(spark, "k", 150L, 250L).count() == 101L)
       // Unknown stats column: nothing is skippable.
       assert(t.resolveDirsRange("other", 150L, 250L).size == 5)
-      // Zones survive a compaction overwrite (dirs are immutable).
-      t.checkpointCompact()
+      // Zones survive a log checkpoint (dirs are immutable).
+      t.checkpoint()
       assert(t.resolveDirsRange("k", 150L, 250L).size == 3)
       // Fully-missing range: zero zone dirs, zoneless dir still read.
       assert(t.resolveDirsRange("k", 5000L, 6000L).size == 1)
@@ -308,8 +308,8 @@ class TxTableSpec extends SparkSpec {
       assert(t.snapshot(spark).select(col("x")).as[Int].collect().sorted.toSeq
         == Seq(1, 2, 3))
       assert(t.resolveDirs().forall(_.contains("we\"ird,ta]ble")))
-      // Log compaction re-writes the dir list through the same escaping.
-      t.checkpointCompact()
+      // A log checkpoint re-writes the dir list through the same escaping.
+      t.checkpoint()
       assert(t.snapshot(spark).count() == 3L)
     } finally TmpIO.deleteRecursively(new java.io.File(dir))
   }
@@ -354,7 +354,7 @@ class TxTableSpec extends SparkSpec {
           t2.commitIfAbsent(Seq(1000 + i / 2).toDF("x"), pinBase + i / 2))
       }
       val compacts = (1 to 4).map { _ =>
-        scala.concurrent.Future(t.checkpointCompact())
+        scala.concurrent.Future(t.checkpoint())
       }
       import scala.concurrent.duration._
       val appendVs = scala.concurrent.Await.result(
@@ -429,8 +429,8 @@ class TxTableSpec extends SparkSpec {
       val vDel = t.deleteWhere(spark, col("x") <= 3) // v2
       def xs(tt: TxTable, asOf: Option[Long] = None) = tt.snapshot(spark, asOf)
         .select(col("x")).as[Int].collect().sorted.toSeq
-      // checkpointCompact carries the active DV set (no data rewrite).
-      val vCk = t.checkpointCompact() // v3
+      // A checkpoint carries the active DV set (no data rewrite).
+      val vCk = t.checkpoint() // v3
       assert(xs(t) == (4 to 8))
       assert(t.resolveDvDirs(Some(vCk)).size == 1)
       // RESTORE to a post-delete version must keep rows deleted;
