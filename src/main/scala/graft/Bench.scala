@@ -187,9 +187,9 @@ object Bench {
     // driver never sets it and always measures the full surface).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val reference = loadReference(sfDir)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(kv => only.forall(_.contains(kv._1)))
-      .map { case (name, fn) =>
+    val results = SparkEntry.gates.sortBy(_.name)
+      .filter(g => only.forall(_.contains(g.name)))
+      .map { case graft.gates.Gate(name, fn, _) =>
       // A rep whose BEST time is still RefBar× the clean-box reference
       // (and above an absolute floor, so sub-second gates don't flap)
       // is environment-suspect even when the spread is tight.

@@ -42,6 +42,23 @@ object GraftSession {
     spark
   }
 
+  /** Runs `body` with `pairs` set on the session, then restores every
+    * key in `finally`, also when `body` throws: a key that had a value
+    * gets it back, a key that was unset is unset again. Gates share one
+    * session, so a gate that needs its own confs sets them only here.
+    * The confs hold while `body` runs, so the work that needs them
+    * (a collect, a stream's awaitTermination) must run inside it.
+    */
+  def withConfs[T](spark: SparkSession, pairs: Seq[(String, String)])(body: => T): T = {
+    val prior = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Drops everything a gate may have left cached, so the next gate
     * starts from the same state. `clearCache` frees only catalog-tracked
     * plans; the BSP operators' `localCheckpoint` blocks and

@@ -1,7 +1,8 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Correctness dump: each SparkEntry.queries result → parquet, plus
+import graft.gates.Gate
+/** Correctness dump: each gate's output → parquet, plus the gates'
   * oracle_sql.json, for the DuckDB compare (`tools/oracle_check.py`).
   *
   * A gate that throws does not stop the dump: the remaining gates still
@@ -17,11 +18,9 @@ object Verify {
     // oracle_sql.json is also how to read one gate's oracle SQL.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    def selected(name: String): Boolean = only.forall(_.contains(name))
     val spark = GraftSession.build()
     val errors = dump(spark, sfDir, outDir,
-      SparkEntry.queries.toSeq.filter(kv => selected(kv._1)),
-      SparkEntry.oracleSql.filter(kv => selected(kv._1)))
+      SparkEntry.gates.filter(g => only.forall(_.contains(g.name))))
     spark.stop()
     if (errors.nonEmpty) {
       System.err.println(s"[verify] ${errors.size} gate(s) failed: ${errors.keys.mkString(",")}")
@@ -29,26 +28,27 @@ object Verify {
     }
   }
 
-  /** Writes each gate's output, `oracle_sql.json` and `errors.json` under
-    * `outDir`; returns the failed gates with their messages.
+  /** Writes each gate's output, the gates' `oracle_sql.json` and
+    * `errors.json` under `outDir`; returns the failed gates with their
+    * messages.
     */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
-           gates: Seq[(String, (SparkSession, String) => DataFrame)],
-           oracleSql: Map[String, String]): Map[String, String] = {
+           gates: Seq[Gate]): Map[String, String] = {
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    gates.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    gates.foreach { g =>
+      try g.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${g.name}")
       catch { case e: Throwable =>
-        errors(name) = s"${e.getClass.getName}: ${e.getMessage}"
-        System.err.println(s"[verify] FAILED $name: ${errors(name)}")
+        errors(g.name) = s"${e.getClass.getName}: ${e.getMessage}"
+        System.err.println(s"[verify] FAILED ${g.name}: ${errors(g.name)}")
       }
       GraftSession.reset(spark)
     }
     def json(m: Iterable[(String, String)]): String =
       m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json(oracleSql))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json(gates.map(g => g.name -> g.oracle)))
     Files.writeString(Paths.get(s"$outDir/errors.json"), json(errors))
     errors.toMap
   }

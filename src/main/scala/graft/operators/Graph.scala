@@ -81,15 +81,8 @@ object Graph {
     val sessionWidth =
       spark.conf.getOption("spark.sql.shuffle.partitions")
         .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(32)
-    val keys = Seq("spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> math.max(8, sessionWidth / 2).toString)
-    val prior = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    graft.GraftSession.withConfs(spark, Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> math.max(8, sessionWidth / 2).toString))(f)
   }
 
   // The trade graph's node ids: customer k is node 2k, supplier k is

@@ -1586,16 +1586,11 @@ object Relational {
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")
-    val prev = pins.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pins.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    graft.GraftSession.withConfs(spark, pins) {
       val q = bloomJoinQuery(spark, dir)
       val rows = q.collect()
       import scala.jdk.CollectionConverters._
       spark.createDataFrame(rows.toSeq.asJava, q.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

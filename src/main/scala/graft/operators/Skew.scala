@@ -61,8 +61,8 @@ object Skew {
     * small-but-not-broadcast dim under thresholds scaled to the test
     * corpus (the same ratios a 100 TB cluster runs at default 256 MB
     * thresholds); AQE detects the oversized partition at the shuffle
-    * boundary and splits it across tasks. Session confs are restored
-    * in a finally — gates share one session.
+    * boundary and splits it across tasks, under
+    * [[graft.GraftSession.withConfs]].
     *
     * The RESULT is threshold-independent (AQE only re-partitions), so
     * the oracle states the plain aggregate; the spec additionally
@@ -80,9 +80,7 @@ object Skew {
       // conservative extra-shuffle check
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    graft.GraftSession.withConfs(spark, confs) {
       // AQE splits a skewed partition at mapper-block boundaries; a
       // single-parquet-file SF reads as ONE mapper with nothing to
       // split, so fan the map side out the way a multi-file 100 TB
@@ -107,13 +105,10 @@ object Skew {
           sum(col("price")).cast("double").as("revenue"))
         .orderBy(col("bucket"))
       // Materialize UNDER the scaled thresholds (lazy evaluation after
-      // the finally would run with restored confs and never skew-split).
+      // the scope would run with restored confs and never skew-split).
       val rows = out.collect()
       out.sparkSession.createDataFrame(
         java.util.Arrays.asList(rows: _*), out.schema)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

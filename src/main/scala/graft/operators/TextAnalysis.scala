@@ -27,7 +27,7 @@ object TextAnalysis {
   val TokenPattern = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
 
   /** Stopword list shared with the oracle SQL (must stay in sync — the
-    * SQL is generated from this constant in SparkEntry).
+    * SQL is generated from this constant in graft.gates).
     */
   val Stopwords: Seq[String] =
     Seq("the", "and", "of", "to", "a", "in", "is", "it", "for", "on")

@@ -53,12 +53,9 @@ private[streaming] object GateIO {
     * start() races the plan and may silently not apply.
     */
   def runPinned(spark: SparkSession, n: Int)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try start.awaitTermination()
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    graft.GraftSession.withConfs(spark, Seq("spark.sql.shuffle.partitions" -> n.toString))(
+      start.awaitTermination())
 
   /** Gate read-back + staging cleanup — see [[graft.TmpIO]]. */
   def collectAndClean(spark: SparkSession, tmpRoot: String)(df: DataFrame): DataFrame =

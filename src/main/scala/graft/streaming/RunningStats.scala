@@ -53,9 +53,12 @@ object RunningStats {
   }
 
   /** transformWithState requires RocksDB-backed state. */
+  val RocksDbProvider: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   def rocksdbConf(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark.conf.set(RocksDbProvider._1, RocksDbProvider._2)
 
   /** Gated transformWithState run (st7): the events table streamed as
     * one micro-batch, so each user emits exactly one update = their
@@ -79,32 +82,24 @@ object RunningStats {
     // Provider + partition configs stay set for the query's whole
     // lifetime (the first micro-batch is planned async on the stream
     // thread) and are restored only after awaitTermination.
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    rocksdbConf(spark)
-    try {
-      GateIO.runPinned(spark, 4) {
-        val stream = spark.readStream
-          .schema("user_id LONG, value DOUBLE")
-          .parquet(s"$tmp/in")
-          .as[Event]
-        runningStats(spark, stream).toDF()
-          .select(col("user_id"), col("n"),
-            col("min").as("min_value"), col("max").as("max_value"))
-          .writeStream
-          .outputMode("update")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(s"$tmp/out")
-          }
-          .start()
-      }
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    graft.GraftSession.withConfs(spark,
+        Seq(RocksDbProvider, "spark.sql.shuffle.partitions" -> "4")) {
+      val stream = spark.readStream
+        .schema("user_id LONG, value DOUBLE")
+        .parquet(s"$tmp/in")
+        .as[Event]
+      runningStats(spark, stream).toDF()
+        .select(col("user_id"), col("n"),
+          col("min").as("min_value"), col("max").as("max_value"))
+        .writeStream
+        .outputMode("update")
+        .option("checkpointLocation", s"$tmp/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          batch.write.mode("append").parquet(s"$tmp/out")
+        }
+        .start()
+        .awaitTermination()
     }
     graft.TmpIO.deleteSubdirs(tmp, "in", "ckpt")
     spark.read.parquet(s"$tmp/out")

@@ -127,36 +127,30 @@ object SessionTimers {
     graft.Tables.events(spark, dir)
       .select(col("user_id"), col("ts"))
       .write.parquet(s"$tmp/in")
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    RunningStats.rocksdbConf(spark)
-    try {
-      GateIO.runPinned(spark, 4) {
-        val stream = spark.readStream
-          .schema("user_id LONG, ts TIMESTAMP")
-          .parquet(s"$tmp/in")
-          .withWatermark("ts", s"$delayMin minutes")
-          .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
-          .as[SEvent]
-        // Epoch-micros BIGINT boundaries: exact cross-engine (no
-        // timestamp-type/formatting seams in the hash compare).
-        timedSessions(spark, stream, gapMin * 60000L).toDF()
-          .select(col("user_id"), col("start_us"), col("end_us"),
-            col("n_events"))
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(s"$tmp/out")
-          }
-          .start()
-      }
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    // Provider + partition configs stay set until awaitTermination (the
+    // first micro-batch is planned async on the stream thread).
+    graft.GraftSession.withConfs(spark,
+        Seq(RunningStats.RocksDbProvider, "spark.sql.shuffle.partitions" -> "4")) {
+      val stream = spark.readStream
+        .schema("user_id LONG, ts TIMESTAMP")
+        .parquet(s"$tmp/in")
+        .withWatermark("ts", s"$delayMin minutes")
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
+        .as[SEvent]
+      // Epoch-micros BIGINT boundaries: exact cross-engine (no
+      // timestamp-type/formatting seams in the hash compare).
+      timedSessions(spark, stream, gapMin * 60000L).toDF()
+        .select(col("user_id"), col("start_us"), col("end_us"),
+          col("n_events"))
+        .writeStream
+        .outputMode("append")
+        .option("checkpointLocation", s"$tmp/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          batch.write.mode("append").parquet(s"$tmp/out")
+        }
+        .start()
+        .awaitTermination()
     }
     graft.TmpIO.deleteSubdirs(tmp, "in", "ckpt")
     spark.read.parquet(s"$tmp/out")

@@ -24,7 +24,7 @@ object JobCount {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks += 1
     })
     args.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
+      val fn = graft.SparkEntry.gates.find(_.name == name).get.run
       graft.GraftSession.reset(spark)
       fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warm
       graft.GraftSession.reset(spark)

@@ -31,7 +31,7 @@ object PlanDump {
     for (q <- args) {
       buf.setLength(0)
       println(s"===== $q (all executions) =====")
-      val df = graft.SparkEntry.queries(q)(spark, sf)
+      val df = graft.SparkEntry.gates.find(_.name == q).get.run(spark, sf)
       df.write.format("noop").mode("overwrite").save()
       org.apache.spark.sql.graftshim.PlanShim.drainListenerBus(spark)
       println(buf.toString)

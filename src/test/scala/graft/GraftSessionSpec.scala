@@ -59,6 +59,27 @@ class GraftSessionSpec extends SparkSpec {
       s"leaked: ${sc.getPersistentRDDs.keySet -- before}")
   }
 
+  test("withConfs restores a set key and unsets an unset key, on return and on a throw") {
+    val (setKey, unsetKey) = ("spark.sql.shuffle.partitions", "spark.graft.withConfsSpec")
+    val before = spark.conf.get(setKey)
+    assert(spark.conf.getOption(unsetKey).isEmpty)
+    val pairs = Seq(setKey -> "3", unsetKey -> "on")
+    def inside(): Unit = {
+      assert(spark.conf.get(setKey) == "3")
+      assert(spark.conf.get(unsetKey) == "on")
+    }
+    def restored(): Unit = {
+      assert(spark.conf.get(setKey) == before)
+      assert(spark.conf.getOption(unsetKey).isEmpty)
+    }
+    assert(GraftSession.withConfs(spark, pairs) { inside(); 42 } == 42)
+    restored()
+    intercept[IllegalStateException] {
+      GraftSession.withConfs(spark, pairs) { inside(); throw new IllegalStateException("body failed") }
+    }
+    restored()
+  }
+
   /** Main sources (relative to src/main) whose text contains `s`. */
   private def mainSourcesContaining(s: String): List[String] = {
     val root = Paths.get("src/main")

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Regenerate the t16_compress_profile oracle pins.
 
-The t16 oracle (SparkEntry.oracleSql) carries a spec-pinned constant
+The t16 oracle (in src/main/scala/graft/gates/TextAnalysisGates.scala) carries a spec-pinned constant
 table of expected per-lang deflate profiles, because DuckDB has no
 DEFLATE. The pins are generated by CPython's zlib (level 1, raw
 stream) — an implementation independent of the JDK Deflater the
@@ -9,9 +9,9 @@ engine's DeflateSizeExpr kernel uses, verified byte-identical — and
 keyed by (corpus byte total, lang, live n_docs) so a changed corpus
 FAILS the join loudly instead of matching stale constants.
 
-If the driver regenerates /root/testdata and t16 starts failing with
-rows=5/0, rerun this script and paste its output over the VALUES block
-in SparkEntry.oracleSql["t16_compress_profile"].
+If the test data is regenerated and t16 starts failing with rows=5/0,
+rerun this script and paste its output over the VALUES block of the
+t16_compress_profile gate's oracle.
 
 Replays the engine's exact numeric path: ratio = zlen/blen as IEEE
 double, per-doc cast to DECIMAL(38,18) (HALF_UP), exact decimal sum,
