@@ -42,17 +42,36 @@ private[graft] object TmpIO {
     * the whole deduped event table through [[collectAndClean]]'s cap):
     * the dir is wiped and recreated at gate START, the gate writes its
     * output there, and the caller returns a LAZY reader over it.
-    * Residue is bounded to one output per gate — overwritten by the
-    * next invocation — instead of growing per run; bulky staging
-    * subdirs (inputs, checkpoints) are still deleted eagerly via
-    * [[deleteSubdirs]] once the gate's stream has terminated.
+    * Residue is bounded to one output per gate per live process —
+    * overwritten by the next invocation — instead of growing per run;
+    * bulky staging subdirs (inputs, checkpoints) are still deleted
+    * eagerly via [[deleteSubdirs]] once the gate's stream has terminated.
+    *
+    * The dir is `graft_stable_<gate>_<pid>`, so two graft JVMs on one
+    * machine never share (and delete) each other's output. At entry
+    * the gate's dirs of processes no longer alive are reclaimed; a
+    * live process's dir is left alone.
     */
   def stableDir(gate: String): String = {
     val shm = new java.io.File("/dev/shm")
     val base =
       if (shm.isDirectory && shm.canWrite) shm
       else new java.io.File(System.getProperty("java.io.tmpdir"))
-    val d = new java.io.File(base, s"graft_stable_$gate")
+    stableDirIn(base, gate, ProcessHandle.current().pid())
+  }
+
+  /** [[stableDir]] under `base` for process `pid`. */
+  private[graft] def stableDirIn(base: java.io.File, gate: String, pid: Long): String = {
+    val own = s"graft_stable_${gate}_"
+    Option(base.listFiles()).getOrElse(Array.empty).foreach { f =>
+      val tail = f.getName.stripPrefix(own)
+      if (f.getName.startsWith(own) && tail.nonEmpty && tail.length <= 18 &&
+          tail.forall(_.isDigit)) {
+        val p = tail.toLong
+        if (p != pid && !ProcessHandle.of(p).isPresent) deleteRecursively(f)
+      }
+    }
+    val d = new java.io.File(base, s"$own$pid")
     deleteRecursively(d)
     d.mkdirs()
     d.toString

@@ -71,6 +71,14 @@ object TxTable {
     */
   final val DefaultVacuumRetentionMillis: Long = 60L * 60L * 1000L
 
+  /** The schema of a deletion-vector dir: one tombstone per deleted
+    * row, addressed by the `_metadata` columns of its data file.
+    */
+  private[graft] val DvSchema: org.apache.spark.sql.types.StructType =
+    new org.apache.spark.sql.types.StructType()
+      .add("file_path", org.apache.spark.sql.types.StringType)
+      .add("row_index", org.apache.spark.sql.types.LongType)
+
   /** String zone bounds ride the manifest as lowercase UTF-8 hex:
     * fixed-width per byte, so lexicographic HEX order == byte order ==
     * Spark's UTF8String order == parquet/DuckDB binary collation —
@@ -156,6 +164,7 @@ final class TxTransaction private[sources] (t: TxTable) {
 }
 
 class TxTable(val root: String) {
+  import TxTable.DvSchema
 
   private val logDir: Path = Paths.get(root, "_txlog")
   private val dataDir: Path = Paths.get(root, "data")
@@ -205,7 +214,9 @@ class TxTable(val root: String) {
     */
   private[graft] def appendStaged(spark: SparkSession, stage: String,
                                   statsCol: String): Long = {
-    val stats = footerLongZones(spark, stage, Seq(statsCol))
+    val footers = stageFooters(spark, stage)
+    requireOneSchema(spark, stage, footers)
+    val stats = footerLongZones(footers, Seq(statsCol))
       .get(statsCol).map { case (mn, mx) => (statsCol, mn, mx) }
     var attempt = latestVersion().getOrElse(0L) + 1
     while (!tryPublish(attempt, "append", Seq(stage), stats)) {
@@ -225,7 +236,7 @@ class TxTable(val root: String) {
     // Footer-derived zones, same as [[appendWithStats]] (round 15):
     // one pass (the staged write) instead of aggregate-then-write.
     val stage = stageData(df)
-    val fz = footerLongZones(df.sparkSession, stage, statsCols)
+    val fz = footerLongZones(stageFooters(df.sparkSession, stage), statsCols)
     val zones = statsCols.flatMap(c => fz.get(c).map {
       case (mn, mx) => (0, c, mn, mx)
     })
@@ -248,15 +259,13 @@ class TxTable(val root: String) {
     val st = replayLog(asOf)
     val dirs = pruneRange(st, statsCol, lo, hi)
     import org.apache.spark.sql.functions.col
-    if (dirs.isEmpty)
-      snapshot(spark, asOf).filter(org.apache.spark.sql.functions.lit(false))
+    if (dirs.isEmpty) noRows(spark, st, asOf)
     else
-      // mergeSchema: the pruned dir set is small, and on an evolved
-      // table a single-file schema guess can lack `statsCol` entirely
-      // (unresolved-column at read). Rows predating the column read as
-      // NULL and fail the range predicate — excluded, as they should be.
-      applyDeletes(spark,
-          spark.read.option("mergeSchema", "true").parquet(dirs: _*), st.dvs)
+      // Merged schema: on an evolved table one dir's schema can lack
+      // `statsCol` entirely (unresolved-column at read). Rows predating
+      // the column read as NULL and fail the range predicate — excluded,
+      // as they should be.
+      applyDeletes(spark, scan(spark, dirs, merge = true), st.dvs)
         .filter(col(statsCol) >= lo && col(statsCol) <= hi)
   }
 
@@ -293,11 +302,9 @@ class TxTable(val root: String) {
     val st = replayLog(asOf)
     val dirs = pruneRangeString(st, statsCol, lo, hi)
     import org.apache.spark.sql.functions.col
-    if (dirs.isEmpty)
-      snapshot(spark, asOf).filter(org.apache.spark.sql.functions.lit(false))
+    if (dirs.isEmpty) noRows(spark, st, asOf)
     else
-      applyDeletes(spark,
-          spark.read.option("mergeSchema", "true").parquet(dirs: _*), st.dvs)
+      applyDeletes(spark, scan(spark, dirs, merge = true), st.dvs)
         .filter(col(statsCol) >= lo && col(statsCol) <= hi)
   }
 
@@ -340,7 +347,7 @@ class TxTable(val root: String) {
     val n = footerRowCount(df.sparkSession, stage)
     val bf =
       if (n == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, 0.03)
-      else df.sparkSession.read.parquet(stage)
+      else scan(df.sparkSession, Seq(stage), merge = false)
         .stat.bloomFilter(bloomCol, n, 0.03)
     var attempt = latestVersion().getOrElse(0L) + 1
     var published = false
@@ -373,13 +380,10 @@ class TxTable(val root: String) {
     val st = replayLog(asOf)
     val dirs = pruneEquals(st, eqCol, value)
     import org.apache.spark.sql.functions.col
-    if (dirs.isEmpty)
-      snapshot(spark, asOf).filter(org.apache.spark.sql.functions.lit(false))
+    if (dirs.isEmpty) noRows(spark, st, asOf)
     else
-      // mergeSchema for the same reason as snapshotRange: evolution-safe
-      // on the (small) pruned dir set.
-      applyDeletes(spark,
-          spark.read.option("mergeSchema", "true").parquet(dirs: _*), st.dvs)
+      // Merged schema for the same reason as snapshotRange.
+      applyDeletes(spark, scan(spark, dirs, merge = true), st.dvs)
         .filter(col(eqCol) === value)
   }
 
@@ -446,7 +450,7 @@ class TxTable(val root: String) {
             "the changes range — row removal cannot be expressed as appends; " +
             "re-read a full snapshot")
       if (m.dirs.isEmpty) None
-      else Some(spark.read.parquet(m.dirs: _*)
+      else Some(scan(spark, m.dirs, merge = false)
         .withColumn("_commit_version", lit(v)))
       }
     }
@@ -592,24 +596,23 @@ class TxTable(val root: String) {
     if (dirs.isEmpty)
       throw new IllegalStateException(s"TxTable $root: no committed data" +
         asOf.map(v => s" at or before version $v").getOrElse(""))
-    applyDeletes(spark, spark.read.parquet(dirs: _*), dvs)
+    applyDeletes(spark, scan(spark, dirs, merge = false), dvs)
   }
 
   /** Snapshot read under SCHEMA EVOLUTION: commits may ADD columns
     * over the table's life (the additive evolution every long-lived
     * ingest needs); the merged read is the union schema, with nulls
-    * where an older commit predates a column. Kept separate from
-    * [[snapshot]] because schema merging pays a footer read per dir —
-    * the log-structured growth path is caching the union schema in a
-    * compaction manifest.
+    * where an older commit predates a column. [[snapshot]] takes the
+    * first dir's schema instead, as a plain parquet read would: the
+    * merge costs one footer per dir, read once per dir for the life of
+    * this instance ([[readSchema]]).
     */
   def snapshotEvolved(spark: SparkSession, asOf: Option[Long] = None): DataFrame = {
     val (dirs, dvs) = resolveDirsAndDvs(asOf) // one log replay per read
     if (dirs.isEmpty)
       throw new IllegalStateException(s"TxTable $root: no committed data" +
         asOf.map(v => s" at or before version $v").getOrElse(""))
-    applyDeletes(spark,
-      spark.read.option("mergeSchema", "true").parquet(dirs: _*), dvs)
+    applyDeletes(spark, scan(spark, dirs, merge = true), dvs)
   }
 
   /** The full log state at `asOf`, from ONE replay: visible data dirs,
@@ -777,16 +780,16 @@ class TxTable(val root: String) {
   private def liveKeyed(spark: SparkSession, dirs: Seq[String],
                         dvDirs: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    // mergeSchema: on a schema-evolved table (the snapshotEvolved
+    // Merged schema: on a schema-evolved table (the snapshotEvolved
     // shape) the matched rows must carry the UNION schema — a read
-    // pinned to one file's schema would silently drop the evolved
+    // pinned to one dir's schema would silently drop the evolved
     // columns from every replacement row updateWhere writes back.
-    val raw = spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    val raw = scan(spark, dirs, merge = true)
       .withColumn("_dv_file", col("_metadata.file_path"))
       .withColumn("_dv_row", col("_metadata.row_index"))
     if (dvDirs.isEmpty) raw
     else {
-      val dv = spark.read.parquet(dvDirs: _*)
+      val dv = spark.read.schema(DvSchema).parquet(dvDirs: _*)
       raw.join(broadcast(dv),
         raw("_dv_file") === dv("file_path")
           && raw("_dv_row") === dv("row_index"), "left_anti")
@@ -811,7 +814,7 @@ class TxTable(val root: String) {
     val keyed = df
       .withColumn("_dv_file", col("_metadata.file_path"))
       .withColumn("_dv_row", col("_metadata.row_index"))
-    val dv = spark.read.parquet(dvDirs: _*)
+    val dv = spark.read.schema(DvSchema).parquet(dvDirs: _*)
     keyed.join(broadcast(dv),
         keyed("_dv_file") === dv("file_path")
           && keyed("_dv_row") === dv("row_index"), "left_anti")
@@ -872,8 +875,8 @@ class TxTable(val root: String) {
       val (dirs, dvDirs) = resolveDirsAndDvs()
       if (dirs.isEmpty)
         throw new IllegalStateException(s"TxTable $root: nothing to update")
-      val dataCols = // union schema: see liveKeyed's mergeSchema note
-        spark.read.option("mergeSchema", "true").parquet(dirs: _*).columns.toSeq
+      val dataCols = // union schema: see liveKeyed's note
+        scan(spark, dirs, merge = true).columns.toSeq
       // A typo'd set key would otherwise be a silent no-op that still
       // commits tombstones + unchanged replacements.
       val unknown = set.keySet -- dataCols.toSet
@@ -916,12 +919,11 @@ class TxTable(val root: String) {
         throw new IllegalStateException(s"TxTable $root: nothing to optimize")
       // DV-applied read: the rewrite MATERIALIZES merge-on-read deletes,
       // and the published overwrite (empty dvs) clears the DV set.
-      // mergeSchema: a compaction of an evolved table must rewrite the
-      // UNION schema — a single-file schema guess would permanently
-      // drop evolved columns from the table.
+      // Merged schema: a compaction of an evolved table must rewrite
+      // the UNION schema — one dir's schema would permanently drop
+      // evolved columns from the table.
       val stage = stageData(
-        applyDeletes(spark,
-            spark.read.option("mergeSchema", "true").parquet(dirs: _*), dvDirs)
+        applyDeletes(spark, scan(spark, dirs, merge = true), dvDirs)
           .coalesce(math.max(targetPartitions, 1)))
       if (tryPublish(head + 1, "overwrite", Seq(stage))) return head + 1
       // Lost to a concurrent commit: the rewrite is stale — drop it
@@ -961,14 +963,13 @@ class TxTable(val root: String) {
         }
       }
       if (rewrite.isEmpty) return head // nothing intersects: no-op
-      val compacted = applyDeletes(spark,
-          spark.read.option("mergeSchema", "true").parquet(rewrite: _*),
+      val compacted = applyDeletes(spark, scan(spark, rewrite, merge = true),
           st.dvs)
         .coalesce(math.max(targetPartitions, 1))
       val stage = stageData(compacted)
       // Zone from the staged rewrite's parquet footers (round 15) —
       // the read-back aggregation job is a metadata read now.
-      val zones = footerLongZones(spark, stage, Seq(statsCol)).toSeq.map {
+      val zones = footerLongZones(stageFooters(spark, stage), Seq(statsCol)).toSeq.map {
         case (_, (mn, mx)) => (keep.length, statsCol, mn, mx)
       }
       if (tryPublish(head + 1, "overwrite", keep :+ stage,
@@ -1024,9 +1025,8 @@ class TxTable(val root: String) {
       if (dirs.isEmpty)
         throw new IllegalStateException(s"TxTable $root: nothing to optimize")
       // DV-applied read: clustering rewrites materialize deletes too.
-      // mergeSchema: same union-schema requirement as optimizeCompact.
-      val snap = applyDeletes(spark,
-        spark.read.option("mergeSchema", "true").parquet(dirs: _*), dvDirs)
+      // Merged schema: same union-schema requirement as optimizeCompact.
+      val snap = applyDeletes(spark, scan(spark, dirs, merge = true), dvDirs)
       val ck = cluster.cast("long")
       val r = snap.agg(min(ck), max(ck)).head()
       if (r.isNullAt(0)) return optimizeCompact(spark, 1) // no key values: plain compact
@@ -1060,7 +1060,7 @@ class TxTable(val root: String) {
         finally ls.close()
       }
       val zones = bucketDirs.zipWithIndex.flatMap { case (d, i) =>
-        val fz = footerLongZones(spark, d, statsCols)
+        val fz = footerLongZones(stageFooters(spark, d), statsCols)
         statsCols.flatMap(c => fz.get(c).map { case (mn, mx) => (i, c, mn, mx) })
       }
       if (tryPublish(head + 1, "overwrite", bucketDirs, zones = zones))
@@ -1333,27 +1333,105 @@ class TxTable(val root: String) {
     stage.toString
   }
 
-  /** Parquet footers of a staged dir, driver-side (no Spark job). */
-  private def stageFooters(spark: SparkSession, stage: String)
-      : Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata] = {
+  /** The parquet files of a dir, by name, and a reader of one file's
+    * footer; driver-side, no Spark job.
+    */
+  private def parquetFiles(spark: SparkSession, dir: String)
+      : (Seq[org.apache.hadoop.fs.FileStatus],
+         org.apache.hadoop.fs.FileStatus => org.apache.parquet.hadoop.metadata.ParquetMetadata) = {
     val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(stage)
-    val fs = dir.getFileSystem(conf)
-    fs.listStatus(dir).toSeq
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val files = path.getFileSystem(conf).listStatus(path).toSeq
       .filter(_.getPath.getName.endsWith(".parquet"))
-      .map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(f, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getFooter finally r.close()
-      }
+      .sortBy(_.getPath.getName)
+    (files, { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+      try r.getFooter finally r.close()
+    })
+  }
+
+  /** Parquet footers of a staged dir, by file, driver-side (no Spark
+    * job).
+    */
+  private def stageFooters(spark: SparkSession, stage: String)
+      : Seq[(org.apache.hadoop.fs.Path, org.apache.parquet.hadoop.metadata.ParquetMetadata)] = {
+    val (files, footer) = parquetFiles(spark, stage)
+    files.map(f => f.getPath -> footer(f))
+  }
+
+  /** Fails unless every file of a staged dir has one schema, the
+    * contract [[dirSchema]] reads a dir's schema from one footer under.
+    */
+  private def requireOneSchema(spark: SparkSession, stage: String,
+      footers: Seq[(org.apache.hadoop.fs.Path, org.apache.parquet.hadoop.metadata.ParquetMetadata)]): Unit = {
+    val schemas = footers.map { case (f, md) =>
+      org.apache.spark.sql.graftshim.ParquetShim.footerSchema(spark, f, md.getFileMetaData)
+    }.distinct
+    require(schemas.size <= 1, s"TxTable $root: the files of $stage have " +
+      s"${schemas.size} schemas (${schemas.map(_.simpleString).mkString("; ")}); " +
+      "every file in a published dir must have one")
+  }
+
+  /** Each data dir's parquet file metadata, from ONE of its footers:
+    * every file in a published dir has one schema (a dir is immutable
+    * once staged, and [[appendStaged]], the one publish of files this
+    * table did not write itself, checks it). Memoized for the life of
+    * this instance and converted at each read, so the reading session's
+    * parquet settings apply; a dir with no parquet file has none.
+    */
+  private val dirFooters = new java.util.concurrent.ConcurrentHashMap[String,
+    Option[(org.apache.hadoop.fs.Path, org.apache.parquet.hadoop.metadata.FileMetaData)]]()
+
+  private def dirSchema(spark: SparkSession, dir: String)
+      : Option[org.apache.spark.sql.types.StructType] =
+    dirFooters.computeIfAbsent(dir, _ => {
+      val (files, footer) = parquetFiles(spark, dir)
+      files.headOption.map(f => f.getPath -> footer(f).getFileMetaData)
+    }).map { case (f, meta) =>
+      org.apache.spark.sql.graftshim.ParquetShim.footerSchema(spark, f, meta)
+    }
+
+  /** The read schema of `dirs` without a Spark job: with `merge`, every
+    * dir's schema folded in log order (the union schema of an additively
+    * evolved table, as a `mergeSchema` read infers it); without, the
+    * first dir's. None if no dir holds a parquet file.
+    */
+  private def readSchema(spark: SparkSession, dirs: Seq[String], merge: Boolean)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    val schemas = dirs.iterator.flatMap(dirSchema(spark, _))
+    if (merge) schemas.reduceOption(
+      org.apache.spark.sql.graftshim.ParquetShim.merge(spark, _, _))
+    else schemas.nextOption()
+  }
+
+  /** A parquet scan of `dirs` whose schema is given ([[readSchema]]),
+    * so building it starts no schema-inference job. Dirs without any
+    * parquet file fall back to Spark's own inference and its error.
+    */
+  private def scan(spark: SparkSession, dirs: Seq[String],
+                   merge: Boolean): DataFrame =
+    readSchema(spark, dirs, merge) match {
+      case Some(s) => spark.read.schema(s).parquet(dirs: _*)
+      case None => spark.read.parquet(dirs: _*)
+    }
+
+  /** The empty answer of a read that pruned every dir: the merged
+    * schema of the live dirs, planned as an empty relation.
+    */
+  private def noRows(spark: SparkSession, st: LogState,
+                     asOf: Option[Long]): DataFrame = {
+    if (st.dirs.isEmpty)
+      throw new IllegalStateException(s"TxTable $root: no committed data" +
+        asOf.map(v => s" at or before version $v").getOrElse(""))
+    scan(spark, st.dirs, merge = true).filter(org.apache.spark.sql.functions.lit(false))
   }
 
   /** Exact row count of a staged dir from its footers (no job). */
   private def footerRowCount(spark: SparkSession, stage: String): Long = {
     import scala.jdk.CollectionConverters._
     stageFooters(spark, stage)
-      .flatMap(_.getBlocks.asScala.map(_.getRowCount)).sum
+      .flatMap(_._2.getBlocks.asScala.map(_.getRowCount)).sum
   }
 
   /** Exact per-column (min, max) of the named INT64 columns over a
@@ -1367,13 +1445,14 @@ class TxTable(val root: String) {
     * min/max and do not show it all-null (statistics disabled, or a
     * foreign writer): a zone without that chunk could under-cover.
     */
-  private def footerLongZones(spark: SparkSession, stage: String,
-                              cols: Seq[String]): Map[String, (Long, Long)] = {
+  private def footerLongZones(
+      footers: Seq[(org.apache.hadoop.fs.Path, org.apache.parquet.hadoop.metadata.ParquetMetadata)],
+      cols: Seq[String]): Map[String, (Long, Long)] = {
     import scala.jdk.CollectionConverters._
     val want = cols.toSet
     val acc = scala.collection.mutable.Map.empty[String, (Long, Long)]
     var unbounded = Set.empty[String]
-    stageFooters(spark, stage).foreach { md =>
+    footers.foreach { case (_, md) =>
       md.getBlocks.asScala.foreach { b =>
         b.getColumns.asScala.foreach { c =>
           val name = c.getPath.toDotString

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The reference's reactive layer (SURVEY §2.4 D6, §3 EP3) rebuilt on
   * Structured Streaming.
@@ -52,7 +52,21 @@ class ReactiveMetaPipeline(
     */
   def run(spark: SparkSession, trigger: Trigger,
           keyCol: String = "event_type",
-          valueCol: String = "value"): org.apache.spark.sql.streaming.StreamingQuery = {
+          valueCol: String = "value"): StreamingQuery =
+    // One state partition: the state is O(keys), so every further
+    // partition only adds a state-store commit and a meta file per
+    // micro-batch. The stream clones the session conf at start, and the
+    // checkpoint pins the count from its first batch on: a checkpoint
+    // made under another count restarts with that count.
+    graft.GraftSession.withConfs(spark, Seq("spark.sql.shuffle.partitions" -> "1")) {
+      start(spark, trigger, keyCol, valueCol)
+    }
+
+  /** [[run]] under the session's own shuffle partition count, which a
+    * new checkpoint's state then takes.
+    */
+  private[graft] def start(spark: SparkSession, trigger: Trigger,
+                           keyCol: String, valueCol: String): StreamingQuery = {
     // Schema must be declared for file-stream sources; reuse the batch
     // footer schema of whatever currently exists upstream.
     val schema = spark.read.parquet(upstreamDir).schema

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.ReactiveMetaPipeline
 
 class ReactiveSpec extends SparkSpec {
@@ -59,5 +60,61 @@ class ReactiveSpec extends SparkSpec {
     val m = spark.read.parquet(meta).collect()
     assert(m.length == 1)
     assert(m(0).getAs[Long]("n_events") == 2L, "replay must not double-count")
+  }
+
+  /** The meta table as sorted `key|min|max|n` lines. */
+  private def metaLines(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(col("event_type"), col("min_value"), col("max_value"), col("n_events"))
+      .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** A batch GROUP BY over every file landed upstream. */
+  private def batchMeta(upstream: String): Seq[String] =
+    metaLines(spark.read.parquet(upstream).groupBy("event_type")
+      .agg(min("value").as("min_value"), max("value").as("max_value"),
+        count(lit(1)).as("n_events")))
+
+  /** State partitions of the aggregate in a checkpoint. */
+  private def statePartitions(ckpt: String): Seq[String] =
+    new java.io.File(s"$ckpt/state/0").list().filter(_.forall(_.isDigit)).toSeq.sorted
+
+  test("restart replay: a stopped ProcessingTime pipeline resumes to the batch GROUP BY") {
+    val base = tmpDir("reactive_restart_")
+    val upstream = s"$base/upstream"; val meta = s"$base/meta"; val ckpt = s"$base/ckpt"
+    try {
+      val p = new ReactiveMetaPipeline(upstream, meta, ckpt)
+      writeBatch(upstream, Seq(("a", 1.0), ("b", 2.0)))
+      writeBatch(upstream, Seq(("a", 4.0), ("c", -1.0)))
+      val q1 = p.run(spark, Trigger.ProcessingTime("100 milliseconds"))
+      try {
+        q1.processAllAvailable()
+        // Lands while the query runs: the stop may come before or
+        // after a batch takes it.
+        writeBatch(upstream, Seq(("b", 7.0), ("d", 3.0)))
+      } finally q1.stop()
+      writeBatch(upstream, Seq(("a", -5.0), ("e", 0.5)))
+      writeBatch(upstream, Seq(("d", 9.0)))
+      val q2 = p.run(spark, Trigger.ProcessingTime("100 milliseconds"))
+      try q2.processAllAvailable() finally q2.stop()
+      assert(metaLines(spark.read.parquet(meta)) == batchMeta(upstream))
+      assert(statePartitions(ckpt) == Seq("0"), "the O(keys) state keeps one partition")
+    } finally TmpIO.deleteRecursively(new java.io.File(base))
+  }
+
+  test("a checkpoint made with 4 state partitions restarts with 4 and the same answer") {
+    val base = tmpDir("reactive_restart4_")
+    val upstream = s"$base/upstream"; val meta = s"$base/meta"; val ckpt = s"$base/ckpt"
+    try {
+      val p = new ReactiveMetaPipeline(upstream, meta, ckpt)
+      writeBatch(upstream, Seq(("a", 1.0), ("b", 2.0), ("c", 3.0)))
+      GraftSession.withConfs(spark, Seq("spark.sql.shuffle.partitions" -> "4")) {
+        p.start(spark, Trigger.AvailableNow, "event_type", "value").awaitTermination()
+      }
+      assert(statePartitions(ckpt) == Seq("0", "1", "2", "3"))
+      writeBatch(upstream, Seq(("a", -2.0), ("d", 8.0)))
+      p.runAvailableNow(spark)
+      assert(metaLines(spark.read.parquet(meta)) == batchMeta(upstream))
+      assert(statePartitions(ckpt) == Seq("0", "1", "2", "3"),
+        "the checkpoint pins its partition count")
+    } finally TmpIO.deleteRecursively(new java.io.File(base))
   }
 }

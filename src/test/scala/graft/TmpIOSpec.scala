@@ -32,4 +32,55 @@ class TmpIOSpec extends SparkSpec {
         "staging dir must survive — the caller still owns cleanup on failure")
     } finally TmpIO.deleteRecursively(new java.io.File(root))
   }
+
+  /** A pid no process holds: a child that has already exited. */
+  private def deadPid(): Long = {
+    val c = new ProcessBuilder("true").start()
+    c.waitFor()
+    c.pid()
+  }
+
+  private def dirWithFile(base: java.io.File, name: String): java.io.File = {
+    val d = new java.io.File(base, name)
+    d.mkdirs()
+    java.nio.file.Files.write(new java.io.File(d, "part").toPath, Array[Byte](1))
+    d
+  }
+
+  test("stableDir reclaims this gate's dir of a dead process, and no other gate's") {
+    val base = new java.io.File(tmpDir("tmpio-stable-dead-"))
+    try {
+      val dead = deadPid()
+      val gone = dirWithFile(base, s"graft_stable_g_$dead")
+      val otherGate = dirWithFile(base, s"graft_stable_g1_$dead")
+      val unnumbered = dirWithFile(base, "graft_stable_g")
+      TmpIO.stableDirIn(base, "g", ProcessHandle.current().pid())
+      assert(!gone.exists(), "a dead process's dir is reclaimed")
+      assert(otherGate.exists() && unnumbered.exists(), "only this gate's numbered dirs are touched")
+    } finally TmpIO.deleteRecursively(base)
+  }
+
+  test("stableDir keeps this gate's dir of a live foreign process") {
+    val base = new java.io.File(tmpDir("tmpio-stable-live-"))
+    val other = new ProcessBuilder("sleep", "60").start()
+    try {
+      val live = dirWithFile(base, s"graft_stable_g_${other.pid()}")
+      TmpIO.stableDirIn(base, "g", ProcessHandle.current().pid())
+      assert(new java.io.File(live, "part").exists(), "a live process's output stays")
+    } finally {
+      other.destroy()
+      TmpIO.deleteRecursively(base)
+    }
+  }
+
+  test("stableDir wipes and reuses this process's own dir") {
+    val base = new java.io.File(tmpDir("tmpio-stable-own-"))
+    try {
+      val pid = ProcessHandle.current().pid()
+      val own = dirWithFile(base, s"graft_stable_g_$pid")
+      val d = TmpIO.stableDirIn(base, "g", pid)
+      assert(d == own.toString)
+      assert(own.isDirectory && own.list().isEmpty, "the previous invocation's output is wiped")
+    } finally TmpIO.deleteRecursively(base)
+  }
 }
