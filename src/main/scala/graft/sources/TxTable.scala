@@ -1,7 +1,10 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** TxTable — a minimal TRANSACTIONAL table over parquet: an ordered
   * commit log of immutable manifest files on top of immutable data
@@ -13,14 +16,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * double-append, and yesterday's training snapshot must stay
   * reproducible after today's ingest. (Same design family as
   * open-source log-structured table formats — commit log + immutable
-  * files — reduced to the minimal protocol this engine needs; no
-  * external dependency.)
+  * files — reduced to the minimal protocol this engine needs.)
   *
   * Layout:
   * {{{
   *   <root>/data/<uuid>/part-*.parquet   -- immutable data dirs, one per commit
   *   <root>/_txlog/v%010d.json           -- manifest: action + data dirs
+  *   <root>/_txlog/b<uuid>.bloom         -- Bloom filter sidecars
   * }}}
+  *
+  * Manifest: one JSON object, read and written with Jackson —
+  * `version`, `action` (`append`, `overwrite`, `delete` or
+  * `checkpoint`), `dirs` (data dir paths) and, when non-empty, `dvs`
+  * (deletion-vector dir paths). Data-skipping annotations are per dir,
+  * keyed by index `i` into `dirs`, in three arrays: `zones`
+  * `{"i","column","min","max"}` (a BIGINT column's range), `szones`
+  * `{"i","column","slo","shi"}` (a STRING column's range as UTF-8 hex,
+  * [[TxTable.toHex]]) and `dblooms` `{"i","column","file"}` (a Bloom
+  * sidecar). An annotation may over-cover its dir, never under-cover
+  * it. Older logs may also hold commit-level `stats`
+  * `{"column","min","max"}` and `bloom` `{"column","file"}`, which
+  * annotate every dir of their commit; they are read, never written.
   *
   * Protocol:
   *  - WRITE: stage the batch's parquet files into a fresh uuid dir
@@ -48,7 +64,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    tombstones — no data rewrite; readers apply them as one
   *    broadcast anti-join and OPTIMIZE materializes them away.
   *  - LOG COMPACTION: [[checkpoint]] publishes one `checkpoint`
-  *    manifest holding the CURRENT state (dirs, DVs, zones, Bloom refs)
+  *    manifest holding the CURRENT state (dirs, DVs, annotations)
   *    — no data moves; readers at or after it fold from one manifest
   *    instead of the whole log, and the changes feed skips it. Keeps
   *    log replay O(recent) as versions accumulate.
@@ -82,13 +98,66 @@ object TxTable {
   /** String zone bounds ride the manifest as lowercase UTF-8 hex:
     * fixed-width per byte, so lexicographic HEX order == byte order ==
     * Spark's UTF8String order == parquet/DuckDB binary collation —
-    * pruning compares hex directly and stays sound without ever
-    * parsing arbitrary string content out of JSON.
+    * pruning compares hex directly.
     */
-  private[graft] def toHex(s: String): String =
-    s.getBytes("UTF-8").map(b => f"${b & 0xff}%02x").mkString
+  private[graft] def toHex(s: String): String = hex(s.getBytes("UTF-8"))
   private[graft] def fromHex(h: String): String =
     new String(h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray, "UTF-8")
+  private def hex(bytes: Array[Byte]): String =
+    bytes.map(b => f"${b & 0xff}%02x").mkString
+
+  /** One data-skipping annotation of one data dir. */
+  private[graft] sealed trait Ann { def col: String }
+  /** A BIGINT column's [min, max] over the dir. */
+  private[graft] final case class LongZone(col: String, min: Long, max: Long) extends Ann
+  /** A STRING column's [min, max] over the dir, as [[toHex]]. */
+  private[graft] final case class HexZone(col: String, min: String, max: String) extends Ann
+  /** A Bloom filter sidecar over a BIGINT column of the dir: a file
+    * name in the log dir, or an absolute path (a clone's borrowed ref).
+    */
+  private[graft] final case class BloomRef(col: String, file: String) extends Ann
+
+  /** Whether annotation `a` proves its dir holds no row in the range
+    * `r` (a zone of the same kind on the same column): the one overlap
+    * test behind range reads, partial optimize and transaction
+    * validation. Any other annotation proves nothing.
+    */
+  private def misses(a: Ann, r: Ann): Boolean = (a, r) match {
+    case (LongZone(c, mn, mx), LongZone(rc, lo, hi)) => c == rc && (mx < lo || mn > hi)
+    case (HexZone(c, mn, mx), HexZone(rc, lo, hi)) => c == rc && (mx < lo || mn > hi)
+    case _ => false
+  }
+
+  /** One manifest: `anns` are (dir index, annotation) pairs. */
+  private[graft] final case class Manifest(action: String, dirs: Seq[String],
+                                           dvs: Seq[String] = Nil,
+                                           anns: Seq[(Int, Ann)] = Nil)
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The manifest codec's writer (the reader is [[TxTable]]'s
+    * `readManifest`): paths with `/` separators, every annotation in
+    * its kind's index-keyed array.
+    */
+  private def encode(v: Long, m: Manifest): Array[Byte] = {
+    val o = Json.createObjectNode().put("version", v).put("action", m.action)
+    def paths(key: String, ps: Seq[String]): Unit = {
+      val a = o.putArray(key)
+      ps.foreach(p => a.add(p.replace("\\", "/")))
+    }
+    paths("dirs", m.dirs)
+    if (m.dvs.nonEmpty) paths("dvs", m.dvs)
+    m.anns.foreach { case (i, a) =>
+      val e = Json.createObjectNode().put("i", i).put("column", a.col)
+      val key = a match {
+        case LongZone(_, mn, mx) => e.put("min", mn).put("max", mx); "zones"
+        case HexZone(_, mn, mx) => e.put("slo", mn).put("shi", mx); "szones"
+        case BloomRef(_, f) => e.put("file", f); "dblooms"
+      }
+      o.withArrayProperty(key).add(e)
+    }
+    Json.writeValueAsBytes(o)
+  }
 }
 
 /** A concurrent commit invalidated this transaction's read snapshot:
@@ -164,7 +233,7 @@ final class TxTransaction private[sources] (t: TxTable) {
 }
 
 class TxTable(val root: String) {
-  import TxTable.DvSchema
+  import TxTable._
 
   private val logDir: Path = Paths.get(root, "_txlog")
   private val dataDir: Path = Paths.get(root, "data")
@@ -175,7 +244,6 @@ class TxTable(val root: String) {
   def versions(): Seq[Long] =
     if (!Files.isDirectory(logDir)) Seq.empty
     else {
-      import scala.jdk.CollectionConverters._
       val it = Files.list(logDir)
       try it.iterator().asScala
         .map(_.getFileName.toString)
@@ -191,105 +259,76 @@ class TxTable(val root: String) {
   def append(df: DataFrame): Long = commit(df, "append")
 
   /** Append with a ZONE MAP: the manifest additionally records
-    * min/max of long column `statsCol` over the batch (one extra tiny
-    * aggregate at commit time), so range reads can skip whole data
-    * dirs without opening a file — manifest-level data skipping, the
-    * capability that turns a 100 TB log table into a range-indexed
-    * one when commits are range-clustered (time, id band, partition).
+    * min/max of long column `statsCol` over the batch, so range reads
+    * can skip whole data dirs without opening a file — manifest-level
+    * data skipping, the capability that turns a 100 TB log table into
+    * a range-indexed one when commits are range-clustered (time, id
+    * band, partition). The zone comes from the staged files' parquet
+    * footers ([[footerZones]]): the write is the only pass over the
+    * batch.
     */
-  def appendWithStats(df: DataFrame, statsCol: String): Long = {
-    // Zones come from the STAGED FILES' parquet footers (round 15):
-    // the write is the one unavoidable pass over the batch, and the
-    // footers already carry exact INT64 min/max — the former shape
-    // ran a separate aggregation job over the batch's whole lineage
-    // first, i.e. one extra full pass per commit at any scale. Footer
-    // merge is a driver-side metadata read (no job), value-identical
-    // (parquet INT64 stats are exact, all-null/empty batches surface
-    // as hasNonNullValue=false on every file → no zone, as before).
+  def appendWithStats(df: DataFrame, statsCol: String): Long =
     appendStaged(df.sparkSession, stageData(df), statsCol)
-  }
 
   /** Publishes a dir of parquet files already under this table's data
     * dir as an append, with a zone on `statsCol` from their footers.
     */
   private[graft] def appendStaged(spark: SparkSession, stage: String,
-                                  statsCol: String): Long = {
-    val footers = stageFooters(spark, stage)
-    requireOneSchema(spark, stage, footers)
-    val stats = footerLongZones(footers, Seq(statsCol))
-      .get(statsCol).map { case (mn, mx) => (statsCol, mn, mx) }
-    var attempt = latestVersion().getOrElse(0L) + 1
-    while (!tryPublish(attempt, "append", Seq(stage), stats)) {
-      attempt = latestVersion().getOrElse(0L) + 1
-    }
-    attempt
-  }
+                                  statsCol: String): Long =
+    appendZoned(spark, stage, Seq(statsCol), string = false)
 
   /** [[appendWithStats]] for SEVERAL columns at once: the manifest
-    * records a zone per column for the one staged dir (index-keyed
-    * zone entries, the same encoding the clustered rewrite uses), so
-    * [[snapshotRange]] prunes this commit on ANY of them. One tiny
-    * multi-aggregate at commit time; all columns must be BIGINT.
+    * records a zone per column for the one staged dir, so
+    * [[snapshotRange]] prunes this commit on ANY of them. The zones
+    * come from the staged footers like [[appendWithStats]]'s; all
+    * columns must be BIGINT.
     */
   def appendWithStatsMulti(df: DataFrame, statsCols: Seq[String]): Long = {
     require(statsCols.nonEmpty, s"TxTable $root: statsCols must be non-empty")
-    // Footer-derived zones, same as [[appendWithStats]] (round 15):
-    // one pass (the staged write) instead of aggregate-then-write.
-    val stage = stageData(df)
-    val fz = footerLongZones(stageFooters(df.sparkSession, stage), statsCols)
-    val zones = statsCols.flatMap(c => fz.get(c).map {
-      case (mn, mx) => (0, c, mn, mx)
-    })
-    var attempt = latestVersion().getOrElse(0L) + 1
-    while (!tryPublish(attempt, "append", Seq(stage), zones = zones)) {
-      attempt = latestVersion().getOrElse(0L) + 1
-    }
-    attempt
+    appendZoned(df.sparkSession, stageData(df), statsCols, string = false)
+  }
+
+  /** [[appendWithStats]] for a STRING column: the manifest records the
+    * batch's min/max as UTF-8 hex ([[TxTable.toHex]] — byte order ==
+    * Spark/parquet binary string order). This is VARCHAR data
+    * skipping — category, date-string and identifier-prefix ranges
+    * prune at the manifest level just like BIGINT zones. The zone
+    * comes from the staged footers too; a batch whose extremes parquet
+    * keeps no statistics for (over 4 KB) gets none, and is never
+    * skipped.
+    */
+  def appendWithStatsString(df: DataFrame, statsCol: String): Long =
+    appendZoned(df.sparkSession, stageData(df), Seq(statsCol), string = true)
+
+  /** Publishes a staged dir as an append annotated with the footer
+    * zones of `cols`.
+    */
+  private def appendZoned(spark: SparkSession, stage: String, cols: Seq[String],
+                          string: Boolean): Long = {
+    val footers = stageFooters(spark, stage)
+    requireOneSchema(spark, stage, footers)
+    val zones = footerZones(footers, cols, string).map(0 -> _)
+    publishAtHead(_ => Manifest("append", Seq(stage), anns = zones))
   }
 
   /** Range read with manifest-level data skipping: dirs whose zone
     * [min,max] provably misses [lo,hi] are never opened; dirs WITHOUT
     * a zone for `statsCol` are kept (skipping is an optimization, the
-    * residual filter below keeps the answer exact either way). One
-    * log replay serves the pruning, the dir set AND the DV set.
+    * residual filter keeps the answer exact either way). One log
+    * replay serves the pruning, the dir set AND the DV set.
     */
   def snapshotRange(spark: SparkSession, statsCol: String,
                     lo: Long, hi: Long,
-                    asOf: Option[Long] = None): DataFrame = {
-    val st = replayLog(asOf)
-    val dirs = pruneRange(st, statsCol, lo, hi)
-    import org.apache.spark.sql.functions.col
-    if (dirs.isEmpty) noRows(spark, st, asOf)
-    else
-      // Merged schema: on an evolved table one dir's schema can lack
-      // `statsCol` entirely (unresolved-column at read). Rows predating
-      // the column read as NULL and fail the range predicate — excluded,
-      // as they should be.
-      applyDeletes(spark, scan(spark, dirs, merge = true), st.dvs)
-        .filter(col(statsCol) >= lo && col(statsCol) <= hi)
-  }
+                    asOf: Option[Long] = None): DataFrame =
+    prunedRead(spark, asOf, col(statsCol).between(lo, hi))(
+      prune(_, LongZone(statsCol, lo, hi)))
 
-  /** [[appendWithStats]] for a STRING column: the manifest records the
-    * batch's min/max as UTF-8 hex ([[TxTable.toHex]] — byte order ==
-    * Spark/parquet binary string order, and hex needs no JSON
-    * escaping however hostile the values). This is VARCHAR data
-    * skipping — category, date-string and identifier-prefix ranges
-    * prune at the manifest level just like BIGINT zones.
+  /** The dirs a range read must open ([[snapshotRange]]'s pruning,
+    * exposed for inspection/testing).
     */
-  def appendWithStatsString(df: DataFrame, statsCol: String): Long = {
-    val r = df.agg(org.apache.spark.sql.functions.min(statsCol),
-      org.apache.spark.sql.functions.max(statsCol)).head()
-    val szones =
-      if (r.isNullAt(0)) Nil // empty/all-null batch: no zone, never skipped
-      else Seq((0, statsCol,
-        TxTable.toHex(r.getString(0)), TxTable.toHex(r.getString(1))))
-    val stage = stageData(df)
-    var attempt = latestVersion().getOrElse(0L) + 1
-    while (!tryPublish(attempt, "append", Seq(stage), szones = szones)) {
-      attempt = latestVersion().getOrElse(0L) + 1
-    }
-    attempt
-  }
+  def resolveDirsRange(statsCol: String, lo: Long, hi: Long,
+                       asOf: Option[Long] = None): Seq[String] =
+    prune(replayLog(asOf), LongZone(statsCol, lo, hi))
 
   /** [[snapshotRange]] for STRING bounds: dirs whose recorded [min,
     * max] provably misses [lo,hi] under binary order are never
@@ -298,31 +337,18 @@ class TxTable(val root: String) {
     */
   def snapshotRangeString(spark: SparkSession, statsCol: String,
                           lo: String, hi: String,
-                          asOf: Option[Long] = None): DataFrame = {
-    val st = replayLog(asOf)
-    val dirs = pruneRangeString(st, statsCol, lo, hi)
-    import org.apache.spark.sql.functions.col
-    if (dirs.isEmpty) noRows(spark, st, asOf)
-    else
-      applyDeletes(spark, scan(spark, dirs, merge = true), st.dvs)
-        .filter(col(statsCol) >= lo && col(statsCol) <= hi)
-  }
+                          asOf: Option[Long] = None): DataFrame =
+    prunedRead(spark, asOf, col(statsCol).between(lo, hi))(
+      prune(_, HexZone(statsCol, toHex(lo), toHex(hi))))
 
   /** The dirs a string-range read must open (exposed for testing). */
   def resolveDirsRangeString(statsCol: String, lo: String, hi: String,
                              asOf: Option[Long] = None): Seq[String] =
-    pruneRangeString(replayLog(asOf), statsCol, lo, hi)
+    prune(replayLog(asOf), HexZone(statsCol, toHex(lo), toHex(hi)))
 
-  private def pruneRangeString(st: LogState, statsCol: String,
-                               lo: String, hi: String): Seq[String] = {
-    val (loH, hiH) = (TxTable.toHex(lo), TxTable.toHex(hi))
-    st.dirs.filter { d =>
-      st.szones.getOrElse(d, Map.empty).get(statsCol) match {
-        case Some((mn, mx)) => !(mx < loH || mn > hiH)
-        case None => true // no zone: must read
-      }
-    }
-  }
+  /** The dirs of `st` that no annotation proves to miss `range`. */
+  private def prune(st: LogState, range: Ann): Seq[String] =
+    st.dirs.filterNot(d => st.anns.getOrElse(d, Vector.empty).exists(misses(_, range)))
 
   /** Append with a BLOOM FILTER on long column `bloomCol`: the filter
     * is written to a SIDECAR file next to the log (sized from the
@@ -335,38 +361,23 @@ class TxTable(val root: String) {
     * files).
     */
   def appendWithBloom(df: DataFrame, bloomCol: String): Long = {
-    // Stage FIRST (round 15): the former shape computed the batch's
-    // whole lineage three times — count job, bloom-build job, staged
-    // write. Now the write is the only execution of the lineage; the
-    // exact row count comes from the staged footers (driver-side
-    // metadata, no job) and the filter builds from a read-back of the
-    // staged files. Bits are identical: same values (the staged rows),
-    // same expectedNumItems (footer row count == df.count()), same
-    // fpp, and BloomFilter insertion is order-invariant.
+    // The write is the only execution of the lineage: the exact row
+    // count comes from the staged footers (no job) and the filter
+    // builds from a read-back of the staged files.
     val stage = stageData(df)
     val n = footerRowCount(df.sparkSession, stage)
     val bf =
       if (n == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, 0.03)
       else scan(df.sparkSession, Seq(stage), merge = false)
         .stat.bloomFilter(bloomCol, n, 0.03)
-    var attempt = latestVersion().getOrElse(0L) + 1
-    var published = false
-    while (!published) {
-      val sidecar = f"b$attempt%010d.bloom"
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
-      // Sidecar exists in full BEFORE the manifest names it (same
-      // write-then-publish discipline as the data dirs); a losing race
-      // leaves an orphan sidecar, deleted below.
-      Files.write(logDir.resolve(sidecar), bos.toByteArray)
-      published = tryPublish(attempt, "append", Seq(stage), None,
-        Some((bloomCol, sidecar)))
-      if (!published) {
-        Files.deleteIfExists(logDir.resolve(sidecar))
-        attempt = latestVersion().getOrElse(0L) + 1
-      }
-    }
-    attempt
+    // The sidecar exists in full BEFORE a manifest names it (the data
+    // dirs' write-then-publish order); a crash between the two leaves
+    // an orphan for [[vacuum]].
+    val sidecar = s"b${java.util.UUID.randomUUID()}.bloom"
+    val out = Files.newOutputStream(logDir.resolve(sidecar))
+    try bf.writeTo(out) finally out.close()
+    publishAtHead(_ => Manifest("append", Seq(stage),
+      anns = Seq(0 -> BloomRef(bloomCol, sidecar))))
   }
 
   /** Point-lookup read: dirs whose Bloom filter proves `value` absent
@@ -376,34 +387,38 @@ class TxTable(val root: String) {
     * the pruning, the dir set AND the DV set.
     */
   def snapshotEquals(spark: SparkSession, eqCol: String, value: Long,
-                     asOf: Option[Long] = None): DataFrame = {
-    val st = replayLog(asOf)
-    val dirs = pruneEquals(st, eqCol, value)
-    import org.apache.spark.sql.functions.col
-    if (dirs.isEmpty) noRows(spark, st, asOf)
-    else
-      // Merged schema for the same reason as snapshotRange.
-      applyDeletes(spark, scan(spark, dirs, merge = true), st.dvs)
-        .filter(col(eqCol) === value)
-  }
+                     asOf: Option[Long] = None): DataFrame =
+    prunedRead(spark, asOf, col(eqCol) === value)(pruneEquals(_, eqCol, value))
 
   /** The dirs a point lookup must open (exposed for testing). */
   def resolveDirsEquals(eqCol: String, value: Long,
                         asOf: Option[Long] = None): Seq[String] =
     pruneEquals(replayLog(asOf), eqCol, value)
 
-  private def pruneEquals(st: LogState, eqCol: String,
-                          value: Long): Seq[String] =
-    st.dirs.filter { d =>
-      st.blooms.get(d) match {
-        case Some((c, sidecar)) if c == eqCol =>
-          val in = Files.newInputStream(logDir.resolve(sidecar))
-          try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-            .mightContainLong(value)
-          finally in.close()
-        case _ => true // no usable filter: must read
-      }
-    }
+  private def pruneEquals(st: LogState, eqCol: String, value: Long): Seq[String] =
+    st.dirs.filterNot(d => st.anns.getOrElse(d, Vector.empty).exists {
+      case BloomRef(c, sidecar) if c == eqCol =>
+        val in = Files.newInputStream(logDir.resolve(sidecar))
+        try !org.apache.spark.util.sketch.BloomFilter.readFrom(in).mightContainLong(value)
+        finally in.close()
+      case _ => false
+    })
+
+  /** A read of the dirs `keep` picks from the state at `asOf`, with
+    * deletes applied and the residual `cond`; when `keep` picks none,
+    * an empty frame with the live dirs' merged schema.
+    */
+  private def prunedRead(spark: SparkSession, asOf: Option[Long], cond: Column)(
+      keep: LogState => Seq[String]): DataFrame = {
+    val st = replayLog(asOf)
+    val dirs = keep(st)
+    // Merged schema: on an evolved table one dir's schema can lack the
+    // filtered column entirely (unresolved-column at read). Rows
+    // predating the column read as NULL and fail the predicate.
+    if (dirs.isEmpty)
+      scan(spark, liveDirs(st, asOf), merge = true).filter(org.apache.spark.sql.functions.lit(false))
+    else applyDeletes(spark, scan(spark, dirs, merge = true), st.dvs).filter(cond)
+  }
 
   /** CHANGES FEED: every row appended in versions (afterVersion,
     * untilVersion], stamped with its `_commit_version` — the
@@ -463,22 +478,6 @@ class TxTable(val root: String) {
     parts.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** The dirs a range read must open ([[snapshotRange]]'s pruning,
-    * exposed for inspection/testing).
-    */
-  def resolveDirsRange(statsCol: String, lo: Long, hi: Long,
-                       asOf: Option[Long] = None): Seq[String] =
-    pruneRange(replayLog(asOf), statsCol, lo, hi)
-
-  private def pruneRange(st: LogState, statsCol: String,
-                         lo: Long, hi: Long): Seq[String] =
-    st.dirs.filter { d =>
-      st.zones.get(d).flatMap(_.get(statsCol)) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true // no usable zone: must read
-      }
-    }
-
   /** Replace the visible table with `df` as a new committed version. */
   def overwrite(df: DataFrame): Long = commit(df, "overwrite")
 
@@ -492,7 +491,7 @@ class TxTable(val root: String) {
                      action: String = "append"): Boolean = {
     if (Files.exists(manifestPath(version))) return false // cheap pre-check
     val stage = stageData(df)
-    val won = tryPublish(version, action, Seq(stage))
+    val won = tryPublish(version, Manifest(action, Seq(stage)))
     if (!won) graft.TmpIO.deleteRecursively(new java.io.File(stage))
     won
   }
@@ -533,18 +532,15 @@ class TxTable(val root: String) {
                                        readVersion: Long, readTable: Boolean,
                                        readRanges: Seq[(String, Long, Long)]): Long = {
     val stage = stageData(df)
-    var attempt = latestVersion().getOrElse(0L) + 1
-    while (true) {
-      try validateNoConflict(readVersion, attempt - 1, readTable, readRanges)
+    publishAtHead { v =>
+      try validateNoConflict(readVersion, v - 1, readTable, readRanges)
       catch {
         case e: ConcurrentWriteException =>
           graft.TmpIO.deleteRecursively(new java.io.File(stage))
           throw e
       }
-      if (tryPublish(attempt, action, Seq(stage))) return attempt
-      attempt = latestVersion().getOrElse(0L) + 1
+      Manifest(action, Seq(stage))
     }
-    -1L // unreachable
   }
 
   /** Throw iff a commit in (readVersion, head] could have changed
@@ -572,15 +568,10 @@ class TxTable(val root: String) {
           // Range-only reader: the append passes iff its zones PROVE
           // every appended dir misses every read range; a dir without a
           // zone for the read column might overlap — conservative fail.
-          val disjoint = m.dirs.zipWithIndex.forall { case (_, i) =>
-            readRanges.forall { case (c, lo, hi) =>
-              val z = m.zones.collectFirst {
-                case (zi, zc, mn, mx) if zi == i && zc == c => (mn, mx) }
-                .orElse(m.stats.collect { case (sc, mn, mx) if sc == c => (mn, mx) })
-              z.exists { case (mn, mx) => mx < lo || mn > hi }
-            }
-          }
-          if (!disjoint) fail("append overlapping the read ranges")
+          val appended = replayStep(LogState.Empty, m)
+          if (readRanges.exists { case (c, lo, hi) =>
+                prune(appended, LongZone(c, lo, hi)).nonEmpty })
+            fail("append overlapping the read ranges")
         }
       }
     }
@@ -591,13 +582,8 @@ class TxTable(val root: String) {
     * DataFrame is pinned to this snapshot no matter how many commits
     * land while it is being consumed.
     */
-  def snapshot(spark: SparkSession, asOf: Option[Long] = None): DataFrame = {
-    val (dirs, dvs) = resolveDirsAndDvs(asOf) // one log replay per read
-    if (dirs.isEmpty)
-      throw new IllegalStateException(s"TxTable $root: no committed data" +
-        asOf.map(v => s" at or before version $v").getOrElse(""))
-    applyDeletes(spark, scan(spark, dirs, merge = false), dvs)
-  }
+  def snapshot(spark: SparkSession, asOf: Option[Long] = None): DataFrame =
+    fullRead(spark, asOf, merge = false)
 
   /** Snapshot read under SCHEMA EVOLUTION: commits may ADD columns
     * over the table's life (the additive evolution every long-lived
@@ -607,90 +593,86 @@ class TxTable(val root: String) {
     * merge costs one footer per dir, read once per dir for the life of
     * this instance ([[readSchema]]).
     */
-  def snapshotEvolved(spark: SparkSession, asOf: Option[Long] = None): DataFrame = {
-    val (dirs, dvs) = resolveDirsAndDvs(asOf) // one log replay per read
-    if (dirs.isEmpty)
-      throw new IllegalStateException(s"TxTable $root: no committed data" +
-        asOf.map(v => s" at or before version $v").getOrElse(""))
-    applyDeletes(spark, scan(spark, dirs, merge = true), dvs)
+  def snapshotEvolved(spark: SparkSession, asOf: Option[Long] = None): DataFrame =
+    fullRead(spark, asOf, merge = true)
+
+  private def fullRead(spark: SparkSession, asOf: Option[Long],
+                       merge: Boolean): DataFrame = {
+    val st = replayLog(asOf) // one log replay per read
+    applyDeletes(spark, scan(spark, liveDirs(st, asOf), merge), st.dvs)
   }
 
+  /** `st`'s dirs; fails when there are none. */
+  private def liveDirs(st: LogState, asOf: Option[Long]): Seq[String] =
+    if (st.dirs.nonEmpty) st.dirs
+    else throw new IllegalStateException(s"TxTable $root: no committed data" +
+      asOf.map(v => s" at or before version $v").getOrElse(""))
+
   /** The full log state at `asOf`, from ONE replay: visible data dirs,
-    * active DV dirs, per-dir zone maps and per-dir Bloom refs. Every
-    * read path folds THIS once instead of paying separate replays for
-    * dirs, DVs and skipping metadata.
+    * active DV dirs and each dir's annotations. Every read path folds
+    * THIS once instead of paying separate replays for dirs, DVs and
+    * skipping metadata.
     *
     * Visibility folding: `delete` (and dvs-bearing `append`, the
     * atomic-update shape) manifests accumulate DV dirs; an `overwrite`
     * replaces the dir AND dv sets with its own lists (a data rewrite
     * either materialized the deletes — empty list, the OPTIMIZE path —
     * or explicitly carries the active set forward, the checkpoint/
-    * restore path). Zone/Bloom ANNOTATIONS stick to immutable dirs
-    * permanently — a zone recorded by the manifest that created a dir
-    * stays valid however often a later compaction re-lists it;
-    * visibility is the dirs fold's job, annotation only decorates.
-    * Zones are per-dir per-COLUMN maps: one dir may carry min/max for
-    * several caller-named columns (multi-column data skipping).
+    * restore path). ANNOTATIONS stick to immutable dirs permanently —
+    * a zone recorded by the manifest that created a dir stays valid
+    * however often a later compaction re-lists it; visibility is the
+    * dirs fold's job, annotation only decorates. A dir holds at most
+    * one annotation per kind and column; a later one replaces it.
     */
   private case class LogState(dirs: Vector[String], dvs: Vector[String],
-                              zones: Map[String, Map[String, (Long, Long)]],
-                              blooms: Map[String, (String, String)],
-                              szones: Map[String, Map[String, (String, String)]]
-                                = Map.empty)
+                              anns: Map[String, Vector[Ann]])
+  private object LogState {
+    val Empty: LogState = LogState(Vector.empty, Vector.empty, Map.empty)
+  }
 
   private def replayLog(asOf: Option[Long]): LogState = {
     val kept = versions().filter(v => asOf.forall(v <= _))
-    val empty = LogState(Vector.empty, Vector.empty, Map.empty, Map.empty,
-      Map.empty)
     // Fast path: a self-contained checkpoint manifest ([[checkpoint]])
-    // carries the FULL state — dirs, DVs, per-dir zones and per-dir
-    // Bloom refs — so replay folds only the tail after it. The
-    // `_last_checkpoint` pointer is a best-effort hint (written after
-    // the publish, racy by design): a stale, missing, or post-asOf
-    // pointer just falls back to the full fold, never to a wrong one.
+    // carries the FULL state — dirs, DVs and annotations — so replay
+    // folds only the tail after it. The `_last_checkpoint` pointer is a
+    // best-effort hint (written after the publish, racy by design): a
+    // stale, missing, or post-asOf pointer just falls back to the full
+    // fold, never to a wrong one.
     val start = lastCheckpointVersion().filter(cv =>
       kept.contains(cv) && asOf.forall(cv <= _))
     val (init, tail) = start match {
       case Some(cv) =>
         val m = readManifest(cv)
         if (m.action == "checkpoint")
-          (replayStep(empty, m), kept.filter(_ > cv))
-        else (empty, kept) // corrupt pointer: full replay
-      case None => (empty, kept)
+          (replayStep(LogState.Empty, m), kept.filter(_ > cv))
+        else (LogState.Empty, kept) // corrupt pointer: full replay
+      case None => (LogState.Empty, kept)
     }
     tail.foldLeft(init)((st, v) => replayStep(st, readManifest(v)))
   }
 
   private def replayStep(st: LogState, m: Manifest): LogState = {
-    // Commit-level stats annotate every dir of the commit (the
-    // append path); index-keyed zones annotate dirs individually
-    // (the clustered-rewrite / multi-column / checkpoint path) and
-    // extend or override the commit-level entry column by column.
-    val withStats = m.stats match {
-      case Some((c, mn, mx)) => m.dirs.foldLeft(st.zones) { (z, d) =>
-        z.updated(d, z.getOrElse(d, Map.empty) + (c -> ((mn, mx))))
+    val anns = m.anns.foldLeft(st.anns) { case (acc, (i, a)) =>
+      m.dirs.lift(i).fold(acc) { d =>
+        acc.updated(d, acc.getOrElse(d, Vector.empty)
+          .filterNot(b => b.getClass == a.getClass && b.col == a.col) :+ a)
       }
-      case None => st.zones
-    }
-    val zones = m.zones.foldLeft(withStats) { case (z, (i, c, mn, mx)) =>
-      m.dirs.lift(i).fold(z)(d =>
-        z.updated(d, z.getOrElse(d, Map.empty) + (c -> ((mn, mx)))))
-    }
-    val withBloom = m.bloom.fold(st.blooms)(b => st.blooms ++ m.dirs.map(_ -> b))
-    val blooms = m.dblooms.foldLeft(withBloom) { case (b, (i, c, f)) =>
-      m.dirs.lift(i).fold(b)(d => b.updated(d, (c, f)))
-    }
-    val szones = m.szones.foldLeft(st.szones) { case (z, (i, c, lo, hi)) =>
-      m.dirs.lift(i).fold(z)(d =>
-        z.updated(d, z.getOrElse(d, Map.empty) + (c -> ((lo, hi)))))
     }
     m.action match {
       case "overwrite" | "checkpoint" =>
-        LogState(m.dirs.toVector, m.dvs.toVector, zones, blooms, szones)
+        LogState(m.dirs.toVector, m.dvs.toVector, anns)
       case _ =>
-        LogState(st.dirs ++ m.dirs, st.dvs ++ m.dvs, zones, blooms, szones)
+        LogState(st.dirs ++ m.dirs, st.dvs ++ m.dvs, anns)
     }
   }
+
+  /** `st`'s annotations keyed by index into `st.dirs`: what a manifest
+    * re-listing those dirs (checkpoint, clone) carries.
+    */
+  private def annotationsOf(st: LogState): Seq[(Int, Ann)] =
+    st.dirs.zipWithIndex.flatMap { case (d, i) =>
+      st.anns.getOrElse(d, Vector.empty).map(i -> _)
+    }
 
   private def lastCheckpointPath: Path = logDir.resolve("_last_checkpoint")
 
@@ -706,10 +688,10 @@ class TxTable(val root: String) {
 
   /** Publish a SELF-CONTAINED log checkpoint (the Delta `_last_checkpoint`
     * analog): one `checkpoint` manifest carrying the complete current
-    * state — live dirs, active DV dirs, per-dir zone maps AND per-dir
-    * Bloom refs — plus a pointer file so readers fold checkpoint +
-    * tail instead of the whole history. No data is staged or moved;
-    * the cost is one manifest write however large the table.
+    * state — live dirs, active DV dirs and every dir's annotations —
+    * plus a pointer file so readers fold checkpoint + tail instead of
+    * the whole history. No data is staged or moved; the cost is one
+    * manifest write however large the table.
     *
     * This is what keeps replay O(recent commits) on a table that has
     * accumulated a million commits: a checkpoint carries the zone and
@@ -726,27 +708,9 @@ class TxTable(val root: String) {
     * tail length, never correctness.
     */
   def checkpoint(): Long = {
-    var v = latestVersion().getOrElse(0L) + 1
-    var st = replayLog(None)
-    def zonesOf(s: LogState): Seq[(Int, String, Long, Long)] =
-      s.dirs.zipWithIndex.flatMap { case (d, i) =>
-        s.zones.getOrElse(d, Map.empty).toSeq.sortBy(_._1)
-          .map { case (c, (mn, mx)) => (i, c, mn, mx) }
-      }
-    def dbloomsOf(s: LogState): Seq[(Int, String, String)] =
-      s.dirs.zipWithIndex.flatMap { case (d, i) =>
-        s.blooms.get(d).map { case (c, f) => (i, c, f) }
-      }
-    def szonesOf(s: LogState): Seq[(Int, String, String, String)] =
-      s.dirs.zipWithIndex.flatMap { case (d, i) =>
-        s.szones.getOrElse(d, Map.empty).toSeq.sortBy(_._1)
-          .map { case (c, (lo, hi)) => (i, c, lo, hi) }
-      }
-    while (!tryPublish(v, "checkpoint", st.dirs, zones = zonesOf(st),
-                       dblooms = dbloomsOf(st), dvs = st.dvs,
-                       szones = szonesOf(st))) {
-      v = latestVersion().getOrElse(0L) + 1
-      st = replayLog(None)
+    val v = publishAtHead { _ =>
+      val st = replayLog(None)
+      Manifest("checkpoint", st.dirs, st.dvs, annotationsOf(st))
     }
     val tmp = Files.createTempFile(logDir, "._lc-", ".tmp")
     try {
@@ -772,54 +736,50 @@ class TxTable(val root: String) {
   def resolveDvDirs(asOf: Option[Long] = None): Seq[String] =
     resolveDirsAndDvs(asOf)._2
 
-  /** DV-applied live read KEEPING the (_dv_file, _dv_row) physical
-    * identity columns — the shared first stage of [[deleteWhere]] and
-    * [[updateWhere]] (both must address the surviving rows by
-    * position to tombstone them).
+  /** `df` with the (_dv_file, _dv_row) physical identity of each row,
+    * less the rows the DV dirs tombstone: tombstones are (file_path,
+    * row_index) pairs — Spark's parquet metadata columns give every row
+    * a stable physical identity with zero storage overhead — and
+    * removal is one BROADCAST anti-join (the DV set is bounded by
+    * delete volume since the last OPTIMIZE, not by table size; a
+    * pipeline that lets deletes grow table-sized has an
+    * OPTIMIZE-cadence problem, not a join-strategy one).
     */
-  private def liveKeyed(spark: SparkSession, dirs: Seq[String],
-                        dvDirs: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    // Merged schema: on a schema-evolved table (the snapshotEvolved
-    // shape) the matched rows must carry the UNION schema — a read
-    // pinned to one dir's schema would silently drop the evolved
-    // columns from every replacement row updateWhere writes back.
-    val raw = scan(spark, dirs, merge = true)
+  private def keyed(spark: SparkSession, df: DataFrame,
+                    dvDirs: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.broadcast
+    val k = df
       .withColumn("_dv_file", col("_metadata.file_path"))
       .withColumn("_dv_row", col("_metadata.row_index"))
-    if (dvDirs.isEmpty) raw
+    if (dvDirs.isEmpty) k
     else {
       val dv = spark.read.schema(DvSchema).parquet(dvDirs: _*)
-      raw.join(broadcast(dv),
-        raw("_dv_file") === dv("file_path")
-          && raw("_dv_row") === dv("row_index"), "left_anti")
+      k.join(broadcast(dv),
+        k("_dv_file") === dv("file_path") && k("_dv_row") === dv("row_index"),
+        "left_anti")
     }
   }
 
-  /** Apply active deletion vectors to a raw multi-dir scan: tombstones
-    * are (file_path, row_index) pairs — Spark's parquet metadata
-    * columns give every row a stable physical identity with zero
-    * storage overhead — and removal is one BROADCAST anti-join (the
-    * DV set is bounded by delete volume since the last OPTIMIZE, not
-    * by table size; a pipeline that lets deletes grow table-sized has
-    * an OPTIMIZE-cadence problem, not a join-strategy one). The
+  /** DV-applied live read KEEPING the (_dv_file, _dv_row) columns — the
+    * shared first stage of [[deleteWhere]] and [[updateWhere]] (both
+    * must address the surviving rows by position to tombstone them).
+    * Merged schema: on a schema-evolved table the matched rows must
+    * carry the UNION schema — a read pinned to one dir's schema would
+    * silently drop the evolved columns from every replacement row
+    * updateWhere writes back.
+    */
+  private def liveKeyed(spark: SparkSession, dirs: Seq[String],
+                        dvDirs: Seq[String]): DataFrame =
+    keyed(spark, scan(spark, dirs, merge = true), dvDirs)
+
+  /** Apply active deletion vectors to a raw multi-dir scan. The
     * metadata columns are projected only when DVs are active, so the
-    * no-delete fast path is the plain vectorized scan, bit-identical
-    * plans to before this feature existed.
+    * no-delete fast path is the plain vectorized scan.
     */
   private def applyDeletes(spark: SparkSession, df: DataFrame,
-                           dvDirs: Seq[String]): DataFrame = {
-    if (dvDirs.isEmpty) return df
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val keyed = df
-      .withColumn("_dv_file", col("_metadata.file_path"))
-      .withColumn("_dv_row", col("_metadata.row_index"))
-    val dv = spark.read.schema(DvSchema).parquet(dvDirs: _*)
-    keyed.join(broadcast(dv),
-        keyed("_dv_file") === dv("file_path")
-          && keyed("_dv_row") === dv("row_index"), "left_anti")
-      .drop("_dv_file", "_dv_row")
-  }
+                           dvDirs: Seq[String]): DataFrame =
+    if (dvDirs.isEmpty) df
+    else keyed(spark, df, dvDirs).drop("_dv_file", "_dv_row")
 
   /** MERGE-ON-READ row deletion (the Delta/Iceberg deletion-vector
     * analog): matching rows are tombstoned by physical position
@@ -833,29 +793,16 @@ class TxTable(val root: String) {
     * exact: a snapshot BEFORE the delete version sees every row.
     * Tombstones are computed against the DV-APPLIED snapshot, so
     * re-deleting an already-deleted row never duplicates entries.
-    * Optimistic like every commit; on losing the head race the staged
-    * DV is stale (a concurrent OPTIMIZE may have rewritten the very
-    * files it points into) — it is dropped and recomputed.
+    * Optimistic ([[rewriteAtHead]]): on losing the head race the
+    * staged DV is stale (a concurrent OPTIMIZE may have rewritten the
+    * very files it points into) — it is dropped and recomputed.
     */
-  def deleteWhere(spark: SparkSession,
-                  cond: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.col
-    while (true) {
-      val head = latestVersion().getOrElse(0L)
-      val (dirs, dvDirs) = resolveDirsAndDvs()
-      if (dirs.isEmpty)
-        throw new IllegalStateException(s"TxTable $root: nothing to delete from")
-      val tomb = liveKeyed(spark, dirs, dvDirs).filter(cond)
-        .select(col("_dv_file").as("file_path"), col("_dv_row").as("row_index"))
-      val stage = stageData(tomb)
-      if (tryPublish(head + 1, "delete", Nil, dvs = Seq(stage)))
-        return head + 1
-      // Lost the head race: the tombstones may point into files a
-      // concurrent OPTIMIZE just retired — recompute against the new head.
-      graft.TmpIO.deleteRecursively(new java.io.File(stage))
+  def deleteWhere(spark: SparkSession, cond: Column): Long =
+    rewriteAtHead("delete from") { st =>
+      val stage = stageData(liveKeyed(spark, st.dirs, st.dvs).filter(cond)
+        .select(col("_dv_file").as("file_path"), col("_dv_row").as("row_index")))
+      Some((Manifest("delete", Nil, Seq(stage)), Seq(stage)))
     }
-    -1L // unreachable
-  }
 
   /** MERGE-ON-READ UPDATE: tombstone the matching rows AND append
     * their transformed replacements in ONE manifest — an `append`
@@ -867,38 +814,26 @@ class TxTable(val root: String) {
     * at 100 TB. `set` maps column name → replacement expression
     * evaluated on the matched rows; unlisted columns carry over.
     */
-  def updateWhere(spark: SparkSession, cond: org.apache.spark.sql.Column,
-                  set: Map[String, org.apache.spark.sql.Column]): Long = {
-    import org.apache.spark.sql.functions.col
-    while (true) {
-      val head = latestVersion().getOrElse(0L)
-      val (dirs, dvDirs) = resolveDirsAndDvs()
-      if (dirs.isEmpty)
-        throw new IllegalStateException(s"TxTable $root: nothing to update")
+  def updateWhere(spark: SparkSession, cond: Column,
+                  set: Map[String, Column]): Long =
+    rewriteAtHead("update") { st =>
       val dataCols = // union schema: see liveKeyed's note
-        scan(spark, dirs, merge = true).columns.toSeq
+        scan(spark, st.dirs, merge = true).columns.toSeq
       // A typo'd set key would otherwise be a silent no-op that still
       // commits tombstones + unchanged replacements.
       val unknown = set.keySet -- dataCols.toSet
       require(unknown.isEmpty,
         s"TxTable $root: updateWhere set keys not in the table schema: " +
           unknown.mkString(", "))
-      val matched = liveKeyed(spark, dirs, dvDirs).filter(cond).persist()
+      val matched = liveKeyed(spark, st.dirs, st.dvs).filter(cond).persist()
       try {
-        val tomb = matched
-          .select(col("_dv_file").as("file_path"), col("_dv_row").as("row_index"))
-        val replaced = matched.select(dataCols.map(c =>
-          set.getOrElse(c, col(c)).as(c)): _*)
-        val dvStage = stageData(tomb)
-        val rowStage = stageData(replaced)
-        if (tryPublish(head + 1, "append", Seq(rowStage), dvs = Seq(dvStage)))
-          return head + 1
-        graft.TmpIO.deleteRecursively(new java.io.File(dvStage))
-        graft.TmpIO.deleteRecursively(new java.io.File(rowStage))
+        val dvStage = stageData(matched
+          .select(col("_dv_file").as("file_path"), col("_dv_row").as("row_index")))
+        val rowStage = stageData(matched.select(dataCols.map(c =>
+          set.getOrElse(c, col(c)).as(c)): _*))
+        Some((Manifest("append", Seq(rowStage), Seq(dvStage)), Seq(dvStage, rowStage)))
       } finally { matched.unpersist(); () }
     }
-    -1L // unreachable
-  }
 
   /** DATA compaction (OPTIMIZE): rewrite the current snapshot into
     * `targetPartitions` files in ONE new dir and commit it as an
@@ -907,31 +842,25 @@ class TxTable(val root: String) {
     * every pre-optimize version still resolves to its original
     * immutable dirs (reclaim them with [[vacuum]] only after dropping
     * history on purpose — they stay manifest-referenced until then).
-    * Optimistic like every commit: losing the race to a concurrent
+    * Optimistic ([[rewriteAtHead]]): losing the race to a concurrent
     * append re-reads the new head and rewrites, so no commit is ever
     * clobbered.
     */
-  def optimizeCompact(spark: SparkSession, targetPartitions: Int = 1): Long = {
-    while (true) {
-      val head = latestVersion().getOrElse(0L)
-      val (dirs, dvDirs) = resolveDirsAndDvs()
-      if (dirs.isEmpty)
-        throw new IllegalStateException(s"TxTable $root: nothing to optimize")
-      // DV-applied read: the rewrite MATERIALIZES merge-on-read deletes,
-      // and the published overwrite (empty dvs) clears the DV set.
-      // Merged schema: a compaction of an evolved table must rewrite
-      // the UNION schema — one dir's schema would permanently drop
-      // evolved columns from the table.
-      val stage = stageData(
-        applyDeletes(spark, scan(spark, dirs, merge = true), dvDirs)
-          .coalesce(math.max(targetPartitions, 1)))
-      if (tryPublish(head + 1, "overwrite", Seq(stage))) return head + 1
-      // Lost to a concurrent commit: the rewrite is stale — drop it
-      // and rebuild against the new head.
-      graft.TmpIO.deleteRecursively(new java.io.File(stage))
+  def optimizeCompact(spark: SparkSession, targetPartitions: Int = 1): Long =
+    rewriteAtHead("optimize") { st =>
+      val stage = stageData(compacted(spark, st.dirs, st.dvs, targetPartitions))
+      Some((Manifest("overwrite", Seq(stage)), Seq(stage)))
     }
-    -1L // unreachable
-  }
+
+  /** `dirs` read DV-applied — the rewrite MATERIALIZES merge-on-read
+    * deletes — under the merged schema (a compaction of an evolved
+    * table must rewrite the UNION schema, or it would permanently drop
+    * evolved columns), in `targetPartitions` partitions.
+    */
+  private def compacted(spark: SparkSession, dirs: Seq[String], dvs: Seq[String],
+                        targetPartitions: Int): DataFrame =
+    applyDeletes(spark, scan(spark, dirs, merge = true), dvs)
+      .coalesce(math.max(targetPartitions, 1))
 
   /** PARTIAL OPTIMIZE (the Delta `OPTIMIZE ... WHERE` analog): compact
     * ONLY the dirs whose `statsCol` zone intersects [lo, hi] — the
@@ -942,42 +871,25 @@ class TxTable(val root: String) {
     * active tombstones untouched; dirs without a zone for `statsCol`
     * are conservatively included (they might hold matching rows).
     * The rewritten dir materializes merge-on-read deletes for the
-    * range it absorbs and carries a fresh zone; DV dirs are carried
-    * forward — tombstones into retired files become no-ops (the
-    * anti-join is by file path), tombstones into kept files stay
-    * live. Optimistic like every commit.
+    * range it absorbs and carries a fresh footer zone; DV dirs are
+    * carried forward — tombstones into retired files become no-ops
+    * (the anti-join is by file path), tombstones into kept files stay
+    * live. Optimistic like every rewrite.
     */
   def optimizeCompactWhere(spark: SparkSession, statsCol: String,
                            lo: Long, hi: Long,
-                           targetPartitions: Int = 1): Long = {
-    import org.apache.spark.sql.functions.{min => fmin, max => fmax, col}
-    while (true) {
-      val head = latestVersion().getOrElse(0L)
-      val st = replayLog(None)
-      if (st.dirs.isEmpty)
-        throw new IllegalStateException(s"TxTable $root: nothing to optimize")
-      val (rewrite, keep) = st.dirs.partition { d =>
-        st.zones.getOrElse(d, Map.empty).get(statsCol) match {
-          case Some((mn, mx)) => !(mx < lo || mn > hi)
-          case None => true // unknown extent: must include
-        }
+                           targetPartitions: Int = 1): Long =
+    rewriteAtHead("optimize") { st =>
+      val hot = prune(st, LongZone(statsCol, lo, hi))
+      if (hot.isEmpty) None // nothing intersects: no-op
+      else {
+        val keep = st.dirs.diff(hot)
+        val stage = stageData(compacted(spark, hot, st.dvs, targetPartitions))
+        val zones = footerZones(stageFooters(spark, stage), Seq(statsCol), string = false)
+          .map(keep.length -> _)
+        Some((Manifest("overwrite", keep :+ stage, st.dvs, zones), Seq(stage)))
       }
-      if (rewrite.isEmpty) return head // nothing intersects: no-op
-      val compacted = applyDeletes(spark, scan(spark, rewrite, merge = true),
-          st.dvs)
-        .coalesce(math.max(targetPartitions, 1))
-      val stage = stageData(compacted)
-      // Zone from the staged rewrite's parquet footers (round 15) —
-      // the read-back aggregation job is a metadata read now.
-      val zones = footerLongZones(stageFooters(spark, stage), Seq(statsCol)).toSeq.map {
-        case (_, (mn, mx)) => (keep.length, statsCol, mn, mx)
-      }
-      if (tryPublish(head + 1, "overwrite", keep :+ stage,
-          zones = zones, dvs = st.dvs)) return head + 1
-      graft.TmpIO.deleteRecursively(new java.io.File(stage))
     }
-    -1L // unreachable
-  }
 
   /** OPTIMIZE with CLUSTERING (the Delta `OPTIMIZE ... ZORDER BY`
     * analog): rewrite the visible snapshot bucketed by `cluster`
@@ -990,15 +902,14 @@ class TxTable(val root: String) {
     *
     * Scale shape: one pass over the snapshot (bucket column is plan-
     * time arithmetic from a 2-scalar min/max read), one partitioned
-    * write, one ≤ nBuckets-row stats read-back. Concurrency: same
-    * optimistic loop as [[optimizeCompact]] — losing the head race
-    * discards the staged rewrite and rebuilds against the new head;
-    * readers never observe an intermediate state because the swap is
-    * a single manifest. `statsCol` must be a BIGINT column (same
-    * contract as [[appendWithStats]]); `__zb` is reserved.
+    * write, and each bucket dir's zones from its parquet footers (no
+    * job). Concurrency: optimistic like every rewrite — losing the
+    * head race discards the staged rewrite and rebuilds against the
+    * new head; readers never observe an intermediate state because the
+    * swap is a single manifest. `statsCol` must be a BIGINT column
+    * (same contract as [[appendWithStats]]); `__zb` is reserved.
     */
-  def optimizeClustered(spark: SparkSession,
-                        cluster: org.apache.spark.sql.Column,
+  def optimizeClustered(spark: SparkSession, cluster: Column,
                         statsCol: String, nBuckets: Int = 8): Long =
     optimizeClusteredMulti(spark, cluster, Seq(statsCol), nBuckets)
 
@@ -1007,69 +918,54 @@ class TxTable(val root: String) {
     * [[snapshotRange]] can prune on any of them — including columns
     * that are not part of the cluster key (useful whenever a second
     * column is correlated with the layout: time with id bands,
-    * revenue with size tiers). One extra min/max pair per bucket per
-    * column in the ≤ nBuckets-row stats read-back; manifests stay
-    * O(buckets × columns) bytes. All `statsCols` must be BIGINT (same
-    * contract as [[appendWithStats]]).
+    * revenue with size tiers). Manifests stay O(buckets × columns)
+    * bytes. All `statsCols` must be BIGINT (same contract as
+    * [[appendWithStats]]).
     */
-  def optimizeClusteredMulti(spark: SparkSession,
-                             cluster: org.apache.spark.sql.Column,
+  def optimizeClusteredMulti(spark: SparkSession, cluster: Column,
                              statsCols: Seq[String],
                              nBuckets: Int = 8): Long = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.{floor, least, lit, max, min}
     require(statsCols.nonEmpty, s"TxTable $root: statsCols must be non-empty")
     val n = math.max(nBuckets, 1)
-    while (true) {
-      val head = latestVersion().getOrElse(0L)
-      val (dirs, dvDirs) = resolveDirsAndDvs()
-      if (dirs.isEmpty)
-        throw new IllegalStateException(s"TxTable $root: nothing to optimize")
-      // DV-applied read: clustering rewrites materialize deletes too.
-      // Merged schema: same union-schema requirement as optimizeCompact.
-      val snap = applyDeletes(spark, scan(spark, dirs, merge = true), dvDirs)
+    rewriteAtHead("optimize") { st =>
+      val snap = applyDeletes(spark, scan(spark, st.dirs, merge = true), st.dvs)
       val ck = cluster.cast("long")
       val r = snap.agg(min(ck), max(ck)).head()
-      if (r.isNullAt(0)) return optimizeCompact(spark, 1) // no key values: plain compact
-      val (lo, hi) = (r.getLong(0), r.getLong(1))
-      val span = math.max(hi - lo + 1, 1L).toDouble
-      // Equi-width bucket from plan-time literals: deterministic
-      // across the write pass and the stats pass.
-      val bucket = least(
-        floor((ck - lit(lo)).cast("double") * lit(n) / lit(span)),
-        lit((n - 1).toLong)).cast("int")
-      val stage = dataDir.resolve(java.util.UUID.randomUUID().toString)
-      Files.createDirectories(dataDir)
-      snap.withColumn("__zb", bucket)
-        .repartition(n, col("__zb"))
-        .write.partitionBy("__zb").parquet(stage.toString)
-      // Per-bucket zones from each bucket dir's parquet footers
-      // (round 15): the former ≤ n-row stats read-back was still a
-      // full columnar scan job over the staged rewrite; the footers
-      // carry the same exact INT64 min/max at zero jobs. Bucket dirs
-      // come from the staged layout itself (empty buckets write no
-      // dir, exactly the rows the groupBy produced).
-      val bucketDirs = {
-        import scala.jdk.CollectionConverters._
-        val ls = Files.list(stage)
-        try ls.iterator().asScala
-          .map(_.getFileName.toString)
-          .filter(_.startsWith("__zb="))
-          .toSeq
-          .sortBy(_.stripPrefix("__zb=").toInt)
-          .map(d => stage.resolve(d).toString)
-        finally ls.close()
+      if (r.isNullAt(0)) { // no key values: a plain one-file compaction
+        val stage = stageData(snap.coalesce(1))
+        Some((Manifest("overwrite", Seq(stage)), Seq(stage)))
+      } else {
+        val (lo, hi) = (r.getLong(0), r.getLong(1))
+        val span = math.max(hi - lo + 1, 1L).toDouble
+        // Equi-width bucket from plan-time literals: deterministic
+        // across the write pass.
+        val bucket = least(
+          floor((ck - lit(lo)).cast("double") * lit(n) / lit(span)),
+          lit((n - 1).toLong)).cast("int")
+        val stage = dataDir.resolve(java.util.UUID.randomUUID().toString)
+        Files.createDirectories(dataDir)
+        snap.withColumn("__zb", bucket)
+          .repartition(n, col("__zb"))
+          .write.partitionBy("__zb").parquet(stage.toString)
+        // Bucket dirs come from the staged layout itself (empty
+        // buckets write no dir).
+        val bucketDirs = {
+          val ls = Files.list(stage)
+          try ls.iterator().asScala
+            .map(_.getFileName.toString)
+            .filter(_.startsWith("__zb="))
+            .toSeq
+            .sortBy(_.stripPrefix("__zb=").toInt)
+            .map(d => stage.resolve(d).toString)
+          finally ls.close()
+        }
+        val zones = bucketDirs.zipWithIndex.flatMap { case (d, i) =>
+          footerZones(stageFooters(spark, d), statsCols, string = false).map(i -> _)
+        }
+        Some((Manifest("overwrite", bucketDirs, anns = zones), Seq(stage.toString)))
       }
-      val zones = bucketDirs.zipWithIndex.flatMap { case (d, i) =>
-        val fz = footerLongZones(stageFooters(spark, d), statsCols)
-        statsCols.flatMap(c => fz.get(c).map { case (mn, mx) => (i, c, mn, mx) })
-      }
-      if (tryPublish(head + 1, "overwrite", bucketDirs, zones = zones))
-        return head + 1
-      // Lost to a concurrent commit: the rewrite is stale — drop it
-      // and rebuild against the new head.
-      graft.TmpIO.deleteRecursively(new java.io.File(stage.toString))
     }
-    -1L // unreachable
   }
 
   /** LOG RETENTION: delete every manifest BELOW the last checkpoint —
@@ -1097,52 +993,49 @@ class TxTable(val root: String) {
     * analog): publish the RESOLVED dir set of that version as a new
     * overwrite head. Zero data movement — history after `toVersion`
     * stays readable (time travel is untouched; this is a new commit,
-    * not a log rewind), and zone/Bloom annotations keep working
-    * because they stick to the immutable dirs via their CREATING
-    * manifests. Same optimistic loop as every other writer.
+    * not a log rewind), and annotations keep working because they
+    * stick to the immutable dirs via their CREATING manifests. Same
+    * publish loop as every other writer.
     */
   def restore(toVersion: Long): Long = {
     // The restored state includes the DVs active AT that version —
     // restoring to a point after a merge-on-read delete must not
     // resurrect the deleted rows. One replay serves both sets.
-    val (dirs, dvs) = resolveDirsAndDvs(Some(toVersion))
-    if (dirs.isEmpty)
+    val st = replayLog(Some(toVersion))
+    if (st.dirs.isEmpty)
       throw new IllegalStateException(
         s"TxTable $root: nothing to restore at version $toVersion")
-    var v = latestVersion().getOrElse(0L) + 1
-    while (!tryPublish(v, "overwrite", dirs, dvs = dvs)) {
-      v = latestVersion().getOrElse(0L) + 1
-    }
-    v
+    publishAtHead(_ => Manifest("overwrite", st.dirs, st.dvs))
   }
 
   /** SHALLOW CLONE (the Delta `CREATE TABLE ... SHALLOW CLONE` analog):
     * create an independent table at `dstRoot` whose v1 manifest
     * REFERENCES this table's resolved data dirs — zero data copied,
-    * one manifest written. Zone annotations are carried over as
-    * per-dir zones so the clone's range reads prune exactly like the
-    * source's. The clone is fully independent afterwards: its commits
-    * land in its own log/data dirs, and its vacuum only ever scans its
-    * OWN dataDir (borrowed source dirs are never orphan candidates).
-    * The shared-fate contract is the same as every shallow-clone
-    * implementation: vacuuming the SOURCE can retire dirs a clone
-    * still references — retention discipline spans clones.
+    * one manifest written. Every annotation is carried over (Bloom
+    * refs as absolute paths to this table's sidecars), so the clone's
+    * range reads and point lookups prune exactly like the source's.
+    * The clone is fully independent afterwards: its commits land in
+    * its own log/data dirs, and its vacuum only ever scans its OWN
+    * dataDir and log (borrowed source dirs and sidecars are never
+    * orphan candidates). The shared-fate contract is the same as every
+    * shallow-clone implementation: vacuuming the SOURCE can retire
+    * dirs a clone still references — retention discipline spans
+    * clones.
     */
   def shallowCloneTo(dstRoot: String, asOf: Option[Long] = None): TxTable = {
-    val st = replayLog(asOf) // one replay: dirs + dvs + zone carry-over
+    val st = replayLog(asOf) // one replay: dirs + dvs + annotations
     if (st.dirs.isEmpty)
       throw new IllegalStateException(
         s"TxTable $root: nothing to clone" +
           asOf.map(v => s" at or before version $v").getOrElse(""))
-    val zones = st.dirs.zipWithIndex.flatMap { case (d, i) =>
-      st.zones.getOrElse(d, Map.empty).map { case (c, (mn, mx)) =>
-        (i, c, mn, mx) }
+    val anns = annotationsOf(st).map {
+      case (i, BloomRef(c, f)) => i -> BloomRef(c, logDir.resolve(f).toAbsolutePath.toString)
+      case e => e
     }
     val dst = new TxTable(dstRoot)
     // Clones see the DV-applied state: borrowed DV dirs ride along
     // exactly like borrowed data dirs (same shared-fate contract).
-    if (!dst.tryPublish(1, "overwrite", st.dirs, zones = zones,
-        dvs = st.dvs))
+    if (!dst.tryPublish(1, Manifest("overwrite", st.dirs, st.dvs, anns)))
       throw new IllegalStateException(
         s"TxTable $dstRoot: destination already has a version 1")
     dst
@@ -1151,8 +1044,7 @@ class TxTable(val root: String) {
   /** Delete data dirs referenced by NO manifest (crash/lost-race
     * orphans — invisible to every reader by construction), plus
     * `_txlog` Bloom sidecars no manifest names (the crash window
-    * between sidecar write and manifest publish leaks one; the
-    * race-loss path cleans up after itself, the crash path cannot).
+    * between sidecar write and manifest publish leaks one).
     * Returns the deleted dir/file names.
     *
     * RETENTION: an in-flight writer's staged-but-unpublished dir is
@@ -1183,7 +1075,6 @@ class TxTable(val root: String) {
         p.getName(dataRoot.getNameCount).toString
       else p.getFileName.toString
     }.toSet
-    import scala.jdk.CollectionConverters._
     val it = Files.list(dataDir)
     val orphans =
       try it.iterator().asScala
@@ -1193,9 +1084,8 @@ class TxTable(val root: String) {
       finally it.close()
     orphans.foreach(o => graft.TmpIO.deleteRecursively(new java.io.File(o)))
     // Orphan Bloom sidecars: same publish discipline, same retention.
-    val liveSidecars =
-      (manifests.flatMap(_.bloom.map(_._2)) ++
-        manifests.flatMap(_.dblooms.map(_._3))).toSet
+    val liveSidecars = manifests.flatMap(_.anns.collect {
+      case (_, BloomRef(_, f)) => f }).toSet
     val deadSidecars =
       if (!Files.isDirectory(logDir)) Nil
       else {
@@ -1211,118 +1101,28 @@ class TxTable(val root: String) {
     (orphans ++ deadSidecars).map(Paths.get(_).getFileName.toString)
   }
 
-  /** `zones` are PER-DIR stats keyed by INDEX into `dirs` (no paths
-    * repeated in the zones JSON, so the hostile-root escaping problem
-    * stays confined to the one dirs array): (dirIndex, column, min,
-    * max). Commit-level `stats` annotates every dir of the commit
-    * (the append path); `zones` annotates dirs individually (the
-    * clustered-rewrite path) — Delta's per-file stats, one level up.
+  /** The manifest codec's reader (the writer is [[TxTable.encode]]).
+    * The only legacy shape: commit-level `stats`/`bloom` annotate
+    * every dir of their commit, ahead of its per-dir entries.
     */
-  private case class Manifest(action: String, dirs: Seq[String],
-                              stats: Option[(String, Long, Long)],
-                              bloom: Option[(String, String)],
-                              zones: Seq[(Int, String, Long, Long)] = Nil,
-                              dvs: Seq[String] = Nil,
-                              dblooms: Seq[(Int, String, String)] = Nil,
-                              szones: Seq[(Int, String, String, String)] = Nil)
-
-  /** JSON string escape for manifest values that carry FILESYSTEM
-    * paths (the table root flows into every dir entry): quote,
-    * backslash, and all control chars. Action/column/sidecar values
-    * are engine-generated identifiers and need none of this.
-    */
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  /** Parse a `"<key>":[...]` path array with a real string-aware scan —
-    * a regex split on commas mis-parses any root containing `","`,
-    * `"` or `]`. Honors the escapes [[jsonEscape]] emits. `required`
-    * distinguishes the mandatory dirs array from the optional dvs one.
-    */
-  private def parsePathArray(s: String, v: Long, key: String,
-                             required: Boolean): Seq[String] = {
-    val ki = s.indexOf("\"" + key + "\"")
-    val start = if (ki < 0) -1 else s.indexOf('[', ki)
-    if (start < 0) {
-      if (!required) return Seq.empty
-      throw new IllegalStateException(
-        s"TxTable $root: manifest v$v missing $key")
-    }
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var i = start + 1
-    var inStr = false
-    var done = false
-    while (!done) {
-      if (i >= s.length) throw new IllegalStateException(
-        s"TxTable $root: manifest v$v has an unterminated $key array")
-      val c = s.charAt(i)
-      if (inStr) c match {
-        case '\\' =>
-          s.charAt(i + 1) match {
-            case 'u' =>
-              sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-              i += 5
-            case esc => sb += esc; i += 1
-          }
-        case '"' => out += sb.toString; sb.clear(); inStr = false
-        case ch => sb += ch
-      } else c match {
-        case '"' => inStr = true
-        case ']' => done = true
-        case _ => () // comma / whitespace between entries
-      }
-      i += 1
-    }
-    out.toSeq
-  }
-
   private def readManifest(v: Long): Manifest = {
-    val s = new String(Files.readAllBytes(manifestPath(v)), "UTF-8")
-    val action = "\"action\"\\s*:\\s*\"([^\"]*)\"".r
-      .findFirstMatchIn(s).map(_.group(1))
-      .getOrElse(throw new IllegalStateException(
-        s"TxTable $root: manifest v$v missing action"))
-    val dirs = parsePathArray(s, v, "dirs", required = true)
-    val dvs = parsePathArray(s, v, "dvs", required = false)
-    val stats =
-      ("\"stats\"\\s*:\\s*\\{\"column\":\"([^\"]*)\"," +
-        "\"min\":(-?\\d+),\"max\":(-?\\d+)\\}").r
-        .findFirstMatchIn(s)
-        .map(m => (m.group(1), m.group(2).toLong, m.group(3).toLong))
-    val bloom =
-      "\"bloom\"\\s*:\\s*\\{\"column\":\"([^\"]*)\",\"file\":\"([^\"]*)\"\\}".r
-        .findFirstMatchIn(s)
-        .map(m => (m.group(1), m.group(2)))
-    // Index-keyed per-dir zones: engine-generated identifiers and
-    // integers only, so a regex scan is exact here (unlike dirs).
-    val zones =
-      ("\\{\"i\":(\\d+),\"column\":\"([^\"]*)\"," +
-        "\"min\":(-?\\d+),\"max\":(-?\\d+)\\}").r
-        .findAllMatchIn(s)
-        .map(m => (m.group(1).toInt, m.group(2),
-          m.group(3).toLong, m.group(4).toLong))
-        .toSeq
-    // Index-keyed per-dir Bloom refs (the checkpoint path): sidecar
-    // file names are engine-generated UUIDs, so the regex scan is
-    // exact here too.
-    val dblooms =
-      "\\{\"i\":(\\d+),\"column\":\"([^\"]*)\",\"file\":\"([^\"]*)\"\\}".r
-        .findAllMatchIn(s)
-        .map(m => (m.group(1).toInt, m.group(2), m.group(3)))
-        .toSeq
-    // String zones: bounds are lowercase hex ([0-9a-f] only), so the
-    // regex scan is exact however hostile the original string values.
-    val szones =
-      "\\{\"i\":(\\d+),\"column\":\"([^\"]*)\",\"slo\":\"([0-9a-f]*)\",\"shi\":\"([0-9a-f]*)\"\\}".r
-        .findAllMatchIn(s)
-        .map(m => (m.group(1).toInt, m.group(2), m.group(3), m.group(4)))
-        .toSeq
-    Manifest(action, dirs, stats, bloom, zones, dvs, dblooms, szones)
+    val o = Json.readTree(Files.readAllBytes(manifestPath(v)))
+    def field(key: String): JsonNode = Option(o.get(key)).getOrElse(
+      throw new IllegalStateException(s"TxTable $root: manifest v$v missing $key"))
+    def texts(n: JsonNode): Seq[String] = n.elements().asScala.map(_.asText).toSeq
+    def longZone(e: JsonNode) =
+      LongZone(e.get("column").asText, e.get("min").asLong, e.get("max").asLong)
+    def bloomRef(e: JsonNode) = BloomRef(e.get("column").asText, e.get("file").asText)
+    val dirs = texts(field("dirs"))
+    def everyDir(key: String)(ann: JsonNode => Ann): Seq[(Int, Ann)] =
+      Option(o.get(key)).toSeq.flatMap(e => dirs.indices.map(_ -> ann(e)))
+    def perDir(key: String)(ann: JsonNode => Ann): Seq[(Int, Ann)] =
+      o.path(key).elements().asScala.map(e => e.get("i").asInt -> ann(e)).toSeq
+    Manifest(field("action").asText, dirs, texts(o.path("dvs")),
+      everyDir("stats")(longZone) ++ everyDir("bloom")(bloomRef) ++
+        perDir("zones")(longZone) ++ perDir("dblooms")(bloomRef) ++
+        perDir("szones")(e => HexZone(e.get("column").asText,
+          e.get("slo").asText, e.get("shi").asText)))
   }
 
   private def stageData(df: DataFrame): String = {
@@ -1416,68 +1216,53 @@ class TxTable(val root: String) {
       case None => spark.read.parquet(dirs: _*)
     }
 
-  /** The empty answer of a read that pruned every dir: the merged
-    * schema of the live dirs, planned as an empty relation.
-    */
-  private def noRows(spark: SparkSession, st: LogState,
-                     asOf: Option[Long]): DataFrame = {
-    if (st.dirs.isEmpty)
-      throw new IllegalStateException(s"TxTable $root: no committed data" +
-        asOf.map(v => s" at or before version $v").getOrElse(""))
-    scan(spark, st.dirs, merge = true).filter(org.apache.spark.sql.functions.lit(false))
-  }
-
   /** Exact row count of a staged dir from its footers (no job). */
-  private def footerRowCount(spark: SparkSession, stage: String): Long = {
-    import scala.jdk.CollectionConverters._
+  private def footerRowCount(spark: SparkSession, stage: String): Long =
     stageFooters(spark, stage)
       .flatMap(_._2.getBlocks.asScala.map(_.getRowCount)).sum
-  }
 
-  /** Exact per-column (min, max) of the named INT64 columns over a
-    * staged dir, merged across files/row-groups from the parquet
-    * FOOTERS alone — the same values a min/max aggregation over the
-    * batch returns (INT64 statistics are exact, never truncated), at
-    * zero Spark jobs. Columns absent, non-INT64, or with no non-null
-    * value in any file are OMITTED from the result (→ no zone, the
-    * pre-round-15 behavior for empty/all-null batches). So is a column
-    * with a chunk, in a non-empty row group, whose statistics carry no
-    * min/max and do not show it all-null (statistics disabled, or a
-    * foreign writer): a zone without that chunk could under-cover.
+  /** The zones of the named columns over a staged dir, merged across
+    * its files and row groups from the parquet FOOTERS alone (no Spark
+    * job): a [[LongZone]] per INT64 column, or with `string` a
+    * [[HexZone]] per BINARY column. Each equals the min/max an
+    * aggregation over the staged rows returns: INT64 statistics are
+    * exact, and BINARY ones are untruncated and ordered by unsigned
+    * bytes, Spark's string order. A column is OMITTED (no zone, never
+    * skipped) when it is absent, of the other type, has no non-null
+    * value, or has a chunk in a non-empty row group whose statistics
+    * carry no min/max and do not show it all-null (statistics disabled,
+    * a foreign writer, or a value over parquet's 4 KB statistics
+    * limit): a zone without that chunk could under-cover.
     */
-  private def footerLongZones(
+  private def footerZones(
       footers: Seq[(org.apache.hadoop.fs.Path, org.apache.parquet.hadoop.metadata.ParquetMetadata)],
-      cols: Seq[String]): Map[String, (Long, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val want = cols.toSet
-    val acc = scala.collection.mutable.Map.empty[String, (Long, Long)]
+      cols: Seq[String], string: Boolean): Seq[Ann] = {
+    import org.apache.parquet.column.statistics.Statistics
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val want = if (string) PrimitiveTypeName.BINARY else PrimitiveTypeName.INT64
+    val acc = scala.collection.mutable.Map.empty[String, Statistics[_]]
     var unbounded = Set.empty[String]
-    footers.foreach { case (_, md) =>
-      md.getBlocks.asScala.foreach { b =>
-        b.getColumns.asScala.foreach { c =>
-          val name = c.getPath.toDotString
-          if (want.contains(name)) {
-            val st: org.apache.parquet.column.statistics.Statistics[_] = c.getStatistics
-            if (c.getPrimitiveType.getPrimitiveTypeName !=
-                org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64)
-              unbounded += name
-            else if (st == null || !st.hasNonNullValue) {
-              val allNull = st != null && st.isNumNullsSet && st.getNumNulls == c.getValueCount
-              if (b.getRowCount > 0 && !allNull) unbounded += name
-            } else {
-              val mn = st.genericGetMin.asInstanceOf[java.lang.Long].longValue()
-              val mx = st.genericGetMax.asInstanceOf[java.lang.Long].longValue()
-              acc.get(name) match {
-                case Some((a, z)) =>
-                  acc(name) = (math.min(a, mn), math.max(z, mx))
-                case None => acc(name) = (mn, mx)
-              }
-            }
-          }
+    for ((_, md) <- footers; b <- md.getBlocks.asScala; c <- b.getColumns.asScala) {
+      val name = c.getPath.toDotString
+      val st: Statistics[_] = c.getStatistics
+      if (cols.contains(name)) {
+        if (c.getPrimitiveType.getPrimitiveTypeName != want) unbounded += name
+        else if (st != null && st.hasNonNullValue)
+          acc.getOrElseUpdate(name, Statistics.createStats(c.getPrimitiveType))
+            .mergeStatistics(st)
+        else {
+          val allNull = st != null && st.isNumNullsSet && st.getNumNulls == c.getValueCount
+          if (b.getRowCount > 0 && !allNull) unbounded += name
         }
       }
     }
-    acc.toMap -- unbounded
+    cols.filterNot(unbounded).flatMap(c => acc.get(c).map { s =>
+      (s.genericGetMin, s.genericGetMax) match {
+        case (mn: org.apache.parquet.io.api.Binary, mx: org.apache.parquet.io.api.Binary) =>
+          HexZone(c, hex(mn.getBytes), hex(mx.getBytes))
+        case (mn: java.lang.Long, mx: java.lang.Long) => LongZone(c, mn, mx)
+      }
+    })
   }
 
   /** Stage the batch invisibly, then publish with create-exclusive
@@ -1487,11 +1272,43 @@ class TxTable(val root: String) {
     */
   private def commit(df: DataFrame, action: String): Long = {
     val stage = stageData(df)
-    var attempt = latestVersion().getOrElse(0L) + 1
-    while (!tryPublish(attempt, action, Seq(stage))) {
-      attempt = latestVersion().getOrElse(0L) + 1
+    publishAtHead(_ => Manifest(action, Seq(stage)))
+  }
+
+  /** The one retry-at-head loop: publish `manifest(v)` at v = head + 1,
+    * and after each lost race at the new head + 1 (`manifest` may
+    * re-read the log, and throws to give up). Returns the version won.
+    */
+  @annotation.tailrec
+  private def publishAtHead(manifest: Long => Manifest): Long = {
+    val v = latestVersion().getOrElse(0L) + 1
+    if (tryPublish(v, manifest(v))) v else publishAtHead(manifest)
+  }
+
+  /** The one optimistic rewrite: `derive` a manifest from the state at
+    * head h and publish it at h + 1; after a lost race, delete the dirs
+    * the derivation staged and derive again against the new head.
+    * `derive` returns the manifest and its staged dirs, or None when
+    * the state needs no commit (then the head is returned). Fails on
+    * a table with no data ("nothing to `what`").
+    */
+  @annotation.tailrec
+  private def rewriteAtHead(what: String)(
+      derive: LogState => Option[(Manifest, Seq[String])]): Long = {
+    val head = latestVersion().getOrElse(0L)
+    val st = replayLog(None)
+    if (st.dirs.isEmpty)
+      throw new IllegalStateException(s"TxTable $root: nothing to $what")
+    derive(st) match {
+      case None => head
+      case Some((m, staged)) =>
+        if (tryPublish(head + 1, m)) head + 1
+        else {
+          // Lost to a concurrent commit: the rewrite is stale.
+          staged.foreach(s => graft.TmpIO.deleteRecursively(new java.io.File(s)))
+          rewriteAtHead(what)(derive)
+        }
     }
-    attempt
   }
 
   /** Publish manifest `v` exclusively: full bytes to a temp file, then
@@ -1500,43 +1317,11 @@ class TxTable(val root: String) {
     * because the content exists in full before the name does. Returns
     * false on losing the race.
     */
-  private[graft] def tryPublish(v: Long, action: String, dirs: Seq[String],
-                                stats: Option[(String, Long, Long)] = None,
-                                bloom: Option[(String, String)] = None,
-                                zones: Seq[(Int, String, Long, Long)] = Nil,
-                                dvs: Seq[String] = Nil,
-                                dblooms: Seq[(Int, String, String)] = Nil,
-                                szones: Seq[(Int, String, String, String)] = Nil): Boolean = {
+  private[graft] def tryPublish(v: Long, m: Manifest): Boolean = {
     Files.createDirectories(logDir)
-    def pathArray(ps: Seq[String]): String =
-      ps.map(d => "\"" + jsonEscape(d.replace("\\", "/")) + "\"")
-        .mkString("[", ",", "]")
-    val dirsJson = pathArray(dirs)
-    val dvsJson =
-      if (dvs.isEmpty) "" else s""","dvs":${pathArray(dvs)}"""
-    val statsJson = stats.map { case (c, mn, mx) =>
-      s""","stats":{"column":"$c","min":$mn,"max":$mx}""" }.getOrElse("")
-    val bloomJson = bloom.map { case (c, f) =>
-      s""","bloom":{"column":"$c","file":"$f"}""" }.getOrElse("")
-    val zonesJson =
-      if (zones.isEmpty) ""
-      else zones.map { case (i, c, mn, mx) =>
-        s"""{"i":$i,"column":"$c","min":$mn,"max":$mx}""" }
-        .mkString(""","zones":[""", ",", "]")
-    val dbloomsJson =
-      if (dblooms.isEmpty) ""
-      else dblooms.map { case (i, c, f) =>
-        s"""{"i":$i,"column":"$c","file":"${jsonEscape(f)}"}""" }
-        .mkString(""","dblooms":[""", ",", "]")
-    val szonesJson =
-      if (szones.isEmpty) ""
-      else szones.map { case (i, c, lo, hi) =>
-        s"""{"i":$i,"column":"$c","slo":"$lo","shi":"$hi"}""" }
-        .mkString(""","szones":[""", ",", "]")
-    val json =
-      s"""{"version":$v,"action":"$action","dirs":$dirsJson$statsJson$bloomJson$zonesJson$dbloomsJson$szonesJson$dvsJson}"""
+    val json = encode(v, m)
     val tmp = Files.createTempFile(logDir, s".v$v-", ".tmp")
-    Files.write(tmp, json.getBytes("UTF-8"))
+    Files.write(tmp, json)
     try {
       try { Files.createLink(manifestPath(v), tmp); true }
       catch {
@@ -1546,7 +1331,7 @@ class TxTable(val root: String) {
           // still create-exclusive, with an (accepted) tiny window of
           // partial content instead of none.
           try {
-            Files.write(manifestPath(v), json.getBytes("UTF-8"),
+            Files.write(manifestPath(v), json,
               java.nio.file.StandardOpenOption.CREATE_NEW)
             true
           } catch {

@@ -20,8 +20,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    code, no event log.
   *  - the "run_key" is the streaming checkpoint: a batch is never
   *    replayed into visible state after a restart, and the sink write
-  *    is an idempotent overwrite, so re-delivery converges instead of
-  *    duplicating (naive append would break exactly-once — SURVEY §7.4).
+  *    is an idempotent, atomic replace ([[publish]]), so re-delivery
+  *    converges instead of duplicating (naive append would break
+  *    exactly-once — SURVEY §7.4) and a reader always finds a table.
   *  - the meta aggregate is INCREMENTAL: min/max/count merge in the
   *    streaming state store per key, so each micro-batch does work
   *    proportional to NEW data, not table size. The reference re-scans
@@ -85,12 +86,34 @@ class ReactiveMetaPipeline(
       .outputMode("complete")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      // Idempotent sink: complete-mode snapshot overwrites the meta
-      // table atomically per batch — re-running a batch after failure
-      // rewrites the same result (run_key semantics, sensors.py:15).
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(metaDir)
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => publish(batch) }
       .start()
+  }
+
+  /** The sink: replace the meta table with one complete-mode batch,
+    * atomically. The batch is written to `metaDir/_staging` (parquet
+    * readers skip `_`-prefixed names), then its one part file is
+    * renamed over `metaDir/meta.parquet`, so a reader of `metaDir` sees
+    * the previous table or this one, never none: a batch that fails or
+    * is stopped mid-write leaves the previous table in place. Re-running
+    * a batch after failure rewrites the same result (run_key semantics,
+    * sensors.py:15). The part file's `.crc` stays in staging, since a
+    * checksum beside the target would have to match it.
+    */
+  private[graft] def publish(batch: DataFrame): Unit = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    def parts(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+      val ls = Files.list(dir)
+      try ls.iterator().asScala
+        .filter(p => p.getFileName.toString.startsWith("part-")).toList
+      finally ls.close()
+    }
+    val staging = Paths.get(metaDir, "_staging")
+    batch.coalesce(1).write.mode("overwrite").parquet(staging.toString)
+    Files.move(parts(staging).head, Paths.get(metaDir, "meta.parquet"),
+      StandardCopyOption.ATOMIC_MOVE)
+    // Part files of the former overwrite-the-dir layout.
+    parts(Paths.get(metaDir)).foreach(Files.delete)
   }
 }

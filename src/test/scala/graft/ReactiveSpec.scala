@@ -117,4 +117,23 @@ class ReactiveSpec extends SparkSpec {
         "the checkpoint pins its partition count")
     } finally TmpIO.deleteRecursively(new java.io.File(base))
   }
+
+  test("a batch that fails mid-write leaves the previous meta table readable and unchanged") {
+    val base = tmpDir("reactive_atomic_")
+    val upstream = s"$base/upstream"; val meta = s"$base/meta"; val ckpt = s"$base/ckpt"
+    try {
+      writeBatch(upstream, Seq(("a", 1.0), ("a", 4.0), ("b", 2.0)))
+      val p = new ReactiveMetaPipeline(upstream, meta, ckpt)
+      p.runAvailableNow(spark)
+      val before = metaLines(spark.read.parquet(meta))
+      assert(before == batchMeta(upstream))
+      val failing = spark.range(3).select(lit("z").as("event_type"),
+        raise_error(lit("batch evaluation fails")).cast("double").as("min_value"),
+        lit(0.0).as("max_value"), lit(1L).as("n_events"))
+      intercept[Exception](p.publish(failing))
+      assert(metaLines(spark.read.parquet(meta)) == before)
+      val names = new java.io.File(meta).list().toSet
+      assert(names.contains("meta.parquet") && !names.exists(_.startsWith("part-")), names)
+    } finally TmpIO.deleteRecursively(new java.io.File(base))
+  }
 }

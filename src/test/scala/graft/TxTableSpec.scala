@@ -57,11 +57,11 @@ class TxTableSpec extends SparkSpec {
       val da = s"$dir/t/data/race-a"; val db = s"$dir/t/data/race-b"
       Seq(7).toDF("x").write.parquet(da)
       Seq(8).toDF("x").write.parquet(db)
-      val winA = t.tryPublish(2L, "append", Seq(da))
-      val winB = t.tryPublish(2L, "append", Seq(db))
+      val winA = t.tryPublish(2L, TxTable.Manifest("append", Seq(da)))
+      val winB = t.tryPublish(2L, TxTable.Manifest("append", Seq(db)))
       assert(winA && !winB) // create-exclusive: second EEXISTs
       // The loser retries against the new head, as commit() does.
-      assert(t.tryPublish(3L, "append", Seq(db)))
+      assert(t.tryPublish(3L, TxTable.Manifest("append", Seq(db))))
       assert(t.snapshot(spark).select(col("x")).as[Int].collect().sorted.toSeq
         == Seq(1, 7, 8))
     } finally TmpIO.deleteRecursively(new java.io.File(dir))
