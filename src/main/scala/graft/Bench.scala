@@ -1,4 +1,5 @@
 package graft
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — one JSON line with per-query seconds.
@@ -137,20 +138,16 @@ object Bench {
   private def loadReference(sfDir: String): Map[String, Double] = {
     val path = sys.env.getOrElse("SPARK_GRAFT_REF", "bench_reference.json")
     try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
+      val ref = Json.mapper.readTree(new java.io.File(path))
       // The reference is only meaningful at the SF it was measured at:
       // an sf1 rehearsal against sf0.1 minima would flag every heavy
       // gate. `_sf_dir` is compared by basename so the same corpus
       // staged under a different parent (e.g. /dev/shm) still matches.
-      val sfRe = """"_sf_dir"\s*:\s*"([^"]+)"""".r
-      val refSf = sfRe.findFirstMatchIn(txt).map(_.group(1))
       def base(p: String) = p.stripSuffix("/").split('/').last
-      if (refSf.exists(r => base(r) != base(sfDir))) Map.empty
-      else {
-        val re = """"([A-Za-z0-9_]+)"\s*:\s*([0-9.eE+-]+)""".r
-        re.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
+      if (Option(ref.get("_sf_dir")).exists(r => base(r.asText) != base(sfDir))) Map.empty
+      else ref.properties().asScala.collect {
+        case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
+      }.toMap
     } catch { case _: Throwable => Map.empty }
   }
   private final val RefBar = 4.0
@@ -269,13 +266,7 @@ object Bench {
     val errors = results.collect { case (n, Left(e)) => n -> e }
     def jsonMap(sel: QStat => Double): String =
       timed.map { case (k, v) => "\"" + k + "\":" + sel(v) }.mkString("{", ",", "}")
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val errJson = Json.strings(errors)
     val total = timed.map(_._2.official).sum
     // Full per-query detail goes to a FILE; stdout gets a COMPACT line.
     // The driver captures only the last ~2000 bytes of output and parses
@@ -287,7 +278,7 @@ object Bench {
     // BENCH_local_r{N} record.
     val stalls = timed.filter(_._2.stalled)
     val stallJson = stalls.map { case (k, v) =>
-      s"${q(k)}:{" + "\"median\":" + math.round(v.median * 1000) / 1000.0 +
+      s"${Json.str(k)}:{" + "\"median\":" + math.round(v.median * 1000) / 1000.0 +
         ",\"min\":" + math.round(v.min * 1000) / 1000.0 +
         ",\"reps\":" + v.reps +
         ",\"steal_delta\":" + v.stealDelta +

@@ -45,24 +45,9 @@ object Verify {
       }
       GraftSession.reset(spark)
     }
-    def json(m: Iterable[(String, String)]): String =
-      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      json(gates.map(g => g.name -> g.oracle)))
-    Files.writeString(Paths.get(s"$outDir/errors.json"), json(errors))
+      Json.strings(gates.map(g => g.name -> g.oracle)))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), Json.strings(errors))
     errors.toMap
   }
-
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in an oracle SQL string would otherwise make json.load
-  // of the manifest fail and silently skip every comparison.
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

@@ -68,7 +68,7 @@ object Behavior {
   }
 
   /** Gated w7: customer spend quartiles — SQL-ntile(4) semantics
-    * computed scale-safe: [[Ranks.withGlobalRowNumber]] range-
+    * computed scale-safe: [[Ranks.scan]] range-
     * partitions the per-customer frame, ranks each range band in
     * parallel, and the quartile is closed-form arithmetic over
     * (global rank, total count). No single-partition WindowExec
@@ -81,8 +81,8 @@ object Behavior {
       .groupBy(col("o_custkey"))
       .agg(Analytics.exactSum(col("o_totalprice"), 30, 2).as("spend"))
     val np = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val (ranked, n) = Ranks.withGlobalRowNumber(spend,
-      Seq(col("spend").desc, col("o_custkey").asc), np, "_rn")
+    val (ranked, n, _) = Ranks.scan(spend,
+      Seq(col("spend").desc, col("o_custkey").asc), np, Some("_rn"), Nil)
     ranked
       .select(col("o_custkey"), col("spend"),
         Ranks.ntileOfRank(col("_rn"), n, 4).as("quartile"))
@@ -116,9 +116,9 @@ object Behavior {
     // includes the unique custkey, so the reductions are bit-identical
     // to the window forms. Segment offsets/sizes come from a
     // 5-row aggregate joined back broadcast.
-    val (ranked, _) = Ranks.withGlobalRowNumber(spend,
+    val (ranked, _, _) = Ranks.scan(spend,
       Seq(col("c_mktsegment").asc, col("spend").asc, col("o_custkey").asc),
-      np, "_rn")
+      np, Some("_rn"), Nil)
     val segBounds = broadcast(ranked.groupBy(col("c_mktsegment").as("_seg"))
       .agg(min(col("_rn")).as("_seg_off"), count(lit(1)).as("_seg_n")))
     // The decile ranks by (spend DESC, custkey ASC) — recover that rank
@@ -126,9 +126,9 @@ object Behavior {
     // global frame, desc-rank = N - asc-rank(spend asc, custkey desc).
     // custkey sorts the WRONG way inside equal spends for that identity,
     // so rank the decile independently (same machinery, second pass).
-    val (ranked2, n) = Ranks.withGlobalRowNumber(
+    val (ranked2, n, _) = Ranks.scan(
       ranked.join(segBounds, col("c_mktsegment") === col("_seg")),
-      Seq(col("spend").desc, col("o_custkey").asc), np, "_grn")
+      Seq(col("spend").desc, col("o_custkey").asc), np, Some("_grn"), Nil)
     val segRk = (col("_rn") - col("_seg_off") + 1).cast("double")
     val segN = col("_seg_n").cast("double")
     ranked2.select(col("o_custkey"), col("c_mktsegment"), col("spend"),
@@ -339,7 +339,7 @@ object Behavior {
     * quartile codes per customer, then segment-level sizes and
     * DECIMAL-exact mean spend. The classic lifecycle-marketing
     * bucketing. Each quartile code is SQL-ntile(4) semantics computed
-    * through [[Ranks.withGlobalRowNumber]] (range-partitioned exact
+    * through [[Ranks.scan]] (range-partitioned exact
     * rank + closed-form bucket) — three parallel range sorts instead
     * of three single-partition global windows, so the plan holds when
     * the customer frame outgrows one sort task.
@@ -352,12 +352,12 @@ object Behavior {
         sum(col("o_totalprice").cast("decimal(30,2)")).cast("double")
           .as("monetary"))
     val np = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val (r1, n) = Ranks.withGlobalRowNumber(m,
-      Seq(col("last_order").desc, col("c").asc), np, "_rrn")
-    val (r2, _) = Ranks.withGlobalRowNumber(r1,
-      Seq(col("freq").desc, col("c").asc), np, "_frn")
-    val (r3, _) = Ranks.withGlobalRowNumber(r2,
-      Seq(col("monetary").desc, col("c").asc), np, "_mrn")
+    val (r1, n, _) = Ranks.scan(m,
+      Seq(col("last_order").desc, col("c").asc), np, Some("_rrn"), Nil)
+    val (r2, _, _) = Ranks.scan(r1,
+      Seq(col("freq").desc, col("c").asc), np, Some("_frn"), Nil)
+    val (r3, _, _) = Ranks.scan(r2,
+      Seq(col("monetary").desc, col("c").asc), np, Some("_mrn"), Nil)
     val q = r3
       .withColumn("r_q", Ranks.ntileOfRank(col("_rrn"), n, 4))
       .withColumn("f_q", Ranks.ntileOfRank(col("_frn"), n, 4))
@@ -558,7 +558,7 @@ object Behavior {
     * event. The fact table collapses to ONE ROW PER USER in a single
     * user-keyed aggregation, then to the distinct-duration life table
     * (hour grain — bounded by the observation window, not the corpus);
-    * at-risk counts come from [[Ranks.withExclusivePrefixSum]] over
+    * at-risk counts come from [[Ranks.scan]]'s prefix sum over
     * that bounded table, and the product-limit estimate folds as
     * exp(Σ ln(1 − d/n)) under an hour-ordered cumulative window whose
     * frame is the OBSERVATION-WINDOW-bounded life table (constant
@@ -584,17 +584,12 @@ object Behavior {
     val life = perUser.groupBy(col("dur_h"))
       .agg(sum(when(col("ev"), 1L).otherwise(0L)).as("d_events"),
         sum(when(col("ev"), 0L).otherwise(1L)).as("c_censored"))
-    val withCum = Ranks.withExclusivePrefixSum(
-      life, Seq(col("dur_h")), col("d_events") + col("c_censored"),
-      life.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt,
-      "left_before")
-    // Grand total from the frame the prefix-sum helper just persisted
-    // (cache hit) — aggregating `life` would re-run the events scan.
-    val total = withCum
-      .agg(sum(col("d_events") + col("c_censored")).as("n_total"))
-    val atRisk = withCum.crossJoin(broadcast(total))
+    val (withCum, _, Seq(total)) = Ranks.scan(life, Seq(col("dur_h")),
+      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt, None,
+      Seq((col("d_events") + col("c_censored")) -> "left_before"))
+    val atRisk = withCum
       .select(col("dur_h"), col("d_events"), col("c_censored"),
-        (col("n_total") - col("left_before")).as("n_risk"))
+        (lit(total) - col("left_before")).as("n_risk"))
     // Bounded-frame cumulative window (life table ≤ observation hours):
     // constant non-foldable partition key keeps the warning channel
     // clean and makes a future unbounded reuse fail loudly.

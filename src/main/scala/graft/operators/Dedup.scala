@@ -125,7 +125,57 @@ object Dedup {
     jaccardPairsFrom(docWords(spark, dir), threshold, dfCap)
 
   /** [[jaccardPairs]] over an explicit (doc_id, ws: array<string>)
-    * frame — the seam the hot-shingle spec drives synthetically.
+    * frame — the seam the hot-shingle spec drives synthetically. The
+    * candidate pairs and their exact overlaps come from
+    * [[sharedShingleCounts]].
+    */
+  def jaccardPairsFrom(docWords: DataFrame,
+                       threshold: Double = 0.5, dfCap: Int = 1000): DataFrame = {
+    val (common, sizes) = sharedShingleCounts(docWords
+      .select(col("doc_id"), explode(shinglesFromWords(col("ws"))).as("shingle")), dfCap)
+    common
+      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
+      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
+      .select(col("doc_a"), col("doc_b"), round(col("common").cast("double")
+        / (col("sz_a") + col("sz_b") - col("common")), 6).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+      .orderBy(col("doc_a"), col("doc_b"))
+  }
+
+  /** Gated dd13: CONTAINMENT near-dup pairs — the asymmetric measure
+    * C(A→B) = |A∩B| / |A| that catches "document A is (mostly) inside
+    * document B": quote expansions, boilerplate-wrapped reposts,
+    * trailing-append duplicates. Jaccard misses these when B is much
+    * longer than A (the union swamps the overlap); containment is the
+    * standard complement every serious dedup stack runs alongside it.
+    *
+    * Same scale machinery as [[jaccardPairsFrom]] over word 5-grams
+    * ([[sharedShingleCounts]]). The shared count is symmetric, so each
+    * unordered candidate pair is counted once and then emitted in both
+    * directions, (a, b) and (b, a) — the ordered pairs a `=!=`
+    * self-join would give, for half its pairs. Ratio of exact integers
+    * → oracle hash-checkable.
+    */
+  def containmentPairs(spark: SparkSession, dir: String,
+                       n: Int = 5, threshold: Double = 0.5,
+                       dfCap: Int = 1000): DataFrame = {
+    val (common, sizes) = sharedShingleCounts(docWords(spark, dir)
+      .select(col("doc_id"), explode(shinglesFromWords(col("ws"), n)).as("shingle")), dfCap)
+    common.select(inline(array(struct(col("doc_a"), col("doc_b"), col("common")),
+        struct(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"), col("common")))))
+      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
+      .select(col("doc_a"), col("doc_b"),
+        round(col("common").cast("double") / col("sz_a"), 6).as("containment"))
+      .filter(col("containment") >= threshold)
+      .orderBy(col("doc_a"), col("doc_b"))
+  }
+
+  /** The exact shared-shingle count of every df-capped candidate pair,
+    * from (doc_id, shingle) postings with distinct shingles per doc:
+    * (doc_a, doc_b, common), one row per unordered pair
+    * (`doc_a < doc_b`) that shares at least one shingle of
+    * df ∈ [2, dfCap], with `common` = |A∩B| over the FULL shingle
+    * sets; and (doc_id, sz), each doc's set size.
     *
     * Plan shape: df is a MAP-SIDE-COMBINABLE `groupBy(shingle).count()`
     * joined back to the postings — NOT a count window. A count window
@@ -149,21 +199,20 @@ object Dedup {
     * side is empty and the correction costs nothing (measured: the
     * full-postings confirm was 16 s at sf0.1; this shape restores the
     * round-2 2 s while keeping emitted values exact).
+    *
+    * The postings and the df counts stay cached: the returned frame
+    * reads them (see the caller contract in the object header).
     */
-  def jaccardPairsFrom(docWords: DataFrame,
-                       threshold: Double = 0.5, dfCap: Int = 1000): DataFrame = {
-    val sh = docWords
-      .select(col("doc_id"), explode(shinglesFromWords(col("ws"))).as("shingle"))
-      .cache()
+  private def sharedShingleCounts(postings: DataFrame,
+                                  dfCap: Int): (DataFrame, DataFrame) = {
+    val sh = postings.cache()
     val dfCounts = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df")).cache()
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val hotShingles = dfCounts.filter(col("df") > dfCap).select(col("shingle"))
     val capped = sh.join(
-        dfCounts.filter(col("df") >= 2 && col("df") <= dfCap).select(col("shingle")),
-        Seq("shingle"))
-      .select(col("doc_id"), col("shingle"))
+      dfCounts.filter(col("df") >= 2 && col("df") <= dfCap).select(col("shingle")),
+      Seq("shingle"))
     val hot = sh.join(broadcast(hotShingles), Seq("shingle"))
-      .select(col("doc_id"), col("shingle"))
     // Candidate generation + capped-space intersection counts in one join.
     val cappedCommon = capped.as("a").join(capped.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
@@ -187,71 +236,7 @@ object Dedup {
         .select(col("doc_a"), col("doc_b"),
           (col("capped_common") + coalesce(col("hot_common"), lit(0L))).as("common"))
     }
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-      .withColumn("jaccard",
-        round(col("common").cast("double")
-          / (col("sz_a") + col("sz_b") - col("common")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** Gated dd13: CONTAINMENT near-dup pairs — the asymmetric measure
-    * C(A→B) = |A∩B| / |A| that catches "document A is (mostly) inside
-    * document B": quote expansions, boilerplate-wrapped reposts,
-    * trailing-append duplicates. Jaccard misses these when B is much
-    * longer than A (the union swamps the overlap); containment is the
-    * standard complement every serious dedup stack runs alongside it.
-    *
-    * Same scale machinery as [[jaccardPairsFrom]] — map-side-combined
-    * per-shingle df counts joined back to the 5-gram postings (see the
-    * hot-shingle rationale there), [2, dfCap] candidate generation,
-    * exact intersection from capped counts + hot-shingle correction
-    * (df=1 shingles cannot be shared, so the sum IS the full
-    * intersection) — but over ORDERED pairs, since containment is
-    * directional. Ratio of exact integers → oracle hash-checkable.
-    */
-  def containmentPairs(spark: SparkSession, dir: String,
-                       n: Int = 5, threshold: Double = 0.5,
-                       dfCap: Int = 1000): DataFrame = {
-    val sh = docWords(spark, dir)
-      .select(col("doc_id"), explode(shinglesFromWords(col("ws"), n)).as("shingle"))
-      .cache()
-    val dfCounts = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df")).cache()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val hotShingles = dfCounts.filter(col("df") > dfCap).select(col("shingle"))
-    val capped = sh.join(
-        dfCounts.filter(col("df") >= 2 && col("df") <= dfCap).select(col("shingle")),
-        Seq("shingle"))
-      .select(col("doc_id"), col("shingle"))
-    val hot = sh.join(broadcast(hotShingles), Seq("shingle"))
-      .select(col("doc_id"), col("shingle"))
-    val cappedCommon = capped.as("a").join(capped.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") =!= col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("capped_common"))
-    val inter = if (hotShingles.isEmpty) {
-      cappedCommon.withColumnRenamed("capped_common", "common")
-    } else {
-      val hotCommon = cappedCommon.select(col("doc_a"), col("doc_b"))
-        .join(hot.select(col("doc_id").as("doc_a"), col("shingle")), Seq("doc_a"))
-        .join(hot.select(col("doc_id").as("doc_b"), col("shingle")), Seq("doc_b", "shingle"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(count(lit(1)).as("hot_common"))
-      cappedCommon
-        .join(hotCommon, Seq("doc_a", "doc_b"), "left")
-        .select(col("doc_a"), col("doc_b"),
-          (col("capped_common") + coalesce(col("hot_common"), lit(0L))).as("common"))
-    }
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-      .withColumn("containment",
-        round(col("common").cast("double") / col("sz_a"), 6))
-      .filter(col("containment") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("containment"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    (inter, sizes)
   }
 
   /** Gated dd14: COVERAGE AUDIT for the df-capped candidate

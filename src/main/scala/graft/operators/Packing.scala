@@ -18,7 +18,7 @@ import graft.Tables
   *   1. docs are grouped into ordered blocks (`doc_id div blockSize`);
   *      per-block token sums aggregate map-side (one shuffle, fine keys);
   *   2. block offsets are an exact distributed exclusive prefix sum
-  *      over the BLOCK table via [[Ranks.withExclusivePrefixSum]]
+  *      over the BLOCK table via [[Ranks.scan]]
   *      (range exchange → per-partition sums → #partitions-value
   *      driver fold → broadcast offsets) — no single-partition window
   *      anywhere, at any scale;
@@ -41,11 +41,11 @@ object Packing {
     // Block offsets via the distributed two-level scan: a global
     // `sum over (order by block)` window would put the whole block
     // table (docs/blockSize rows — still corpus-scale at 100 TB) in
-    // ONE partition. Ranks.withExclusivePrefixSum range-partitions it
+    // ONE partition. Ranks.scan range-partitions it
     // instead; block is unique in this table, so the order is total.
-    val blockOffsets = Ranks.withExclusivePrefixSum(
+    val blockOffsets = Ranks.scan(
         docs.groupBy(col("block")).agg(sum(col("n_tokens")).as("bsum")),
-        Seq(col("block")), col("bsum"), 32, "boff")
+        Seq(col("block")), 32, None, Seq(col("bsum") -> "boff"))._1
       .select(col("block"), col("boff"))
     val intra = Window.partitionBy(col("block")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)

@@ -879,7 +879,7 @@ object Quality {
     * finding: geography does not predict spend tier).
     *
     * Scale shape: the quartile labeling uses the exact distributed
-    * rank machinery ([[Ranks.withGlobalRowNumber]] + closed-form
+    * rank machinery ([[Ranks.scan]] + closed-form
     * ntile — no single-partition window), the contingency table is a
     * (clusters×4)-keyed count, and every pair count C(n,2) stays
     * BIGINT until the final chance-correction ratio: the pair algebra
@@ -890,8 +890,8 @@ object Quality {
     val np = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val cust = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
-    val (ranked, n) = Ranks.withGlobalRowNumber(cust,
-      Seq(col("c_acctbal").asc, col("c_custkey").asc), np, "_rn")
+    val (ranked, n, _) = Ranks.scan(cust,
+      Seq(col("c_acctbal").asc, col("c_custkey").asc), np, Some("_rn"), Nil)
     val labeled = ranked.withColumn("q", Ranks.ntileOfRank(col("_rn"), n, 4))
     val (sc, sa, sb) = Pins.scope { p =>
       val cells = p(labeled.groupBy(col("c_nationkey"), col("q"))

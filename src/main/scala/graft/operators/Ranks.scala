@@ -1,26 +1,30 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
-/** Exact distributed ranking over a total order — the scale-safe
-  * replacement for `row_number()/ntile(k)` over an un-partitioned
-  * `Window.orderBy(...)`, which Spark plans as a SINGLE-partition
-  * WindowExec (every row through one sort task: the classic
-  * scale-killer once the frame outgrows one executor).
+/** Exact distributed ranks and exclusive prefix sums over a total
+  * order: the scale-safe replacement for `row_number()` or a running
+  * `sum(...)` over an un-partitioned `Window.orderBy(...)`, which
+  * Spark plans as a SINGLE-partition WindowExec (every row through one
+  * sort task, the classic scale-killer once the frame outgrows one
+  * executor).
   *
-  * Shape: `repartitionByRange` on the sort key (range exchange, bounds
-  * from a reservoir sample), a per-partition `row_number` (parallel
-  * local sorts — range partition p holds a contiguous rank band), and
-  * a per-partition row-count prefix sum collected on the driver
-  * (#partitions values — the same bounded control-plane transfer as
-  * the BSP round counters). `globalRank = localRank + offset(p)` is
-  * then exactly the rank the global window would produce, because the
-  * range partitioner assigns every row of a lower key band to a lower
-  * partition id. The order must be TOTAL (add a unique tiebreak
-  * column); equal keys never straddle a range boundary, but a
-  * non-total order would make ranks within ties partition-dependent.
+  * [[scan]] is the one kernel. `repartitionByRange` on the order key
+  * puts a contiguous band of the order in each partition, because the
+  * range partitioner gives every row of a lower key band a lower
+  * partition id. One collect brings each partition's row count and
+  * value sums to the driver (#partitions rows, the same bounded
+  * control-plane transfer as the BSP round counters); their running
+  * totals are broadcast back as offsets, and one window per partition
+  * finishes the rank and the sums in parallel. The order must be
+  * TOTAL (add a unique tiebreak column): equal keys never straddle a
+  * range boundary, but a non-total order would make ranks and running
+  * sums within ties partition-dependent.
   *
   * `ntile` buckets then follow arithmetically from (rank, total):
   * SQL ntile(k) gives the first `n % k` buckets `n/k + 1` rows and the
@@ -28,182 +32,68 @@ import org.apache.spark.sql.functions._
   */
 object Ranks {
 
-  /** Range-partitioned frames persisted by the helpers below, tracked
-    * so library callers (outside the bench/verify harness, which
-    * unpersists all persistent RDDs between gates) can release them
-    * deterministically with [[releaseAll]] once results are
-    * materialized — chained callers like rfmSegments otherwise leave
-    * three cached exchanges behind per invocation.
+  /** Range-partitioned frames persisted by [[scan]], tracked so library
+    * callers (outside the bench/verify harness, which unpersists all
+    * persistent RDDs between gates) can release them deterministically
+    * with [[releaseAll]] once results are materialized — chained
+    * callers like rfmSegments otherwise leave three cached exchanges
+    * behind per invocation.
     */
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
-  /** Unpersists every frame cached by [[withGlobalRowNumber]] /
-    * [[withExclusivePrefixSum]] since the last call. Safe at any time
-    * after the derived results are materialized (and still CORRECT
-    * before — the range exchange recomputes deterministically, it just
-    * costs a second scan).
+  /** Unpersists every frame cached by [[scan]] since the last call.
+    * Safe at any time after the derived results are materialized (and
+    * still CORRECT before — the range exchange recomputes
+    * deterministically, it just costs a second scan).
     */
   def releaseAll(): Unit = {
     var df = live.poll()
     while (df != null) { df.unpersist(blocking = false); df = live.poll() }
   }
 
-  /** Appends exact global `row_number` (1-based, as `rnCol`, LongType)
-    * over `order` to `df`; returns the ranked frame and the total row
-    * count (one extra bounded action). The returned frame is persisted
-    * range-partitioned data — the bench/verify harness unpersists
-    * between queries; library callers call [[releaseAll]] when done.
+  /** Appends to `df`, over the total order `order` and in one range
+    * exchange into `max(np, 1)` partitions:
+    *  - `rank` (if given): the exact global `row_number`, 1-based;
+    *  - for each `(value, name)` of `sums`: the exact EXCLUSIVE prefix
+    *    sum of `value` cast to long, with nulls counted as 0 (the sum
+    *    of the rows before this one, 0 on the first row).
+    * Every appended column is a non-null LongType, after `df`'s columns
+    * in the order given. Returns the frame, its row count and each
+    * sum's grand total. The range-partitioned frame is persisted — the
+    * bench/verify harness unpersists between queries; library callers
+    * call [[releaseAll]] when done.
     */
-  def withGlobalRowNumber(df: DataFrame, order: Seq[Column], np: Int,
-                          rnCol: String): (DataFrame, Long) = {
-    val parted = df.repartitionByRange(math.max(np, 1), order: _*)
-      .withColumn("_rk_pid", spark_partition_id())
-      .persist()
-    live.add(parted)
-    val sizes = parted.groupBy(col("_rk_pid"))
-      .agg(count(lit(1)).as("_rk_n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val total = sizes.values.sum
-    val maxPid = if (sizes.isEmpty) 0 else sizes.keys.max + 1
-    val offsets = (0 until maxPid)
-      .scanLeft(0L)((acc, p) => acc + sizes.getOrElse(p, 0L))
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offDf = broadcast(
-      (0 until maxPid).map(p => (p, offsets(p))).toDF("_rk_pid", "_rk_off"))
-    val w = Window.partitionBy(col("_rk_pid")).orderBy(order: _*)
-    val ranked = parted.join(offDf, "_rk_pid")
-      .withColumn(rnCol, (row_number().over(w) + col("_rk_off")).cast("long"))
-      .drop("_rk_pid", "_rk_off")
-    (ranked, total)
-  }
-
-  /** Appends the exact EXCLUSIVE prefix sum of `value` over the total
-    * order `order` (as `outCol`, LongType): the distributed two-level
-    * scan — range exchange on the order key, per-partition sums
-    * reduced on the driver (#np values, the same bounded
-    * control-plane transfer as [[withGlobalRowNumber]]'s counts),
-    * partition offsets broadcast back, and a per-partition window
-    * completes the scan in parallel. Replaces the single-partition
-    * `sum(...).over(Window.orderBy(...))` plan, which funnels the
-    * whole frame through one sort task. `order` must be total (unique
-    * key) so the per-partition window order is deterministic.
-    */
-  def withExclusivePrefixSum(df: DataFrame, order: Seq[Column], value: Column,
-                             np: Int, outCol: String): DataFrame = {
-    val parted = df.repartitionByRange(math.max(np, 1), order: _*)
-      .withColumn("_ps_pid", spark_partition_id())
-      .withColumn("_ps_v", value.cast("long"))
-      .persist()
-    live.add(parted)
-    val sums = parted.groupBy(col("_ps_pid"))
-      .agg(sum(col("_ps_v")).as("_ps_s"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val maxPid = if (sums.isEmpty) 0 else sums.keys.max + 1
-    val offsets = (0 until maxPid)
-      .scanLeft(0L)((acc, p) => acc + sums.getOrElse(p, 0L))
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offDf = broadcast(
-      (0 until maxPid).map(p => (p, offsets(p))).toDF("_ps_pid", "_ps_off"))
-    val w = Window.partitionBy(col("_ps_pid")).orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    parted.join(offDf, "_ps_pid")
-      .withColumn(outCol,
-        coalesce(sum(col("_ps_v")).over(w), lit(0L)) + col("_ps_off"))
-      .drop("_ps_pid", "_ps_off", "_ps_v")
-  }
-
-  /** [[withGlobalRowNumber]] and [[withExclusivePrefixSum]] FUSED over
-    * the same total order: ONE range exchange, one control-plane
-    * collect of per-partition (count, sum), and one per-partition
-    * window pass computing both readouts — for callers like sprt1 that
-    * need rank AND running sum of the same walk, this halves the
-    * global exchanges and removes the re-join on the key entirely.
-    * Returns (frame with `rnCol` and exclusive-prefix `psCol`, total
-    * row count).
-    */
-  def withRowNumberAndPrefixSum(df: DataFrame, order: Seq[Column],
-                                value: Column, np: Int, rnCol: String,
-                                psCol: String): (DataFrame, Long) = {
-    val parted = df.repartitionByRange(math.max(np, 1), order: _*)
-      .withColumn("_rp_pid", spark_partition_id())
-      .withColumn("_rp_v", value.cast("long"))
-      .persist()
-    live.add(parted)
-    val stats = parted.groupBy(col("_rp_pid"))
-      .agg(count(lit(1)).as("_n"),
-        coalesce(sum(col("_rp_v")), lit(0L)).as("_s"))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val total = stats.values.map(_._1).sum
-    val maxPid = if (stats.isEmpty) 0 else stats.keys.max + 1
-    def scan(pick: ((Long, Long)) => Long) = (0 until maxPid)
-      .scanLeft(0L)((acc, p) => acc + pick(stats.getOrElse(p, (0L, 0L))))
-    val (rnOff, psOff) = (scan(_._1), scan(_._2))
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offDf = broadcast((0 until maxPid)
-      .map(p => (p, rnOff(p), psOff(p))).toDF("_rp_pid", "_rp_rnoff", "_rp_psoff"))
-    val w = Window.partitionBy(col("_rp_pid")).orderBy(order: _*)
-    val wps = w.rowsBetween(Window.unboundedPreceding, -1)
-    val out = parted.join(offDf, "_rp_pid")
-      .withColumn(rnCol, (row_number().over(w) + col("_rp_rnoff")).cast("long"))
-      .withColumn(psCol,
-        coalesce(sum(col("_rp_v")).over(wps), lit(0L)) + col("_rp_psoff"))
-      .drop("_rp_pid", "_rp_rnoff", "_rp_psoff", "_rp_v")
-    (out, total)
-  }
-
-  /** N exclusive prefix sums over the SAME total order in ONE ranged
-    * pass (round 14): callers that need several running sums of one
-    * spine (gini2's cumulative count + cumulative positives, vg1's
-    * vocab + token scans) previously paid one range exchange, one
-    * control-plane collect and one window PER SUM, plus a re-join on
-    * the key to line the sums up again. Fusing them shares the single
-    * range exchange, one per-partition (sum₁..sumₙ) collect, and one
-    * window pass — and the grand totals fall out of the same
-    * control-plane fold for free (`totals`), so callers drop their
-    * separate full-frame total aggregation too. Semantics per sum are
-    * exactly [[withExclusivePrefixSum]]'s.
-    */
-  def withExclusivePrefixSums(df: DataFrame, order: Seq[Column],
-                              values: Seq[(Column, String)],
-                              np: Int): (DataFrame, Seq[Long]) = {
-    val nv = values.length
-    require(nv >= 1, "need at least one value column")
-    val parted0 = df.repartitionByRange(math.max(np, 1), order: _*)
-      .withColumn("_pn_pid", spark_partition_id())
-    val parted = values.zipWithIndex.foldLeft(parted0) {
-      case (acc, ((v, _), i)) => acc.withColumn(s"_pn_v$i", v.cast("long"))
+  def scan(df: DataFrame, order: Seq[Column], np: Int, rank: Option[String],
+           sums: Seq[(Column, String)]): (DataFrame, Long, Seq[Long]) = {
+    val vs = sums.indices.map(i => s"_rk_v$i")
+    val parted = sums.map(_._1).zip(vs).foldLeft(
+        df.repartitionByRange(math.max(np, 1), order: _*)
+          .withColumn("_rk_pid", spark_partition_id())) {
+      case (acc, (v, c)) => acc.withColumn(c, v.cast("long"))
     }.persist()
     live.add(parted)
-    val sums = parted.groupBy(col("_pn_pid"))
-      .agg(coalesce(sum(col("_pn_v0")), lit(0L)).as("_s0"),
-        (1 until nv).map(i =>
-          coalesce(sum(col(s"_pn_v$i")), lit(0L)).as(s"_s$i")): _*)
-      .collect()
-      .map(r => r.getInt(0) -> (0 until nv).map(i => r.getLong(i + 1)))
-      .toMap
-    val maxPid = if (sums.isEmpty) 0 else sums.keys.max + 1
-    val zero = (0 until nv).map(_ => 0L)
-    def scan(i: Int): IndexedSeq[Long] = (0 until maxPid)
-      .scanLeft(0L)((acc, p) => acc + sums.getOrElse(p, zero)(i))
-    val offs: Seq[IndexedSeq[Long]] = (0 until nv).map(scan)
-    val totals: Seq[Long] = (0 until nv).map(i => offs(i)(maxPid))
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offDf = broadcast((0 until maxPid)
-      .map(p => (p, (0 until nv).map(i => offs(i)(p))))
-      .toDF("_pn_pid", "_pn_offs"))
-    val w = Window.partitionBy(col("_pn_pid")).orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val out0 = parted.join(offDf, "_pn_pid")
-    val out = values.zipWithIndex.foldLeft(out0) {
-      case (acc, ((_, name), i)) => acc.withColumn(name,
-        coalesce(sum(col(s"_pn_v$i")).over(w), lit(0L))
-          + col("_pn_offs").getItem(i))
-    }.drop("_pn_pid" +: "_pn_offs" +: (0 until nv).map(i => s"_pn_v$i"): _*)
-    (out, totals)
+    // per partition: its row count, then each value's sum
+    val parts = parted.groupBy(col("_rk_pid"))
+      .agg(count(lit(1)), vs.map(c => coalesce(sum(col(c)), lit(0L))): _*)
+      .collect().map(r => r.getInt(0) -> (1 to vs.length + 1).map(r.getLong)).toMap
+    val zero = IndexedSeq.fill(vs.length + 1)(0L)
+    // offs(p): the totals over the partitions before p; offs.last: the grand totals
+    val offs = (0 until (if (parts.isEmpty) 0 else parts.keys.max + 1))
+      .scanLeft(zero)((acc, p) => acc.zip(parts.getOrElse(p, zero)).map(t => t._1 + t._2))
+    val offCols = ("_rk_n" +: vs).map(_ + "_off")
+    val offDf = broadcast(df.sparkSession.createDataFrame(
+      offs.init.zipWithIndex.map { case (o, p) => Row(p +: o: _*) }.asJava,
+      StructType(StructField("_rk_pid", IntegerType, nullable = false) +:
+        offCols.map(StructField(_, LongType, nullable = false)))))
+    val w = Window.partitionBy(col("_rk_pid")).orderBy(order: _*)
+    val before = w.rowsBetween(Window.unboundedPreceding, -1)
+    val joined = parted.join(offDf, "_rk_pid")
+    val ranked = rank.fold(joined)(rn =>
+      joined.withColumn(rn, (row_number().over(w) + col(offCols.head)).cast("long")))
+    val out = sums.map(_._2).zip(vs).foldLeft(ranked) { case (acc, (name, v)) =>
+      acc.withColumn(name, coalesce(sum(col(v)).over(before), lit(0L)) + col(v + "_off"))
+    }.drop("_rk_pid" +: (vs ++ offCols): _*)
+    (out, offs.last.head, offs.last.tail)
   }
 
   /** A constant-valued but NON-FOLDABLE partition key for windows over

@@ -1914,7 +1914,7 @@ object Relational {
     * capped). Closed form over the rank-ordered frame:
     * G = (2·Σ i·xᵢ − (n+1)·Σx) / (n·Σx), xᵢ ascending.
     *
-    * Scale shape: the rank comes from [[Ranks.withGlobalRowNumber]]
+    * Scale shape: the rank comes from [[Ranks.scan]]
     * (range partition + parallel local sort — no single-partition
     * window), and both sums are DECIMAL-accumulated in one pass over
     * the ranked frame. Products are exact in doubles (rank ≤ 1e9,
@@ -1927,8 +1927,8 @@ object Relational {
       .agg(graft.operators.Analytics.exactSum(col("o_totalprice"), 30, 2)
         .as("x"))
     val np = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val (ranked, n) = graft.operators.Ranks.withGlobalRowNumber(spend,
-      Seq(col("x").asc, col("o_custkey").asc), np, "_rn")
+    val (ranked, n, _) = Ranks.scan(spend,
+      Seq(col("x").asc, col("o_custkey").asc), np, Some("_rn"), Nil)
     def decSum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val nd = lit(n).cast("double")
     ranked
@@ -1982,7 +1982,7 @@ object Relational {
     *
     * Scale shape: intervals → ±1 boundary deltas (2 rows each), one
     * exact distributed prefix sum over the total order (prio, day,
-    * delta, key) ([[Ranks.withExclusivePrefixSum]] — a range exchange
+    * delta, key) ([[Ranks.scan]] — a range exchange
     * plus per-partition scans, never a single-partition window). The
     * per-priority running count needs NO group-offset correction:
     * every group's deltas sum to zero (each +1 has its −1), so the
@@ -2004,9 +2004,9 @@ object Relational {
       .select(col("prio"), col("s").as("day"), lit(1).as("delta"), col("k"))
       .unionByName(iv.select(col("prio"), col("e").as("day"),
         lit(-1).as("delta"), col("k")))
-    val run = Ranks.withExclusivePrefixSum(deltas,
+    val run = Ranks.scan(deltas,
         Seq(col("prio").asc, col("day").asc, col("delta").asc, col("k").asc),
-        col("delta"), np, "excl")
+        np, None, Seq(col("delta") -> "excl"))._1
       .withColumn("run", col("excl") + col("delta"))
     val peak = run.groupBy(col("prio")).agg(max(col("run")).as("peak"))
     run.join(peak, Seq("prio")).filter(col("run") === col("peak"))

@@ -72,7 +72,7 @@ object Stats {
     * nonparametric A/B readout when values are skewed. The scale move:
     * ranks are never materialized per ROW — the fact table collapses
     * to the DISTINCT-VALUE table (cntA, cntB per value), and the
-    * rank-sum folds over it using [[Ranks.withExclusivePrefixSum]]
+    * rank-sum folds over it using [[Ranks.scan]]
     * (range exchange + per-partition scan — no single-partition
     * window however many distinct values exist). The half-rank sum
     * Σ cntA·(2·cumBefore + cnt + 1) stays in exact DECIMAL integers;
@@ -86,10 +86,9 @@ object Stats {
     val g = ev.groupBy(col("value"))
       .agg(sum(when(col("isa"), 1L).otherwise(0L)).as("ca"),
         sum(when(col("isa"), 0L).otherwise(1L)).as("cb"))
-    val withCum = Ranks.withExclusivePrefixSum(
-      g, Seq(col("value")), col("ca") + col("cb"),
-      g.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt,
-      "cum_before")
+    val (withCum, _, _) = Ranks.scan(g, Seq(col("value")),
+      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt, None,
+      Seq((col("ca") + col("cb")) -> "cum_before"))
     val agg = withCum.agg(
       sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
       // Σ ca·(2·cumBefore + ca + cb + 1): twice the mid-rank sum of
@@ -412,7 +411,7 @@ object Stats {
     * the DISTINCT-value count table — min_rank = #smaller + 1,
     * max_rank = #smaller + #equal — so ranks come from an exclusive
     * prefix sum over the distinct-value spine
-    * ([[Ranks.withExclusivePrefixSum]]: range exchange + driver offset
+    * ([[Ranks.scan]]: range exchange + driver offset
     * fold, never a single-partition window), and `2·avgRank =
     * 2·#smaller + #equal + 1` stays a BIGINT. Rows then join their
     * doubled ranks back by value (shuffle join on the value key;
@@ -428,7 +427,7 @@ object Stats {
     // Doubled average rank (BIGINT) per distinct value of `c`.
     def rank2(df: DataFrame, c: String, out: String): DataFrame = {
       val g = df.groupBy(col(c)).agg(count(lit(1)).as("cnt"))
-      Ranks.withExclusivePrefixSum(g, Seq(col(c)), col("cnt"), np, "nless")
+      Ranks.scan(g, Seq(col(c)), np, None, Seq(col("cnt") -> "nless"))._1
         .select(col(c),
           (col("nless") * 2 + col("cnt") + 1).cast("long").as(out))
     }
@@ -466,7 +465,7 @@ object Stats {
     * The k-th ORDER STATISTIC (not an interpolated quantile) is
     * computed scalably: scores collapse to (type, score) counts, a
     * DISTRIBUTED exclusive prefix sum over the total (type, score)
-    * order ([[Ranks.withExclusivePrefixSum]] — range exchange, no
+    * order ([[Ranks.scan]] — range exchange, no
     * single-partition window) gives cumulative counts, and qhat is
     * min{score : within-type cumulative ≥ k}. Medians ride the x3
     * histogram-refinement quantile engine. Everything the hash sees
@@ -491,8 +490,8 @@ object Stats {
         round(abs(col("vc") - medCol)).cast("long").as("sc"))
       val counts = scores.groupBy(col("event_type"), col("sc"))
         .agg(count(lit(1)).as("cnt"))
-      val pre = Ranks.withExclusivePrefixSum(counts,
-        Seq(col("event_type"), col("sc")), col("cnt"), np = 8, outCol = "pref")
+      val (pre, _, _) = Ranks.scan(counts, Seq(col("event_type"), col("sc")),
+        np = 8, None, Seq(col("cnt") -> "pref"))
       val starts = pre.groupBy(col("event_type"))
         .agg(min(col("pref")).as("start"), sum(col("cnt")).as("ncal"))
       val withK = starts.withColumn("kk",
@@ -753,7 +752,7 @@ object Stats {
     * left/right class impurity for the return flag. The scan that
     * looks like "sort everything through one task" runs as: one
     * groupBy to the distinct-value spine, two distributed exclusive
-    * prefix sums ([[Ranks.withExclusivePrefixSum]] — no single-
+    * prefix sums ([[Ranks.scan]] — no single-
     * partition window), per-row impurity arithmetic, and ONE
     * min(struct) reduce for the argmin. Impurities are rounded to
     * 12 dp so the argmin tie-break (then lowest threshold) is
@@ -766,17 +765,10 @@ object Stats {
       when(col("l_returnflag") === "R", 1L).otherwise(0L).as("pos"))
     val g = f.groupBy(col("v"))
       .agg(count(lit(1)).as("cnt"), sum(col("pos")).as("p"))
-    // BOTH running sums in one ranged pass (round 14,
-    // [[Ranks.withExclusivePrefixSums]]): the former two independent
-    // prefix-sum calls re-ranged (and re-aggregated) the spine twice
-    // and re-joined the results on the value key; the grand totals
-    // previously cost a THIRD full aggregation of g — they now fall
-    // out of the shared control-plane fold (identical values: exact
-    // BIGINT sums either way). One lineitem scan + one groupBy + one
-    // range exchange, join-free.
-    val (pre, totals) = Ranks.withExclusivePrefixSums(g, Seq(col("v").asc),
-      Seq(col("cnt") -> "cn_ex", col("p") -> "cp_ex"), np)
-    val (tn, tp) = (totals(0), totals(1))
+    // BOTH running sums and their grand totals in one ranged pass:
+    // one lineitem scan + one groupBy + one range exchange, join-free.
+    val (pre, _, Seq(tn, tp)) = Ranks.scan(g, Seq(col("v").asc), np, None,
+      Seq(col("cnt") -> "cn_ex", col("p") -> "cp_ex"))
     val j = pre
       .select(col("v"), (col("cn_ex") + col("cnt")).as("cn"),
         (col("cp_ex") + col("p")).as("cp"),
@@ -958,11 +950,11 @@ object Stats {
     * no transcendental anywhere in either engine.
     *
     * Scale shape: per-variant prefix sums WITHOUT per-variant
-    * windows — one global [[Ranks]] prefix pass over the total order
-    * (variant, ts, event_id) for ranks and one for success counts,
+    * windows — one global [[Ranks.scan]] over the total order
+    * (variant, ts, event_id) gives ranks and running success counts,
     * then per-variant offsets (a V-row broadcast) subtract out the
     * earlier variants. The per-variant walk that looks inherently
-    * sequential costs two range exchanges and a unique-key join.
+    * sequential costs one range exchange and a V-row broadcast join.
     */
   def sprtGate(spark: SparkSession, dir: String, variants: Int = 4): DataFrame = {
     val np = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
@@ -973,11 +965,10 @@ object Stats {
       (col("user_id") % variants).as("variant"), col("ts"), col("event_id"),
       when(col("event_type") === "purchase", 1L).otherwise(0L).as("succ"))
     val order = Seq(col("variant").asc, col("ts").asc, col("event_id").asc)
-    // Rank and running-success come from ONE fused Ranks pass (one
-    // range exchange, one window) instead of two exchanges re-joined
-    // on event_id — same walk, half the shuffles.
-    val (joined, _) = Ranks.withRowNumberAndPrefixSum(
-      ev, order, col("succ"), np, "_rn", "s_excl")
+    // Rank and running-success of the same walk: one range exchange,
+    // one window.
+    val (joined, _, _) = Ranks.scan(ev, order, np, Some("_rn"),
+      Seq(col("succ") -> "s_excl"))
     // V-row offsets: rows/successes contributed by earlier variants —
     // aggregated off the already-cached range exchange.
     val totals = joined.groupBy(col("variant"))

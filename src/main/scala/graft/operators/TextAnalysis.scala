@@ -481,7 +481,7 @@ object TextAnalysis {
     * per-partition sorts — the writer's partition files ARE the
     * shuffled shards, no single-partition sort anywhere; exact global
     * positions, if a loader needs them, come from the same
-    * [[Ranks.withGlobalRowNumber]] machinery as w7). The gate probes
+    * [[Ranks.scan]] machinery as w7). The gate probes
     * the first k positions of each epoch via per-epoch
     * TakeOrderedAndProject — k-bounded, and any divergence in the
     * permutation hash-fails against the oracle's window rank.
@@ -1261,7 +1261,7 @@ object TextAnalysis {
     * — one groupBy(token).min(rank) shuffle (the only corpus-sized
     * exchange, keyed on token), a rank-keyed count, and an exact
     * distributed prefix sum over the DOC spine
-    * ([[Ranks.withExclusivePrefixSum]], no single-partition window).
+    * ([[Ranks.scan]], no single-partition window).
     * All-integer outputs hash cross-engine with no float discipline.
     */
   def vocabGrowth(spark: SparkSession, dir: String,
@@ -1272,9 +1272,8 @@ object TextAnalysis {
       .select(col("doc_id"), size(col("ws")).as("n_tok"), col("ws"))
     // doc_id is unique; rank = dense position in doc_id order, via the
     // distributed ranking helper (doc spine is corpus-sized too).
-    val (ranked, nDocs) = Ranks.withGlobalRowNumber(
-      docs.select(col("doc_id"), col("n_tok")),
-      Seq(col("doc_id").asc), np, "rnk")
+    val (ranked, nDocs, _) = Ranks.scan(docs.select(col("doc_id"), col("n_tok")),
+      Seq(col("doc_id").asc), np, Some("rnk"), Nil)
     val firstRank = docs
       .select(col("doc_id"), explode(array_distinct(col("ws"))).as("tok"))
       .groupBy(col("tok")).agg(min(col("doc_id")).as("fdoc"))
@@ -1283,12 +1282,9 @@ object TextAnalysis {
       .join(firstRank, ranked("doc_id") === firstRank("fdoc"), "left")
       .select(col("rnk"), col("n_tok"),
         coalesce(col("new_toks"), lit(0L)).as("new_toks"))
-    // Both running sums share one ranged pass (round 14,
-    // [[Ranks.withExclusivePrefixSums]]) — the former chained calls
-    // re-ranged the spine for the token scan.
-    val (withVT, _) = Ranks.withExclusivePrefixSums(spine,
-      Seq(col("rnk").asc),
-      Seq(col("new_toks") -> "v_excl", col("n_tok") -> "t_excl"), np)
+    // Both running sums share one ranged pass.
+    val (withVT, _, _) = Ranks.scan(spine, Seq(col("rnk").asc), np, None,
+      Seq(col("new_toks") -> "v_excl", col("n_tok") -> "t_excl"))
     val step = math.max(1L, nDocs / math.max(points, 1))
     withVT
       .withColumn("vocab", col("v_excl") + col("new_toks"))

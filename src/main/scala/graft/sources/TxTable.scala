@@ -133,7 +133,7 @@ object TxTable {
                                            dvs: Seq[String] = Nil,
                                            anns: Seq[(Int, Ann)] = Nil)
 
-  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val Json = graft.Json.mapper
 
   /** The manifest codec's writer (the reader is [[TxTable]]'s
     * `readManifest`): paths with `/` separators, every annotation in

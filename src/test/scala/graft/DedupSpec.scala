@@ -340,6 +340,33 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("dd13 containment with a hot side equals brute-force ordered containment") {
+    // The sf0.001 5-gram df tops out at 4: dfCap = 2 makes every df-3/4
+    // shingle hot, so a candidate's overlap needs the hot correction.
+    val cap = 2
+    val sets = Tables.documents(spark, sf)
+      .select(col("doc_id"), Dedup.shinglesFromWords(
+        graft.operators.TextAnalysis.words(col("text")), 5).as("sh"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
+    val df = sets.values.toSeq.flatten.groupBy(identity).map { case (k, v) => k -> v.size }
+    assert(df.values.exists(_ > cap), "the hot side is empty")
+    // Candidates: ordered pairs sharing a shingle of df in [2, cap].
+    val cands = sets.toSeq.flatMap { case (d, sh) => sh.filter(df(_) <= cap).map(_ -> d) }
+      .groupBy(_._1).values.flatMap { ps =>
+        for ((_, a) <- ps; (_, b) <- ps if a != b) yield (a, b) }.toSet
+    val brute = cands.map { case (a, b) =>
+      val common = (sets(a) intersect sets(b)).size
+      (a, b, BigDecimal(common.toDouble / sets(a).size)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    }
+    assert(cands.exists { case (a, b) =>
+        (sets(a) intersect sets(b)).exists(df(_) > cap) },
+      "no candidate pair shares a hot shingle")
+    val got = Dedup.containmentPairs(spark, sf, threshold = 0.0, dfCap = cap)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(got == brute, s"${(got diff brute).take(5)} vs ${(brute diff got).take(5)}")
+  }
+
   test("s3 leakage-safe split: clusters never straddle a split boundary") {
     val rows = Dedup.leakageSafeSplit(spark, sf).collect()
     assert(rows.length == Tables.documents(spark, sf).count().toInt)

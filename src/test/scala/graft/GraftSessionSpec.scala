@@ -37,7 +37,7 @@ class GraftSessionSpec extends SparkSpec {
     persists("persist")(df.persist().count())
     persists("localCheckpoint")(df.filter(col("v") > 2).localCheckpoint().count())
     persists("withGlobalRowNumber") {
-      Ranks.withGlobalRowNumber(df, Seq(col("id").asc), 4, "rn")._1.count()
+      Ranks.scan(df, Seq(col("id").asc), 4, Some("rn"), Nil)._1.count()
     }
     GraftSession.reset(spark)
     // unpersist(blocking = false) is asynchronous; poll briefly.
